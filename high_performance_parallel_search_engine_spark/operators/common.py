@@ -45,11 +45,6 @@ def with_global_seq_counted(df: DataFrame, order_cols: list[str],
     return out, total
 
 
-def with_global_seq(df: DataFrame, order_cols: list[str],
-                    col_name: str = "seq", offset: int = 0) -> DataFrame:
-    return with_global_seq_counted(df, order_cols, col_name, offset)[0]
-
-
 def seen_anti_join(candidates: DataFrame, seen: DataFrame,
                    key: str = "url") -> DataFrame:
     """URL-seen dedup: exact left-anti join, bloom-accelerated (north_rule).

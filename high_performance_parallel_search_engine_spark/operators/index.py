@@ -143,6 +143,10 @@ def merge_postings(old_postings: DataFrame, delta_docs: DataFrame,
 def corpus_stats(docs: DataFrame, **kw) -> DataFrame:
     """One row: total_tokens, unique_terms, total_docs, avg_dl.
 
+    On a corpus with no kept tokens total_tokens is 0, as the oracle's
+    COUNT(*) is (Spark's sum over no rows is NULL), and avg_dl stays NULL
+    (NULL / 0 is NULL; a coalesced 0 / 0 raises under ANSI mode).
+
     Two distinct aggregates in one agg make Spark Expand every input row
     once per distinct group (3x the token stream through the exchange).
     Pre-aggregating to (term, doc_id, tf) first - a partial-aggregated
@@ -153,7 +157,7 @@ def corpus_stats(docs: DataFrame, **kw) -> DataFrame:
     g = doc_tokens(docs, **kw).groupBy("term", "doc_id") \
         .agg(F.count("*").alias("tf"))
     return g.agg(
-        F.sum("tf").alias("total_tokens"),
+        F.coalesce(F.sum("tf"), F.lit(0)).alias("total_tokens"),
         F.countDistinct("term").alias("unique_terms"),
         F.countDistinct("doc_id").alias("total_docs"),
         (F.sum("tf") / F.countDistinct("doc_id")).alias("avg_dl"),

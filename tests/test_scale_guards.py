@@ -185,8 +185,9 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
 
     from high_performance_parallel_search_engine_spark.operators.crawl import (
         URL_PUSHDOWN_MAX,
+        CrawlConfig,
         CrawlState,
-        _pushdown_small_frontier,
+        _prune_and_pushdown,
     )
     from high_performance_parallel_search_engine_spark.sources.synth import (
         build_corpus_df,
@@ -209,8 +210,10 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
 
     fr = spark.createDataFrame([(page_url(0, i),) for i in range(3)],
                                "url string")
-    small, applied = _pushdown_small_frontier(pages, fr,
-                                              CrawlState(next_frontier_rows=3))
+    # pages_buckets=None: the url pushdown alone, no bucket pruning
+    small, applied, _ = _prune_and_pushdown(
+        pages, fr, CrawlConfig(pages_buckets=None),
+        CrawlState(next_frontier_rows=3))
     assert applied
     plan = small._jdf.queryExecution().executedPlan().toString()
     scan_lines = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
@@ -237,8 +240,11 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
     n_mid = URL_PUSHDOWN_CHUNK + 7
     fr_mid = spark.createDataFrame(
         [(page_url(0, i),) for i in range(n_mid)], "url string")
-    mid, _ = _pushdown_small_frontier(pages, fr_mid,
-                                      CrawlState(next_frontier_rows=n_mid))
+    # url_pushdown_max=None: the JVM-safe max (the "auto" default resolves
+    # to one chunk on this small-file table and would skip a 519-url list)
+    wide = CrawlConfig(pages_buckets=None, url_pushdown_max=None)
+    mid, _, _ = _prune_and_pushdown(pages, fr_mid, wide,
+                                    CrawlState(next_frontier_rows=n_mid))
     mid_plan = mid._jdf.queryExecution().executedPlan().toString()
     mid_scans = [ln for ln in mid_plan.splitlines() if "PushedFilters" in ln]
     assert len(mid_scans) == 2 and all("In(url" in ln for ln in mid_scans)
@@ -246,8 +252,8 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
     # the two disjoint chunks must not double-count any of them
     assert mid.count() == mid.select("url").distinct().count()
 
-    big, applied = _pushdown_small_frontier(
-        pages, fr, CrawlState(next_frontier_rows=URL_PUSHDOWN_MAX + 1))
+    big, applied, _ = _prune_and_pushdown(
+        pages, fr, wide, CrawlState(next_frontier_rows=URL_PUSHDOWN_MAX + 1))
     assert big is pages and not applied  # gate skipped - no collect/filter
 
 
@@ -293,17 +299,16 @@ def test_pair_operators_scan_corpus_once(spark, tmp_path):
                 f"{name}: {plan.count(src)} direct scans of {src}"
 
 
-def test_prune_and_pushdown_equals_sequential_gates(spark, tmp_path):
-    """_prune_and_pushdown (one driver job) must keep exactly the pages the
-    standalone bucket-prune + url-pushdown sequence keeps, in all four
-    regimes: both gates active, prune-only (frontier above the pushdown
-    cap), pushdown-only (unbucketed table), neither (big frontier)."""
+def test_prune_and_pushdown_regimes(spark, tmp_path):
+    """_prune_and_pushdown (one driver job) keeps exactly the expected
+    pages in every regime: both narrowings or url pushdown only -> the
+    frontier's urls; bucket pruning only (frontier above the pushdown
+    cap) -> the pages in the frontier's buckets; neither (big frontier)
+    -> all pages. scan_bounded and k_files follow the regime too."""
     from high_performance_parallel_search_engine_spark.operators.crawl import (
         CrawlConfig,
         CrawlState,
         _prune_and_pushdown,
-        _prune_pages_by_bucket,
-        _pushdown_small_frontier,
     )
     from high_performance_parallel_search_engine_spark.sources.synth import (
         build_corpus_df,
@@ -319,46 +324,46 @@ def test_prune_and_pushdown_equals_sequential_gates(spark, tmp_path):
     write_bucketed_pages(df.select("url", "warc_ts", "html", "lang"),
                          str(tmp_path / "p"), n_buckets=8)
     bucketed, nb = read_bucketed_pages(spark, str(tmp_path / "p"))
-    flat = spark.read.parquet(str(tmp_path / "p"))  # has bucket col too
 
     def urls_of(pages):
         return sorted(r["url"] for r in pages.select("url").collect())
 
-    fr = spark.createDataFrame([(page_url(h, i),) for h in range(2)
-                                for i in range(5)], "url string")
+    fr_urls = sorted(page_url(h, i) for h in range(2) for i in range(5))
+    fr = spark.createDataFrame([(u,) for u in fr_urls], "url string")
+    # expected sets from the table's own bucket column, not from the
+    # function's hash: every page, and the pages sharing a frontier bucket
+    rows = bucketed.select("url", "bucket").collect()
+    all_urls = sorted(r["url"] for r in rows)
+    fr_bks = {r["bucket"] for r in rows if r["url"] in set(fr_urls)}
+    bucket_urls = sorted(r["url"] for r in rows if r["bucket"] in fr_bks)
+    assert len(fr_bks) < nb  # the frontier misses buckets: pruning bites
     cases = [
-        # (config, frontier rows, pages table) -> regime
-        (CrawlConfig(pages_buckets=nb), 10, bucketed),     # both gates
-        (CrawlConfig(pages_buckets=nb, url_pushdown_max=4), 10, bucketed),
-        # ^ prune-only: frontier above the pushdown cap
-        (CrawlConfig(pages_buckets=None), 10, bucketed),   # pushdown-only
-        (CrawlConfig(pages_buckets=nb), 10_000, bucketed),  # neither
-        # threshold boundaries (ADVICE r4 #4): gates must agree AT the
-        # boundary, not only inside/outside it
-        (CrawlConfig(pages_buckets=nb), 4 * nb, bucketed),      # n == 4*B
-        (CrawlConfig(pages_buckets=nb), 4 * nb + 1, bucketed),  # just over
-        (CrawlConfig(pages_buckets=nb, url_pushdown_max=10), 10, bucketed),
-        # ^ n == pushdown cap exactly
+        # (config, frontier rows, expected regime: prune, push)
+        (CrawlConfig(pages_buckets=nb), 10, True, True),        # both
+        (CrawlConfig(pages_buckets=nb, url_pushdown_max=4), 10,
+         True, False),          # prune-only: frontier above the pushdown cap
+        (CrawlConfig(pages_buckets=None), 10, False, True),    # push-only
+        (CrawlConfig(pages_buckets=nb), 10_000, False, False),  # neither
+        # threshold boundaries (ADVICE r4 #4): the regime flips exactly
+        # at the boundary, not only inside/outside it
+        (CrawlConfig(pages_buckets=nb), 4 * nb, True, True),    # n == 4*B
+        (CrawlConfig(pages_buckets=nb), 4 * nb + 1, False, True),
+        (CrawlConfig(pages_buckets=nb, url_pushdown_max=10), 10,
+         True, True),           # n == pushdown cap exactly
     ]
-    for cfg, n, pages in cases:
-        st = CrawlState(next_frontier_rows=n)
-        combined, bounded, k_files = _prune_and_pushdown(pages, fr, cfg, st)
-        seq, pruned, kb = _prune_pages_by_bucket(pages, fr, cfg, st)
-        seq, pushed = _pushdown_small_frontier(seq, fr, st,
-                                               cfg.url_pushdown_max)
-        assert urls_of(combined) == urls_of(seq), (cfg.pages_buckets,
-                                                   cfg.url_pushdown_max, n)
-        assert bounded == (pruned or pushed), (cfg.pages_buckets,
-                                               cfg.url_pushdown_max, n)
-        # k_files agrees with the standalone prune's kept-bucket count
-        # when pruning applied; a pushdown-only bounded scan over a
-        # bucketed table reports the full bucket count; unbounded -> None
-        if pruned:
-            assert k_files == kb, (k_files, kb, n)
-        elif pushed and "bucket" in pages.columns and cfg.pages_buckets:
-            assert k_files == cfg.pages_buckets
-        elif not bounded:
-            assert k_files is None
+    for cfg, n, prune, push in cases:
+        got, bounded, k_files = _prune_and_pushdown(
+            bucketed, fr, cfg, CrawlState(next_frontier_rows=n))
+        key = (cfg.pages_buckets, cfg.url_pushdown_max, n)
+        want = fr_urls if push else bucket_urls if prune else all_urls
+        assert urls_of(got) == want, key
+        assert bounded == (prune or push), key
+        # k_files: the kept bucket count when pruning applied; the full
+        # bucket count for a pushdown-only scan of a table configured as
+        # bucketed; None otherwise (unbounded scan, or pages_buckets=None)
+        assert k_files == (len(fr_bks) if prune
+                           else nb if push and cfg.pages_buckets
+                           else None), key
     # the both-gates regime actually filters down to the frontier's pages
     # and reports the scan as bounded (the coalesce-gate contract)
     st = CrawlState(next_frontier_rows=10)
@@ -372,7 +377,7 @@ def test_prune_and_pushdown_equals_sequential_gates(spark, tmp_path):
     full, bounded, k_files = _prune_and_pushdown(bucketed, fr,
                                                  CrawlConfig(pages_buckets=nb),
                                                  st_big)
-    assert not bounded and k_files is None
+    assert full is bucketed and not bounded and k_files is None
 
 
 def test_coalesce_only_when_scan_bounded(spark):
@@ -618,15 +623,21 @@ def test_auto_pushdown_cap_resolution(spark, tmp_path):
     assert C.resolve_pushdown_max(
         pages, C.CrawlConfig(pages_buckets=nb,
                              url_pushdown_max=None)) is None
-    # an unresolved "auto" reaching the gate clamp (config used outside
-    # run_crawl) behaves like the conservative default
-    assert C._pushdown_cap("auto") == C.URL_PUSHDOWN_CHUNK
-    # run_crawl resolves "auto" into the manifests so resumes keep the
-    # regime: drive a 2-round crawl and read the committed config back
-    import json as _json
+    # an unresolved "auto" reaching the scan narrowing (config used outside
+    # run_crawl) behaves like the conservative one-chunk cap
     from high_performance_parallel_search_engine_spark.sources.synth import (
         page_url,
     )
+
+    fr = spark.createDataFrame([(page_url(0, 0),)], "url string")
+    for n, pushed in ((C.URL_PUSHDOWN_CHUNK, True),
+                      (C.URL_PUSHDOWN_CHUNK + 1, False)):
+        _, bounded, _ = C._prune_and_pushdown(
+            flat, fr, C.CrawlConfig(), C.CrawlState(next_frontier_rows=n))
+        assert bounded == pushed, n
+    # run_crawl resolves "auto" into the manifests so resumes keep the
+    # regime: drive a 2-round crawl and read the committed config back
+    import json as _json
 
     wd = str(tmp_path / "wd")
     C.run_crawl(spark, pages, [page_url(0, 0)], wd,
