@@ -19,12 +19,16 @@ validity, cross-round anti-join) already ran distributed.
 
 Two modes:
 
-- exact: single-partition streaming greedy via mapInPandas over candidates
-  sorted by (parent_seq, link_idx). State is one Python set of this round's
-  NEW urls (prior rounds were already removed by the anti-join). Bounded by
-  distinct new URLs per round; at reference parity scale (<=1000 frontier)
-  this is trivially small, and even at 10^8 candidates/round it is a single
-  linear pass over ~50 bytes/row.
+- exact: one single-partition mapInPandas pass that arbitrates AND numbers
+  the next frontier. The round's politeness-deferred rows (old seq order)
+  and its candidates ((parent_seq, link_idx) order) are sorted into one
+  partition; deferred rows pass through, candidates go through the greedy,
+  and every kept row gets `seq` = its position in the serial FIFO queue.
+  State is one Python set of this round's NEW urls (prior rounds were
+  already removed by the anti-join). Bounded by distinct new URLs per
+  round; at reference parity scale (<=1000 frontier) this is trivially
+  small, and even at 10^8 candidates/round it is a single linear pass over
+  ~50 bytes/row.
 - scale: fully distributed two-window approximation - first occurrence per
   url by (parent_seq, link_idx), then per-page rank <= cap over survivors.
   Identical to exact EXCEPT the revival quirk (a url whose first occurrence
@@ -36,21 +40,75 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 MAX_LINKS_PER_PAGE = 20
 
 
-def arbitrate_exact(cands: DataFrame, cap: int = MAX_LINKS_PER_PAGE) -> DataFrame:
-    """cands: (parent_seq, link_idx, url, ...). Returns kept rows."""
+def arbitration_mode(mode: str, count_hint: int,
+                     exact_threshold: int = 5_000_000) -> str:
+    """mode: 'exact' | 'scale' | 'auto' (exact up to `exact_threshold`
+    rows). `count_hint` is the caller's bound on the rows the exact pass
+    would carry (run_round passes pages_ok x a links-per-page bound plus the
+    deferred rows), so the switch costs no count job. Note auto is a
+    *semantics* switch at the threshold: scale mode drops the serial revival
+    quirk (docstring above) - crawls that must be event-exact pin 'exact'."""
+    if mode == "auto":
+        return "exact" if count_hint <= exact_threshold else "scale"
+    if mode in ("exact", "scale"):
+        return mode
+    raise ValueError(mode)
+
+
+def arbitrate_exact(rows: DataFrame, next_seq: int,
+                    cap: int = MAX_LINKS_PER_PAGE,
+                    priority: bool | str = False) -> DataFrame:
+    """The exact greedy plus the next frontier's numbering, in one pass.
+
+    rows: the frontier row columns (url, host, depth, parent_url,
+    base_domain), carried through as they are, plus the sort keys
+    `_src`, `_k1`, `_k2` - (0, old seq, 0) for a deferred row, (1,
+    parent_seq, link_idx) for a candidate - and an int `_score`, the
+    priority policy's input (url_priority, plus url_diversity for
+    'openmp'; unused in FIFO order).
+
+    Deferred rows come first in the queue, in old seq order (bfs.py appends
+    them during the round). Kept candidates follow: streamed in discovery
+    order (FIFO), or buffered and reordered by the north_rule queue (priority
+    desc, host in-degree among the kept children desc, discovery order) or
+    the OpenMP insertion policy (kernel.urls.openmp_insertion_order). Each
+    output row gets `seq` = next_seq + its queue position and `child` =
+    True for kept candidates (the round's url_seen delta)."""
+    from ..kernel.urls import openmp_insertion_order
+
+    cols = [c for c in rows.columns if not c.startswith("_")]
+
+    def numbered(pdf, start, child):
+        import numpy as np
+        import pandas as pd
+
+        out = pd.DataFrame({c: pdf[c].to_numpy() for c in cols})
+        out["seq"] = np.arange(start, start + len(pdf), dtype=np.int64)
+        out["child"] = child
+        return out
+
     def greedy(batches):
         import pandas as pd
 
         seen: set[str] = set()
         cur_page = None
         added = 0
+        seq = next_seq
+        kids = []
         for pdf in batches:
+            src = pdf["_src"].to_numpy()
+            deferred = pdf[src == 0]
+            if len(deferred):
+                yield numbered(deferred, seq, False)
+                seq += len(deferred)
+            cands = pdf[src == 1]
             mask = []
-            for ps, u in zip(pdf["parent_seq"], pdf["url"]):
+            for ps, u in zip(cands["_k1"], cands["url"]):
                 if ps != cur_page:
                     cur_page = ps
                     added = 0
@@ -60,10 +118,29 @@ def arbitrate_exact(cands: DataFrame, cap: int = MAX_LINKS_PER_PAGE) -> DataFram
                 seen.add(u)
                 added += 1
                 mask.append(True)
-            yield pdf[pd.Series(mask, index=pdf.index)]
+            kept = cands[pd.Series(mask, index=cands.index, dtype=bool)]
+            if priority:
+                kids.append(kept)
+            elif len(kept):  # FIFO: kept rows stream out in order
+                yield numbered(kept, seq, True)
+                seq += len(kept)
+        kids = pd.concat(kids, ignore_index=True) if kids else []
+        if not len(kids):
+            return
+        if priority == "openmp":
+            kids = kids.iloc[openmp_insertion_order(
+                list(zip(kids["_score"].astype(int), range(len(kids)))))]
+        elif priority:
+            indeg = kids.groupby("host", dropna=False)["host"].transform("size")
+            kids = (kids.assign(_a=-kids["_score"], _b=-indeg)
+                    .sort_values(["_a", "_b"], kind="stable"))
+        yield numbered(kids, seq, True)
 
-    slim = cands.repartition(1).sortWithinPartitions("parent_seq", "link_idx")
-    return slim.mapInPandas(greedy, schema=cands.schema)
+    schema = StructType([rows.schema[c] for c in cols]
+                        + [StructField("seq", LongType()),
+                           StructField("child", BooleanType())])
+    slim = rows.repartition(1).sortWithinPartitions("_src", "_k1", "_k2")
+    return slim.mapInPandas(greedy, schema=schema)
 
 
 def arbitrate_scale(cands: DataFrame, cap: int = MAX_LINKS_PER_PAGE) -> DataFrame:
@@ -78,61 +155,3 @@ def arbitrate_scale(cands: DataFrame, cap: int = MAX_LINKS_PER_PAGE) -> DataFram
         .where(F.col("_rank") <= cap)
         .drop("_occ", "_rank")
     )
-
-
-def openmp_queue_positions(children: DataFrame,
-                           score_col: str = "_score") -> DataFrame:
-    """OpenMP combined insertion policy (OpenMP Version/src/
-    crawler.c:701-731) over one round's children: returns the input plus a
-    `_qpos` long column = each row's final position in the insertion queue.
-
-    Like arbitrate_exact this is the sequential-greedy idiom: a single
-    linear pass over the round's slim child tuples sorted by discovery
-    order (parent_seq, link_idx), buffered because positions are only known
-    once the queue is complete. Opt-in via CrawlConfig(priority='openmp');
-    the scale modes use pure sort keys instead."""
-    from ..kernel.urls import openmp_insertion_order
-
-    def assign(batches):
-        import pandas as pd
-
-        frames = [f for f in batches]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        order = openmp_insertion_order(
-            list(zip((int(s) for s in pdf[score_col]), range(len(pdf)))))
-        pos = [0] * len(pdf)
-        for qpos, idx in enumerate(order):
-            pos[idx] = qpos
-        pdf["_qpos"] = pos
-        yield pdf
-
-    from pyspark.sql.types import LongType, StructField, StructType
-    schema = StructType(list(children.schema.fields)
-                        + [StructField("_qpos", LongType())])
-    slim = children.repartition(1).sortWithinPartitions(
-        "parent_seq", "link_idx")
-    return slim.mapInPandas(assign, schema=schema)
-
-
-def arbitrate(cands: DataFrame, cap: int = MAX_LINKS_PER_PAGE,
-              mode: str = "exact", exact_threshold: int = 5_000_000,
-              count_hint: int | None = None) -> DataFrame:
-    """mode: 'exact' | 'scale' | 'auto' (exact below threshold rows).
-
-    auto uses count_hint when the caller already knows the approximate
-    candidate volume (run_round passes pages_ok x a links-per-page bound) so
-    the switch costs no extra job; without a hint it counts cands (one pass
-    over slim tuples). Note auto is a *semantics* switch at the threshold:
-    scale mode drops the serial revival quirk (docstring above) - crawls that
-    must be event-exact pin mode='exact'.
-    """
-    if mode == "auto":
-        n = count_hint if count_hint is not None else cands.count()
-        mode = "exact" if n <= exact_threshold else "scale"
-    if mode == "exact":
-        return arbitrate_exact(cands, cap)
-    if mode == "scale":
-        return arbitrate_scale(cands, cap)
-    raise ValueError(mode)

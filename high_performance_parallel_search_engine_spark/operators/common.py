@@ -47,21 +47,15 @@ def with_global_seq_counted(df: DataFrame, order_cols: list[str],
 
 def seen_anti_join(candidates: DataFrame, seen: DataFrame,
                    key: str = "url") -> DataFrame:
-    """URL-seen dedup: exact left-anti join, bloom-accelerated (north_rule).
+    """URL-seen dedup: an exact xxhash64-keyed left-anti join (north_rule).
 
-    The bloom pre-filter is Catalyst's own: with
-    spark.sql.optimizer.runtime.bloomFilter.enabled=true (default, set
-    explicitly in session.py) the optimizer injects a BloomFilterAggregate
-    over the seen side and a might_contain runtime filter on the candidate
-    side of this shuffle anti-join, so only ~fpp of definitely-new
-    candidates pay the exact join shuffle. (bloom_filter_agg is not a
-    user-registrable SQL routine in this Spark build, so we rely on the
-    injected form rather than hand-rolling one; the exact anti-join remains
-    the authoritative check either way - no false drops possible.)
-
-    We additionally pre-hash the key with xxhash64 into the join so the
-    shuffle exchanges 8-byte keys + url payload rather than comparing long
-    strings during the hash join probe.
+    There is no bloom pre-filter: Catalyst's runtime filter
+    (InjectRuntimeFilter) only prunes a join side the join may drop rows
+    from, and a left-anti join keeps the unmatched candidate rows, so it
+    never applies here. The key is pre-hashed with xxhash64 into the join
+    so the shuffle exchanges 8-byte keys + url payload rather than
+    comparing long strings during the hash join probe; the url stays in
+    the join condition, so a hash collision cannot drop a candidate.
     """
     k = F.xxhash64(F.col(key))
     c = candidates.withColumn("_kh", k)

@@ -5,34 +5,41 @@ Re-expression of the serial crawl loop (Serial Version/src/crawler.c:
 crawl-order parity (proved against kernel/bfs.py, itself proved against a
 literal FIFO simulation). Every round runs one pipeline (run_round):
 
-  frontier_r --(validity c.c:1082)--> --(robots, ours)--> --(politeness
-  budget, ours)--> --(fetch = join vs the narrowed pages scan; gate
+  frontier_r --(gates, one frame: validity c.c:1082, robots (ours) and
+  politeness budget (ours) tag every valid row attempt / robots_denied /
+  deferred)--> --(fetch = join vs the narrowed pages scan; gate
   c.c:1115+848)--> --(extract text+links, ONE Arrow pass,
   c.c:134-437/685-746, written as pages.parquet)-->
   --(candidate validity vs global seed domain, c.c:1305)-->
-  --(cross-round URL-seen anti-join [+bloom], c.c:1320)-->
+  --(cross-round URL-seen anti-join, c.c:1320)-->
   --(intra-round arbitration: first-occurrence dedup + <=20/page cap,
      c.c:1299-1341)--> frontier_{r+1}, url_seen delta, manifest commit
 
-CrawlConfig.trace (exact parity, the default) adds three stages to it:
-a slim fetch gate feeding the stop cutoffs (c.c:1075: maxPages +
-10-consecutive-failures), the event trace (events.parquet) and dense FIFO
-`seq` numbering of the next frontier. Without trace, child `seq` is
-xxhash64(url), arbitration is 'scale' and the stops must be unbounded.
+CrawlConfig.trace (exact parity, the default) materializes the gate frame
+once, with the slim fetch gate's `ok` on it: the stop cutoff (c.c:1075:
+maxPages + 10-consecutive-failures), the event trace (events.parquet), the
+extraction's fetch set and the deferred rows all read that one checkpoint.
+Invariant: a trace-mode frontier's `seq` is DENSE - frontier_r holds
+base..base+n-1 (base = next_seq - next_frontier_rows) in serial FIFO
+order. So an event's seq is arithmetic on its frontier row's seq, and the
+next frontier is numbered inside the exact arbitration pass
+(operators/arbitrate.py); no round runs a global numbering pass. Without
+trace, child `seq` is xxhash64(url), arbitration is 'scale' and the stops
+must be unbounded.
 
 Scale design notes (the 100 TB story):
 - html bytes never cross a shuffle: the fetch gate joins a slim projection
   (url, length(html)), and the extraction join broadcasts the fetch rows
   against the scan in place;
-- the stop cutoff runs as aggregates riding the fetch gate's checkpoint
-  when no stop can possibly bind this round (the common case) and only
-  falls back to an ordered window in the crawl's final round;
+- the stop cutoff runs as aggregates riding the gate checkpoint when no
+  stop can possibly bind this round (the common case) and only falls back
+  to an ordered window in the crawl's final round;
 - frontier/url_seen snapshots are parquet-per-round with a manifest commit
   marker (Iceberg-snapshot semantics without the runtime dep); url_seen is
   stored as per-round DELTAS, read back as a multi-path union - O(new urls)
   write amplification per round;
-- the anti-join uses a bloom pre-filter (might_contain) so only ~fpp of
-  definitely-new candidates pay the exact anti-join shuffle;
+- the url_seen check is an exact xxhash64-keyed left-anti join
+  (common.seen_anti_join);
 - frontiers repartition by salted host before the politeness window
   (operators/politeness.py) - hot hosts cannot serialize a task;
 - per-round metrics + per-partition lineage land in metrics.json next to
@@ -64,7 +71,9 @@ from ..functions.urlsql import (
     url_priority_col,
     valid_crawl_url_col,
 )
-from .arbitrate import MAX_LINKS_PER_PAGE, arbitrate, openmp_queue_positions
+from .arbitrate import (
+    MAX_LINKS_PER_PAGE, arbitrate_exact, arbitrate_scale, arbitration_mode,
+)
 from .common import seen_anti_join, with_global_seq_counted
 from .politeness import apply_budget, delay_ms_col
 from .robots import apply_robots
@@ -78,10 +87,6 @@ FRONTIER_SCHEMA = StructType([
     StructField("seq", LongType()),
 ])
 
-EVENT_COLS = ["seq", "round", "url", "parent_url", "depth", "host",
-              "action", "delay_ms"]
-
-
 @dataclass
 class CrawlConfig:
     max_depth: int = 2
@@ -93,18 +98,22 @@ class CrawlConfig:
     robots: list[tuple[str, str, str]] | None = None  # (host, rule, prefix)
     # False = FIFO; True = north_rule queue (classifier + host in-degree +
     # recency); 'openmp' = the reference's combined insertion policy
-    # (priority + diversity, insert at 0 / n/4 / n/2; crawler.c:693-731)
+    # (priority + diversity, insert at 0 / n/4 / n/2; crawler.c:693-731).
+    # Both order the children inside the exact arbitration pass, so a
+    # priority crawl always arbitrates exactly ('auto' resolves to exact,
+    # an explicit 'scale' raises ValueError). Trace mode only.
     priority: bool | str = False
     # 'auto' | 'exact' | 'scale': auto = exact greedy below ~5M candidates
     # (event-for-event serial parity), distributed two-window pass above
     # (drops only the revival quirk; see operators/arbitrate.py). Parity
-    # suites pin 'exact'; a default user never gets a repartition(1) stage
-    # on a big frontier.
+    # suites pin 'exact'; a default FIFO crawl never gets a repartition(1)
+    # stage on a big frontier.
     arbitration: str = "auto"
     use_bloom: bool = True
     max_rounds: int = 64                    # safety rail
-    # trace=True (default, exact parity) adds the fetch gate + stop cutoff,
-    # event trace and dense FIFO seq stages to the one round pipeline;
+    # trace=True (default, exact parity) materializes the round's gate frame
+    # once with the fetch gate on it, applies the stop cutoff, writes the
+    # event trace and keeps frontier `seq` dense (the serial FIFO position);
     # trace=False is throughput mode without them (requires unbounded
     # max_pages/failure_stop); ordering keys stay deterministic
     # (xxhash64(url)) but not FIFO-dense.
@@ -156,7 +165,8 @@ def _round_dir(workdir: str, rnd: int) -> Path:
 def init_crawl(spark: SparkSession, seeds: list[str], workdir: str,
                config: CrawlConfig) -> CrawlState:
     """Normalize + dedup seeds (crawler.c:1046-1063), write the round-0
-    frontier and seed url_seen delta."""
+    frontier and seed url_seen delta. Both are a few in-memory rows,
+    written with pyarrow in FRONTIER_SCHEMA's types: no Spark job."""
     from ..kernel.urls import extract_base_domain, normalize_url, url_host
 
     rows = []
@@ -169,11 +179,9 @@ def init_crawl(spark: SparkSession, seeds: list[str], workdir: str,
         rows.append((ns, url_host(ns), 1, None, extract_base_domain(s),
                      len(rows)))
     d = _round_dir(workdir, -1)
-    d.mkdir(parents=True, exist_ok=True)
-    fdf = spark.createDataFrame(rows, FRONTIER_SCHEMA)
-    fdf.write.mode("overwrite").parquet(str(d / "frontier_next.parquet"))
-    fdf.select("url").write.mode("overwrite").parquet(
-        str(d / "url_seen_delta.parquet"))
+    _write_rows(d / "frontier_next.parquet", rows, FRONTIER_SCHEMA)
+    _write_rows(d / "url_seen_delta.parquet", [r[:1] for r in rows],
+                StructType(FRONTIER_SCHEMA.fields[:1]))
     # the init manifest records round=-1 so load_state resumes AT round 0
     state = CrawlState(round=-1, next_seq=len(rows),
                        next_frontier_rows=len(rows))
@@ -182,25 +190,41 @@ def init_crawl(spark: SparkSession, seeds: list[str], workdir: str,
     return state
 
 
-def _write_json(path: Path, obj: dict) -> None:
+def _write_rows(path: Path, rows: list[tuple], schema: StructType) -> None:
+    """An in-memory row list as a one-file parquet dir that Spark reads
+    with `schema`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    shutil.rmtree(path, ignore_errors=True)
+    path.mkdir(parents=True)
+    pq.write_table(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow), str(path / "part-00000-init.parquet"))
+
+
+def _write_text(path: Path, text: str) -> None:
     """Write through a temp file in the same dir, then os.replace: a kill
     mid-write leaves the old file (or none), never a truncated one - a
     truncated manifest.json would be taken as the latest commit."""
     tmp = path.with_name(f".{path.name}.tmp")
-    tmp.write_text(json.dumps(obj, indent=1))
+    tmp.write_text(text)
     os.replace(tmp, path)
 
 
 def _write_manifest(d: Path, state: CrawlState, config: CrawlConfig,
                     metrics: dict) -> None:
-    _write_json(d / "manifest.json", {
+    _write_text(d / "manifest.json", json.dumps({
         "round": state.round, "pages_crawled": state.pages_crawled,
         "fail_carry": state.fail_carry, "next_seq": state.next_seq,
         "next_event_seq": state.next_event_seq,
         "next_frontier_rows": state.next_frontier_rows,
         "stopped": state.stopped,
         "config": config.to_json(), "metrics": metrics,
-    })
+    }, indent=1))
 
 
 def load_state(workdir: str,
@@ -235,21 +259,35 @@ def compact_url_seen(spark: SparkSession, workdir: str,
     """Merge all url_seen deltas up to `upto_round` into the init delta dir
     and remove the per-round ones - bounds the multi-dir union cost for
     long crawls (call every k rounds at production scale). Returns the
-    compacted row count."""
-    seen = _read_url_seen(spark, workdir, upto_round)
+    compacted row count.
+
+    Crash-consistent: after every step the deltas still union to the same
+    url_seen set, so a resume after a kill anywhere in here replays
+    exactly. (1) The compacted copy is written aside, counted on that
+    write. (2) The rewind marker is replaced atomically. (3) The copy's
+    files are renamed INTO the init delta dir, next to the old files
+    (duplicate urls are harmless to the anti-join). (4) Only then are the
+    old init files and the per-round deltas deleted."""
     tmp = Path(workdir) / "_url_seen_compact.tmp"
-    seen.repartition(max(spark.sparkContext.defaultParallelism, 1)) \
+    obs = Observation("url_seen_compact")
+    _read_url_seen(spark, workdir, upto_round) \
+        .repartition(max(spark.sparkContext.defaultParallelism, 1)) \
+        .observe(obs, F.count(F.lit(1)).alias("n")) \
         .write.mode("overwrite").parquet(str(tmp))
-    n = spark.read.parquet(str(tmp)).count()
-    init = _round_dir(workdir, -1) / "url_seen_delta.parquet"
-    shutil.rmtree(init, ignore_errors=True)
-    tmp.rename(init)
-    for r in range(0, upto_round):
-        shutil.rmtree(_round_dir(workdir, r) / "url_seen_delta.parquet",
-                   ignore_errors=True)
+    n = obs.get["n"]
     # rewind barrier: resume_from cannot rewind past a compaction point
     # (per-round deltas before it no longer exist individually)
-    (Path(workdir) / "_compacted_upto").write_text(str(upto_round - 1))
+    _write_text(Path(workdir) / "_compacted_upto", str(upto_round - 1))
+    init = _round_dir(workdir, -1) / "url_seen_delta.parquet"
+    old = list(init.iterdir())
+    for f in tmp.glob("*.parquet"):
+        os.rename(f, init / f.name)
+    for f in old:
+        f.unlink()
+    shutil.rmtree(tmp)
+    for r in range(0, upto_round):
+        shutil.rmtree(_round_dir(workdir, r) / "url_seen_delta.parquet",
+                      ignore_errors=True)
     return n
 
 
@@ -371,8 +409,8 @@ def _prune_and_pushdown(pages: DataFrame, frontier: DataFrame,
                         config: CrawlConfig,
                         state: CrawlState) -> tuple[DataFrame, bool,
                                                     int | None]:
-    """Narrow the round's pages scan with at most ONE driver job, a distinct
-    collect over the frontier that selects `url` only when the url pushdown
+    """Narrow the round's pages scan with at most ONE Spark job, a collect
+    over the frontier that selects `url` only when the url pushdown
     applies and the bucket id only when bucket pruning applies (bucket is a
     function of url). Both narrowings are semantics-neutral:
 
@@ -409,16 +447,18 @@ def _prune_and_pushdown(pages: DataFrame, frontier: DataFrame,
     push = 0 < n <= cap
     if not (prune or push):
         return pages, False, None
+    # at most max(4*B, cap) rows: they dedup in Python, without the
+    # extra job a distinct shuffle costs
     rows = frontier.select(
         *(["url"] if push else []),
         *([F.pmod(F.xxhash64("url"), F.lit(B)).cast("int").alias("b")]
-          if prune else [])).distinct().collect()
+          if prune else [])).collect()
     bounded, k_files = False, None
     bks = sorted({r["b"] for r in rows}) if prune else []
     if prune and len(bks) < B:
         pages = pages.where(F.col("bucket").isin(bks))
         bounded, k_files = True, len(bks)
-    urls = [r["url"] for r in rows] if push else []
+    urls = sorted({r["url"] for r in rows}) if push else []
     if urls and len(urls) <= cap:
         pages = _chunked_url_filter(pages, urls)
         k_files = k_files if bounded else B
@@ -433,63 +473,67 @@ def _fetch_ok(html_len):
             & is_html_content_url_col(F.col("url")))
 
 
-def _gates(spark: SparkSession, frontier: DataFrame,
-           config: CrawlConfig) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Validity (silent drop, c.c:1082), robots and politeness budget.
-    Returns (fetchset, robots-denied rows, politeness-deferred rows)."""
-    robots = (spark.createDataFrame(
-        config.robots, "host string, rule string, path_prefix string")
-        if config.robots else None)
+def _gates(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
+           config: CrawlConfig, rnd: int) -> tuple[DataFrame, dict | None]:
+    """Validity (silent drop, c.c:1082), robots and politeness budget as ONE
+    frame: every valid frontier row, with `action` = 'attempt',
+    'robots_denied' or 'deferred'.
+
+    Trace mode adds the fetch gate as a boolean `ok` from a left join with
+    a slim (url, length(html)) projection, so html never shuffles, and
+    materializes the frame once: the stop cutoff, the events, the
+    extraction's fetch set and the deferred rows all read that checkpoint,
+    and its counts ride the same job. Returns (frame, {n_valid, n (the
+    attempts), n_ok, n_deferred, max_ok_seq}, or None without trace)."""
     politeness = config.politeness or {}
     budgets = [(h, b) for h, b in politeness.items() if h != "*"]
     budgets = (spark.createDataFrame(
         budgets, "host string, max_fetches_per_round int")
         if budgets else None)
-    f = frontier.where(valid_crawl_url_col(F.col("url"), F.col("base_domain")))
-    f = apply_robots(f, robots)
-    ranked = apply_budget(f.where(F.col("robots_ok")).drop("robots_ok"),
-                          budgets, politeness.get("*"))
-    return (ranked.where(F.col("fetch_now")).drop("fetch_now", "host_rank"),
-            f.where(~F.col("robots_ok")).drop("robots_ok"),
-            ranked.where(~F.col("fetch_now")).drop("fetch_now", "host_rank"))
+    cols = FRONTIER_SCHEMA.fieldNames()
+    f = apply_robots(frontier.where(
+        valid_crawl_url_col(F.col("url"), F.col("base_domain"))),
+        config.robots)
+    ranked = apply_budget(f.where(F.col("robots_ok")), budgets,
+                          politeness.get("*"))
+    gated = ranked.select(*cols, F.when(F.col("fetch_now"), F.lit("attempt"))
+                          .otherwise(F.lit("deferred")).alias("action")) \
+        .unionByName(f.where(~F.col("robots_ok")).select(
+            *cols, F.lit("robots_denied").alias("action")))
+    if not config.trace:
+        return gated, None
+    obs = Observation(f"r{rnd}_gates")
+    att = F.col("action") == "attempt"
+    gated = (gated.join(pages.select("url", F.length("html").alias("_hlen")),
+                        "url", "left")
+             .withColumn("ok", att & _fetch_ok(F.col("_hlen"))).drop("_hlen")
+             .observe(obs, F.count(F.lit(1)).alias("n_valid"),
+                      F.count_if(att).alias("n"),
+                      F.count_if(F.col("ok")).alias("n_ok"),
+                      F.count_if(F.col("action") == "deferred")
+                      .alias("n_deferred"),
+                      F.max(F.when(F.col("ok"), F.col("seq")))
+                      .alias("max_ok_seq"))
+             .localCheckpoint(eager=True))
+    return gated, obs.get
 
 
-def _fetch_gate(fetchset: DataFrame, pages: DataFrame,
-                rnd: int) -> tuple[DataFrame, dict]:
-    """Trace only: the fetch gate on a slim (url, length(html)) projection,
-    so html never shuffles. Materialized once (the stop cutoff, the events
-    and the extraction all read it); the cutoff's counts ride that job.
-    Returns (fetchset rows with a boolean `ok`, {n, n_ok, max_ok_seq})."""
-    obs = Observation(f"r{rnd}_fetch_gate")
-    meta = (fetchset.join(pages.select("url", F.length("html").alias("_hlen")),
-                          "url", "left")
-            .withColumn("ok", _fetch_ok(F.col("_hlen"))).drop("_hlen")
-            .observe(obs, F.count(F.lit(1)).alias("n"),
-                     F.count_if(F.col("ok")).alias("n_ok"),
-                     F.max(F.when(F.col("ok"), F.col("seq")))
-                     .alias("max_ok_seq"))
-            .localCheckpoint(eager=True))
-    return meta, obs.get
-
-
-def _stop_cutoff(meta: DataFrame, gate: dict, denied: DataFrame,
-                 deferred: DataFrame, state: CrawlState, config: CrawlConfig,
-                 rnd: int) -> tuple[DataFrame, DataFrame, DataFrame,
-                                    DataFrame, Observation | None]:
+def _stop_cutoff(gated: DataFrame, gate: dict, state: CrawlState,
+                 config: CrawlConfig, rnd: int) -> tuple[DataFrame, DataFrame,
+                                                         Observation | None]:
     """Trace only: the serial loop's top-of-loop stop checks (c.c:1075:
     maxPages, and `failure_stop` consecutive failures carried across
     rounds) over this round's attempts in seq order. Sets state.stopped
     when a check binds and updates state.fail_carry.
 
-    Returns (att, denied, deferred, fetched, carry): the attempted rows
-    (with `ok`); the denials and deferrals the serial loop still reaches;
-    the successful attempts to extract; and, when the carry into the next
-    round is the failure run after this round's last success, an
-    Observation that counts it on the extraction job's scan of the
-    attempts (None otherwise)."""
+    Returns (cut, fetched, carry): the gate rows the serial loop reaches
+    (all of them unless a check binds); the successful attempts among them,
+    to extract; and, when the carry into the next round is the failure run
+    after this round's last success, an Observation that counts it on the
+    extraction job's scan of the attempts (None otherwise)."""
     remaining = config.max_pages - state.pages_crawled
     n_fail = gate["n"] - gate["n_ok"]
-    att, stop = meta, None  # common case: no stop can bind; all attempt
+    cut, stop = gated, None  # common case: no stop can bind
     if not (gate["n_ok"] < remaining
             and state.fail_carry + n_fail < config.failure_stop):
         # slow path (final round): exact ordered cutoff. Window is global
@@ -497,9 +541,9 @@ def _stop_cutoff(meta: DataFrame, gate: dict, denied: DataFrame,
         # once per crawl (the crawl ends here).
         w_before = Window.orderBy("seq").rowsBetween(
             Window.unboundedPreceding, -1)
-        obs = Observation(f"r{rnd}_stop_cutoff")
         ordered = (
-            meta.withColumn("_cum_ok", F.coalesce(
+            gated.where(F.col("action") == "attempt")
+            .withColumn("_cum_ok", F.coalesce(
                 F.sum(F.col("ok").cast("long")).over(w_before), F.lit(0)))
             .withColumn("_pos", F.row_number().over(Window.orderBy("seq")))
             .withColumn("_last_ok_pos", F.max(
@@ -510,69 +554,71 @@ def _stop_cutoff(meta: DataFrame, gate: dict, denied: DataFrame,
                 .otherwise(F.col("_pos") - 1 + F.lit(state.fail_carry)))
             .withColumn("attempted",
                         (F.col("_cum_ok") < F.lit(remaining))
-                        & (F.col("_consec") < F.lit(config.failure_stop)))
-            .observe(
-                obs,
-                F.min(F.when(~F.col("attempted"), F.col("seq"))).alias("stop"),
-                # seq of the attempt that consumes the LAST remaining page /
-                # the failure that completes the consecutive-failure run:
-                # the serial loop breaks at its NEXT top-of-loop check, so
-                # every event row (attempt, deferral, robots denial) with a
-                # larger seq is never processed (crawler.c:1075)
-                F.min(F.when(F.col("ok")
-                             & (F.col("_cum_ok") + 1 == F.lit(remaining)),
-                             F.col("seq"))).alias("complete"),
-                F.min(F.when(~F.col("ok")
-                             & (F.col("_consec") + 1
-                                == F.lit(config.failure_stop)),
-                             F.col("seq"))).alias("fail_complete"))
-            .localCheckpoint(eager=True))
-        cut = obs.get
-        att = ordered.where(F.col("attempted")).drop(
-            "attempted", "_cum_ok", "_pos", "_last_ok_pos", "_consec")
-        stop = cut["stop"]
-        cuts = [c for c in (cut["complete"], cut["fail_complete"])
+                        & (F.col("_consec") < F.lit(config.failure_stop))))
+        cut_at = ordered.agg(
+            F.min(F.when(~F.col("attempted"), F.col("seq"))).alias("stop"),
+            # seq of the attempt that consumes the LAST remaining page /
+            # the failure that completes the consecutive-failure run: the
+            # serial loop breaks at its NEXT top-of-loop check, so every
+            # row (attempt, deferral, robots denial) with a larger seq is
+            # never processed (crawler.c:1075)
+            F.min(F.when(F.col("ok")
+                         & (F.col("_cum_ok") + 1 == F.lit(remaining)),
+                         F.col("seq"))).alias("complete"),
+            F.min(F.when(~F.col("ok")
+                         & (F.col("_consec") + 1
+                            == F.lit(config.failure_stop)),
+                         F.col("seq"))).alias("fail_complete")).first()
+        stop = cut_at["stop"]
+        cuts = [c for c in (cut_at["complete"], cut_at["fail_complete"])
                 if c is not None]
         if stop is not None:
             # the check that binds at the stop position: maxPages iff the
             # attempt consuming the last remaining page came before it
-            state.stopped = ("max_pages" if cut["complete"] is not None
-                             and cut["complete"] < stop else "failure_stop")
+            state.stopped = ("max_pages" if cut_at["complete"] is not None
+                             and cut_at["complete"] < stop else "failure_stop")
             cuts.append(stop - 1)  # seqs are integers: < stop == <= stop-1
         if cuts:
-            denied = denied.where(F.col("seq") <= min(cuts))
-            deferred = deferred.where(F.col("seq") <= min(cuts))
-    fetched, carry = att, None
+            cut = gated.where(F.col("seq") <= min(cuts))
+    fetched, carry = cut.where(F.col("action") == "attempt"), None
     if stop is None and gate["max_ok_seq"] is None:
         state.fail_carry += gate["n"]
     elif stop is None:  # observed on the extraction branch only
         carry = Observation(f"r{rnd}_fail_carry")
-        fetched = att.observe(carry, F.count_if(
+        fetched = fetched.observe(carry, F.count_if(
             ~F.col("ok") & (F.col("seq") > gate["max_ok_seq"])).alias("n"))
-    return (att, denied, deferred, fetched.where(F.col("ok")).drop("ok"),
-            carry)
+    return cut, fetched.where(F.col("ok")).drop("action", "ok"), carry
 
 
-def _events(att: DataFrame, denied: DataFrame, deferred: DataFrame,
-            state: CrawlState, rnd: int) -> tuple[DataFrame, int]:
-    """Trace only: the round's event rows - attempts (fetched /
-    fetch_failed, with the politeness delay), robots denials and
-    deferrals - numbered densely in frontier order after the previous
-    rounds' events. Returns (events: EVENT_COLS + frontier_seq, count)."""
-    def rows(df, action, delay):
-        return df.select("seq", "url", "parent_url", "depth", "host",
-                         action.alias("action"), delay.alias("delay_ms"))
+def _event_rows(frontier: DataFrame, cut: DataFrame, gate: dict,
+                state: CrawlState, rnd: int) -> DataFrame:
+    """Trace only: the round's events - attempts (fetched / fetch_failed,
+    with the politeness delay), robots denials and deferrals - one per gate
+    row the serial loop reached: (seq, round, url, parent_url, depth, host,
+    action, delay_ms, frontier_seq).
 
-    events = (rows(att, F.when(F.col("ok"), F.lit("fetched"))
-                   .otherwise(F.lit("fetch_failed")), delay_ms_col(F.col("url")))
-              .unionByName(rows(denied, F.lit("robots_denied"), F.lit(0)))
-              .unionByName(rows(deferred, F.lit("deferred"), F.lit(0))))
-    events, n = with_global_seq_counted(
-        events.withColumnRenamed("seq", "frontier_seq"),
-        ["frontier_seq"], "event_seq", offset=state.next_event_seq)
-    return events.select(F.col("event_seq").alias("seq"),
-                         F.lit(rnd).alias("round"), *EVENT_COLS[2:],
-                         "frontier_seq"), n
+    No numbering pass: frontier seq is dense from base = next_seq -
+    next_frontier_rows, and the events are the valid rows in frontier
+    order, so event seq = next_event_seq + (seq - base) - (the rows the
+    validity gate dropped before it). Children and deferred rows passed
+    that same gate before entering a frontier, so only round-0 seeds can be
+    dropped; a round that dropped any collects their seqs (one small
+    job)."""
+    pos = F.col("seq") - F.lit(state.next_seq - state.next_frontier_rows)
+    if state.next_frontier_rows > gate["n_valid"]:
+        dropped = [r["seq"] for r in frontier.where(~valid_crawl_url_col(
+            F.col("url"), F.col("base_domain"))).select("seq").collect()]
+        pos = pos - F.size(F.filter(F.array(*map(F.lit, dropped)),
+                                    lambda s: s < F.col("seq")))
+    att = F.col("action") == "attempt"
+    return cut.select(
+        (pos + F.lit(state.next_event_seq)).alias("seq"),
+        F.lit(rnd).alias("round"), "url", "parent_url", "depth", "host",
+        F.when(~att, F.col("action")).when(F.col("ok"), F.lit("fetched"))
+        .otherwise(F.lit("fetch_failed")).alias("action"),
+        F.when(att, delay_ms_col(F.col("url"))).otherwise(F.lit(0))
+        .alias("delay_ms"),
+        F.col("seq").alias("frontier_seq"))
 
 
 def _extract_write(spark: SparkSession, fetched: DataFrame, pages: DataFrame,
@@ -606,89 +652,87 @@ def _extract_write(spark: SparkSession, fetched: DataFrame, pages: DataFrame,
     return spark.read.schema(pages_out.schema).parquet(str(d / "pages.parquet"))
 
 
-def _arbitrate_children(spark: SparkSession, stored: DataFrame, workdir: str,
-                        rnd: int, config: CrawlConfig, mode: str,
-                        count_hint: int | None) -> DataFrame:
-    """Candidate links of this round's pages (validity vs the global seed
-    domain, c.c:1305), minus every url seen in earlier rounds (c.c:1320),
-    arbitrated into the enqueued children (c.c:1299-1341); materialized."""
+def _arbitrate_children(spark: SparkSession, stored: DataFrame,
+                        deferred: DataFrame, workdir: str, state: CrawlState,
+                        config: CrawlConfig, mode: str) -> DataFrame:
+    """frontier_{r+1}, materialized, with `child` flagging the round's
+    enqueued children (its url_seen delta): the deferred rows first (old
+    seq order), then the candidate links of this round's pages (validity vs
+    the global seed domain, c.c:1305), minus every url seen in earlier
+    rounds (c.c:1320), arbitrated (c.c:1299-1341).
+
+    'exact' arbitrates and numbers in ONE single-partition pass
+    (arbitrate_exact): `seq` = serial FIFO position, children ordered by
+    the priority policy (scored here, JVM-side) - mirrors kernel/bfs.py
+    exactly. 'scale' arbitrates distributed and keeps FIFO order (priority
+    policies run only in the exact pass); trace mode then numbers the
+    frontier densely with one with_global_seq_counted. Without trace,
+    children are keyed by xxhash64(url): deterministic, but not
+    FIFO-dense."""
     # Final-round short-circuit: without politeness deferrals, round r holds
     # exactly depth-(r+1) pages (BFS invariant, in both modes), so when that
     # depth reaches max_depth no candidate can exist - skip the whole
     # explode/anti-join/arbitrate pipeline (~1.5 s of pure plan overhead on
     # empty input at any parallelism).
+    rnd = state.round
     if config.politeness is None and rnd + 1 >= config.max_depth:
-        return spark.createDataFrame(
-            [], "parent_seq long, parent_url_c string, parent_depth int, "
-                "base_domain string, link_idx int, url string")
+        return spark.createDataFrame([], FRONTIER_SCHEMA) \
+            .withColumn("child", F.lit(True))
+    cols = FRONTIER_SCHEMA.fieldNames()[:5]
     cands = (
         stored.where(F.col("depth") < config.max_depth)
         .select(F.col("seq").alias("parent_seq"),
-                F.col("url").alias("parent_url_c"),
-                F.col("depth").alias("parent_depth"),
+                F.col("url").alias("parent_url"),
+                (F.col("depth") + 1).alias("depth"),
                 F.col("base_domain"),
                 F.posexplode("links").alias("link_idx", "url"))
         .where(valid_crawl_url_col(F.col("url"), F.col("base_domain")))
     )
-    url_seen = _read_url_seen(spark, workdir, rnd)
-    return arbitrate(seen_anti_join(cands, url_seen),
-                     cap=config.max_links_per_page, mode=mode,
-                     count_hint=count_hint).localCheckpoint(eager=True)
+    cands = seen_anti_join(cands, _read_url_seen(spark, workdir, rnd)) \
+        .withColumn("host", host_col(F.col("url")))
 
-
-def _next_frontier(children: DataFrame, deferred: DataFrame,
-                   state: CrawlState, config: CrawlConfig) -> DataFrame:
-    """frontier_{r+1}: deferred rows first (old seq order), then children.
-    Trace mode numbers it densely (`seq` = serial FIFO position); priority
-    mode (north_rule queue) orders children by classifier desc, host
-    in-degree among this round's children desc, discovery order as
-    recency tie-break - mirrors kernel/bfs.py exactly. Throughput mode
-    keys children by xxhash64(url): deterministic, but not FIFO-dense."""
-    cols = FRONTIER_SCHEMA.fieldNames()
-    kids = children.select(
-        "url", host_col(F.col("url")).alias("host"),
-        (F.col("parent_depth") + 1).alias("depth"),
-        F.col("parent_url_c").alias("parent_url"), "base_domain",
-        "parent_seq", "link_idx")
-    if not config.trace:
-        return deferred.select(*cols).unionByName(
-            kids.withColumn("seq", F.xxhash64("url")).select(*cols))
-    if config.priority == "openmp":
-        # OpenMP combined insertion policy (crawler.c:693-731): exact queue
-        # position from the sequential insertion simulation (mirrors
-        # kernel/bfs.py's openmp branch event-for-event).
-        score = (url_priority_col(F.col("url"), F.col("parent_url"))
-                 + url_diversity_col(F.col("url"))).cast("int")
-        kids = openmp_queue_positions(
-            kids.withColumn("_score", score)).drop("_score")
-        k1, k1b = F.col("_qpos"), F.lit(0)
-    elif config.priority:
-        indeg = kids.groupBy("host").agg(F.count("*").alias("_indeg"))
-        kids = kids.join(F.broadcast(indeg), "host")
-        k1 = -url_priority_col(F.col("url"), F.col("parent_url"))
-        k1b = -F.col("_indeg")
-    else:
-        k1 = k1b = F.lit(0)
-
-    def keyed(df, *keys):
-        return df.select(*cols[:5], *[k.cast("long").alias(f"_k{i}")
-                                      for i, k in enumerate(keys)])
+    def keyed(df, src, k1, k2, *score):
+        # deferred rows (src 0) keyed by old seq, candidates (src 1) by
+        # discovery order (parent_seq, link_idx); `score` feeds the exact
+        # pass's priority policy
+        return df.select(*cols, F.lit(src).alias("_src"), *score,
+                         k1.cast("long").alias("_k1"),
+                         k2.cast("long").alias("_k2"))
 
     zero = F.lit(0)
-    nxt = keyed(deferred, zero, zero, zero, F.col("seq"), zero).unionByName(
-        keyed(kids, F.lit(1), k1, k1b, F.col("parent_seq"), F.col("link_idx")))
-    if state.stopped:
-        nxt = nxt.limit(0)
-    nxt, _ = with_global_seq_counted(nxt, [f"_k{i}" for i in range(5)], "seq",
+    if mode == "exact":
+        score = zero
+        if config.priority:
+            score = url_priority_col(F.col("url"), F.col("parent_url"))
+        if config.priority == "openmp":
+            score = score + url_diversity_col(F.col("url"))
+        rows = keyed(deferred, 0, F.col("seq"), zero,
+                     zero.alias("_score")).unionByName(
+            keyed(cands, 1, F.col("parent_seq"), F.col("link_idx"),
+                  score.cast("int").alias("_score")))
+        return arbitrate_exact(rows, state.next_seq,
+                               config.max_links_per_page,
+                               config.priority).localCheckpoint(eager=True)
+    kids = arbitrate_scale(cands, config.max_links_per_page)
+    if not config.trace:
+        return deferred.select(*cols, "seq", F.lit(False).alias("child")) \
+            .unionByName(kids.select(*cols, F.xxhash64("url").alias("seq"),
+                                     F.lit(True).alias("child"))) \
+            .localCheckpoint(eager=True)
+    nxt = keyed(deferred, 0, F.col("seq"), zero).unionByName(
+        keyed(kids.localCheckpoint(eager=True), 1, F.col("parent_seq"),
+              F.col("link_idx")))
+    nxt, _ = with_global_seq_counted(nxt, ["_src", "_k1", "_k2"], "seq",
                                      offset=state.next_seq)
-    return nxt.select(*cols)
+    return nxt.select(*cols, "seq", (F.col("_src") == 1).alias("child"))
 
 
-def _write_outputs(d: Path, rnd: int, next_frontier: DataFrame,
-                   children: DataFrame, stored: DataFrame,
-                   events: DataFrame | None, max_depth: int) -> dict:
+def _write_outputs(d: Path, rnd: int, nxt: DataFrame, stored: DataFrame,
+                   events: DataFrame | None, max_depth: int,
+                   stopped: bool) -> dict:
     """The round's remaining outputs as concurrent driver-thread jobs:
-    frontier_next, the url_seen delta, the events (trace mode) and the
+    frontier_next (empty once the crawl stopped mid-round), the url_seen
+    delta (the children, stopped or not), the events (trace mode) and the
     lineage read of pages.parquet. Every input is already materialized, so
     the jobs are independent and the scheduler can interleave them. Counts
     ride these jobs (Observations on the writes, aggregates in the lineage
@@ -697,16 +741,19 @@ def _write_outputs(d: Path, rnd: int, next_frontier: DataFrame,
     caps whole-crawl scaling. Returns the round's count metrics."""
     obs = {k: Observation(f"r{rnd}_{k}") for k in ("next", "children")}
     n = F.count(F.lit(1)).alias("n")
+    frontier = nxt.drop("child")
+    if stopped:
+        frontier = frontier.limit(0)
     # the candidates _arbitrate_children explodes: counted here, not on the
     # arbitration job, because AQE drops an observed stage whose output
     # turned out empty from the final plan, and its metrics with it
     n_cands = F.when(F.col("depth") < max_depth, F.size(F.filter(
         "links", lambda u: valid_crawl_url_col(u, F.col("base_domain")))))
     jobs = {
-        "next": lambda: next_frontier.observe(obs["next"], n).write
+        "next": lambda: frontier.observe(obs["next"], n).write
         .mode("overwrite").parquet(str(d / "frontier_next.parquet")),
-        "children": lambda: children.observe(obs["children"], n)
-        .select("url").write.mode("overwrite")
+        "children": lambda: nxt.where(F.col("child"))
+        .observe(obs["children"], n).select("url").write.mode("overwrite")
         .parquet(str(d / "url_seen_delta.parquet")),
         "lineage": lambda: (stored.groupBy("lineage_partition")
                             .agg(F.count("*").alias("cnt"),
@@ -742,11 +789,15 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
               state: CrawlState, config: CrawlConfig) -> dict:
     """Execute one BSP round as one sequence of stages; writes the round
     snapshot (manifest.json last = commit marker); mutates state.
-    config.trace adds the fetch gate + stop cutoff, the events and the
-    dense frontier seq; without it the stop conditions must be unbounded."""
+    config.trace materializes the gate frame (with the fetch gate) once and
+    adds the stop cutoff and the events; without it the stop conditions
+    must be unbounded."""
     assert config.trace or (config.max_pages >= 10**9
                             and config.failure_stop >= 10**9), \
         "trace=False requires unbounded stop conditions"
+    if config.trace and config.priority and config.arbitration == "scale":
+        raise ValueError("priority ordering runs in the exact arbitration "
+                         "pass; use arbitration='exact' or 'auto'")
     t0 = time.monotonic()
     stage_wall: dict[str, float] = {}
     _last = [t0]
@@ -765,43 +816,44 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
         str(_round_dir(workdir, rnd - 1) / "frontier_next.parquet"))
     pages, scan_bounded, k_files = _prune_and_pushdown(pages, frontier,
                                                       config, state)
-    fetched, denied, deferred = _gates(spark, frontier, config)
-    events, n_events, carry = None, 0, None
-    arbitration, count_hint = "scale", None
+    gated, gate = _gates(spark, frontier, pages, config, rnd)
+    events, carry = None, None
     if config.trace:
-        meta, gate = _fetch_gate(fetched, pages, rnd)
         _mark("fetch_gate")
-        att, denied, deferred, fetched, carry = _stop_cutoff(
-            meta, gate, denied, deferred, state, config, rnd)
+        cut, fetched, carry = _stop_cutoff(gated, gate, state, config, rnd)
         _mark("stop_cutoff")
-        events, n_events = _events(att, denied, deferred, state, rnd)
+        events = _event_rows(frontier, cut, gate, state, rnd)
         _mark("events_seq")
-        # auto-mode hint: candidates <= pages_ok x links/page; 256 is a
-        # loose links-per-page bound for the switch (both modes are
-        # correct; the hint only picks the strategy without a count job)
-        arbitration, count_hint = config.arbitration, gate["n_ok"] * 256
-
+        # auto-mode hint: the exact pass carries the deferred rows plus
+        # candidates <= pages_ok x links/page; 256 is a loose links-per-page
+        # bound for the switch (both modes are correct; the hint only picks
+        # the strategy without a count job). Priority policies order the
+        # children inside the exact pass, so they always arbitrate exactly.
+        mode = ("exact" if config.priority else arbitration_mode(
+            config.arbitration, gate["n_ok"] * 256 + gate["n_deferred"]))
+    else:
+        cut, mode = gated, "scale"
+        fetched = gated.where(F.col("action") == "attempt").drop("action")
     stored = _extract_write(spark, fetched, pages, d, state, config,
                             scan_bounded, k_files)
     if carry is not None:
         state.fail_carry = carry.get["n"]
     _mark("extract_write")
-    children = _arbitrate_children(spark, stored, workdir, rnd, config,
-                                   arbitration, count_hint)
+    nxt = _arbitrate_children(
+        spark, stored, cut.where(F.col("action") == "deferred"), workdir,
+        state, config, mode)
     _mark("arbitrate_ckpt")
-    next_frontier = _next_frontier(children, deferred, state, config)
-    _mark("frontier_seq")
     metrics = {"round": rnd, **_write_outputs(
-        d, rnd, next_frontier, children, stored, events, config.max_depth)}
+        d, rnd, nxt, stored, events, config.max_depth, bool(state.stopped))}
     _mark("writes_and_metrics")
     metrics["wall_sec"] = round(time.monotonic() - t0, 3)
     metrics["stage_wall"] = stage_wall
-    _write_json(d / "metrics.json", metrics)
+    _write_text(d / "metrics.json", json.dumps(metrics, indent=1))
 
     state.pages_crawled += metrics["fetched"]
     state.next_frontier_rows = metrics["next_frontier_rows"]
     state.next_seq += metrics["next_frontier_rows"]
-    state.next_event_seq += n_events
+    state.next_event_seq += sum(metrics.get("events", {}).values())
     if not state.stopped:
         if state.pages_crawled >= config.max_pages:
             state.stopped = "max_pages"

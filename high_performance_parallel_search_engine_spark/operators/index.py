@@ -50,12 +50,13 @@ def spread_narrow_input(df: DataFrame) -> DataFrame:
     file is only splittable at row-group boundaries, and a single-row-
     group table scans as ONE task no matter the config - every per-row
     kernel downstream (tokenize, shingle, md5) then runs on one core.
-    When the scan's parallelism is below half the session's cores,
-    repartition ROWS to the core count before the heavy per-row work:
-    one small exchange of raw text buys full-width tokenization.
-    Scale-adaptive by construction - a 100 TB table scans as thousands
-    of splits, `cur >= target/2` holds, and this is a no-op (no constant
-    tuned to local mode; `defaultParallelism` follows the master)."""
+    When the scan's parallelism is at most half the session's cores
+    (`cur * 2 <= target`), repartition ROWS to the core count before the
+    heavy per-row work: one small exchange of raw text buys full-width
+    tokenization. Scale-adaptive by construction - a 100 TB table scans
+    as thousands of splits, `cur * 2 > target` holds, and this is a no-op
+    (no constant tuned to local mode; `defaultParallelism` follows the
+    master)."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:

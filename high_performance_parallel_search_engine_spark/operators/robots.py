@@ -4,8 +4,9 @@ these semantics are ours, specified in kernel/bfs.py:robots_allowed).
 
 Rules table: (host, rule 'allow'|'disallow', path_prefix). Longest matching
 prefix wins; equal-length tie -> disallow; no matching rule / no rules for
-host -> allow. Applied as a broadcast join + aggregation (rules tables are
-tiny relative to frontiers, and the join never shuffles the frontier).
+host -> allow. Applied as a broadcast join of the rules grouped per host
+(rules tables are tiny relative to frontiers, and the join never shuffles
+the frontier).
 """
 
 from __future__ import annotations
@@ -58,7 +59,7 @@ def robots_rules_from_df(robots_txt: DataFrame, agent: str = "*",
     """Distributed robots.txt ingestion: (host, robots_txt) -> exploded
     (host, rule, path_prefix) rules table via one Arrow pass - at 10^7 hosts
     the parse runs where the bodies live and only the tiny rules table
-    returns. Feed the result to apply_robots / CrawlConfig.robots."""
+    returns. Collect the result into CrawlConfig.robots (apply_robots)."""
     from pyspark.sql.types import (
         ArrayType, StringType, StructField, StructType,
     )
@@ -81,31 +82,37 @@ def robots_rules_from_df(robots_txt: DataFrame, agent: str = "*",
                     F.col("_r.path_prefix").alias("path_prefix")))
 
 
-def apply_robots(df: DataFrame, robots: DataFrame | None,
+def apply_robots(df: DataFrame, rules: list[tuple[str, str, str]] | None,
                  url_col: str = "url", host_col: str = "host") -> DataFrame:
-    """Adds `robots_ok` boolean. Rows of `df` must be unique (frontier rows
-    are, by dedup construction)."""
-    if robots is None:
+    """Adds `robots_ok` boolean from (host, rule, path_prefix) rules.
+
+    The rules are grouped per host on the driver (one row per host holding
+    its (rule, path_prefix) array) and broadcast-joined on host, so each
+    `df` row costs one hash lookup plus a pass over its own host's rules,
+    and `df` is never shuffled or regrouped."""
+    if not rules:
         return df.withColumn("robots_ok", F.lit(True))
-    cols = df.columns
+    by_host: dict[str, list[tuple[str, str]]] = {}
+    for host, rule, prefix in rules:
+        by_host.setdefault(host, []).append((rule, prefix))
+    # per-row schema checks of the nested rows would double the driver
+    # cost of a 10^6-host table; the rules are (str, str, str) config
+    table = df.sparkSession.createDataFrame(
+        list(by_host.items()),
+        f"{host_col} string, _rules array<struct<rule:string,"
+        "path_prefix:string>>", verifySchema=False)
     path = F.substring(F.col(url_col),
                        F.length(base_domain_col(F.col(url_col))) + 1, 1 << 30)
     path = F.when(path == "", "/").otherwise(path)
-    match = F.col("rule").isNotNull() & F.col("_path").startswith(F.col("path_prefix"))
-    plen = F.when(match, F.length("path_prefix"))
-    verdict = (
-        df.withColumn("_path", path)
-        .join(F.broadcast(robots), on=host_col, how="left")
-        .groupBy(*cols)
-        .agg(
-            F.max(plen).alias("_best"),
-            F.max(F.when(match & (F.col("rule") == "disallow"),
-                         F.length("path_prefix"))).alias("_dis_best"),
-        )
-    )
+    match = F.filter("_rules", lambda r: path.startswith(r["path_prefix"]))
+
+    def longest(rs):
+        return F.array_max(F.transform(rs, lambda r: F.length(r["path_prefix"])))
+
+    best = longest(match)
+    dis_best = longest(F.filter(match, lambda r: r["rule"] == "disallow"))
     # longest match wins; a disallow at the winning length beats an allow
-    return (verdict.withColumn(
-        "robots_ok",
-        F.col("_best").isNull()
-        | (F.coalesce(F.col("_dis_best"), F.lit(-1)) < F.col("_best")))
-        .drop("_best", "_dis_best"))
+    return (df.join(F.broadcast(table), on=host_col, how="left")
+            .withColumn("robots_ok", best.isNull()
+                        | (F.coalesce(dis_best, F.lit(-1)) < best))
+            .drop("_rules"))

@@ -16,8 +16,8 @@ Demonstrated operators:
 
 foreachBatch is the bridge for the stateful pieces that need the batch
 engine (URL-seen anti-join against the cumulative snapshot): each
-micro-batch calls the same seen_anti_join/arbitrate operators - one code
-path for both execution modes.
+micro-batch calls the same seen_anti_join operator - one code path for
+both execution modes.
 """
 
 from __future__ import annotations
