@@ -1,4 +1,4 @@
 """Distributed operators: crawl rounds, dedup, politeness, index (+ the
-term-bucketed index_store and persisted ann_store), ranking, phrase
+term-bucketed index_store), ranking, phrase
 search, similarity, text stats, multimodal plumbing, and the distillation
 pipeline composing them."""

@@ -54,7 +54,7 @@ import os
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field, fields, replace
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -93,8 +93,9 @@ class CrawlConfig:
     max_pages: int = 10
     failure_stop: int = 10
     max_links_per_page: int = MAX_LINKS_PER_PAGE
-    default_budget: int | None = None       # None = unlimited (parity mode)
-    politeness: dict[str, int] | None = None  # host -> budget
+    # host -> per-round fetch budget; "*" covers every other host, and no
+    # "*" key means unlimited (parity mode)
+    politeness: dict[str, int] | None = None
     robots: list[tuple[str, str, str]] | None = None  # (host, rule, prefix)
     # False = FIFO; True = north_rule queue (classifier + host in-degree +
     # recency); 'openmp' = the reference's combined insertion policy
@@ -109,7 +110,6 @@ class CrawlConfig:
     # suites pin 'exact'; a default FIFO crawl never gets a repartition(1)
     # stage on a big frontier.
     arbitration: str = "auto"
-    use_bloom: bool = True
     max_rounds: int = 64                    # safety rail
     # trace=True (default, exact parity) materializes the round's gate frame
     # once with the fetch gate on it, applies the stop cutoff, writes the
@@ -139,11 +139,7 @@ class CrawlConfig:
     url_pushdown_max: int | str | None = "auto"
 
     def to_json(self) -> dict:
-        return {k: getattr(self, k) for k in (
-            "max_depth", "max_pages", "failure_stop", "max_links_per_page",
-            "default_budget", "politeness", "robots", "priority",
-            "arbitration", "use_bloom", "max_rounds", "trace",
-            "compact_every", "pages_buckets", "url_pushdown_max")}
+        return {f.name: getattr(self, f.name) for f in fields(self)}
 
 
 @dataclass
@@ -240,11 +236,13 @@ def load_state(workdir: str,
             f"no committed round{'' if from_round is None else f' {from_round}'}"
             f" under {workdir}")
     m = json.loads((last / "manifest.json").read_text())
-    cfg_json = m["config"]
-    robots = cfg_json.get("robots")
-    if robots is not None:
-        robots = [tuple(r) for r in robots]
-    config = CrawlConfig(**{**cfg_json, "robots": robots})
+    # keys that are no longer CrawlConfig fields (older manifests carry
+    # settings that were removed) are dropped
+    cfg_json = {f.name: m["config"][f.name] for f in fields(CrawlConfig)
+                if f.name in m["config"]}
+    if cfg_json.get("robots") is not None:
+        cfg_json["robots"] = [tuple(r) for r in cfg_json["robots"]]
+    config = CrawlConfig(**cfg_json)
     state = CrawlState(
         round=m["round"] + 1, pages_crawled=m["pages_crawled"],
         fail_carry=m["fail_carry"], next_seq=m["next_seq"],
@@ -299,6 +297,29 @@ def _read_url_seen(spark: SparkSession, workdir: str, upto_round: int) -> DataFr
     # (init_crawl and run_round); skipping footer inference
     # removes one driver-synchronized 1-task job from every round
     return spark.read.schema("url string").parquet(*paths)
+
+
+def _check_url_seen_deltas(workdir: str, upto_round: int) -> None:
+    """Resume guard for _read_url_seen's explicit schema: a delta without a
+    string `url` column (renamed, or from an older layout) would read as
+    NULL urls, and the anti-join would silently re-admit urls it has
+    already seen. Reads one parquet footer per delta dir with pyarrow;
+    no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for r in range(-1, upto_round):
+        d = _round_dir(workdir, r) / "url_seen_delta.parquet"
+        part = min(d.glob("*.parquet"), default=None)
+        if part is None:
+            continue
+        schema = pq.read_schema(part)
+        url = schema.field("url").type if "url" in schema.names else None
+        if url is None or not (pa.types.is_string(url)
+                               or pa.types.is_large_string(url)):
+            raise ValueError(
+                f"cannot resume: url_seen delta {d} has no string `url` "
+                f"column (schema: {schema.names})")
 
 
 # "auto" pushdown-cap resolution: a bucket file at/above this size is
@@ -891,11 +912,13 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: list[str],
                 f"cannot resume from round {resume_from}: url_seen deltas "
                 f"up to round {marker.read_text()} were compacted away")
         state, config, _ = load_state(workdir, from_round=resume_from)
+        _check_url_seen_deltas(workdir, state.round)
         for d in sorted(Path(workdir).glob("round=*")):
             if int(d.name.split("=")[1]) > resume_from:
                 shutil.rmtree(d, ignore_errors=True)
     elif resume:
         state, config, _ = load_state(workdir)
+        _check_url_seen_deltas(workdir, state.round)
     else:
         # Fresh (non-resume) crawl into a reused workdir: drop every prior
         # round snapshot first. Leaving them would mix the previous crawl's

@@ -43,21 +43,6 @@ def tokens_simple_col(text: Column) -> Column:
     return F.filter(F.split(text, TOKEN_SPLIT_REGEX), lambda t: F.length(t) > 0)
 
 
-def shingles_col(text: Column, k: int = SHINGLE_K) -> Column:
-    """k-token shingle strings via slice/transform - one pass, no explode.
-    NOTE: only apply this to an ALREADY-MATERIALIZED token array column or
-    tiny inputs; prefer doc_shingles() below, which inserts the projection
-    boundary (inlining the tokenizer here makes codegen re-split the text
-    once per shingle position - measured 6x on the sf0.1 corpus)."""
-    toks = tokens_simple_col(text)
-    n = F.size(toks)
-    # same short-input guard as doc_shingles: sequence(1, 0) is the
-    # DESCENDING [1, 0] in Spark and slice(_, 0, k) throws
-    idx = F.when(n >= k, F.sequence(F.lit(1), n - F.lit(k - 1))) \
-        .otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-
-
 def doc_shingles(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, shingle) exploded k-shingle stream. The token array is

@@ -21,18 +21,11 @@ def delay_ms_col(url):
     return (F.crc32(url.cast("binary")) % 300 + 200).cast("int")
 
 
-def budget_rank(df: DataFrame, host_col: str = "host",
-                order_col: str = "seq") -> DataFrame:
-    """row_number within host by frontier order -> `host_rank` (1-based)."""
-    w = Window.partitionBy(host_col).orderBy(order_col)
-    return df.withColumn("host_rank", F.row_number().over(w))
-
-
 def apply_budget(df: DataFrame, budgets: DataFrame | None,
-                 default_budget: int | None,
+                 fallback_budget: int | None,
                  host_col: str = "host", order_col: str = "seq") -> DataFrame:
     """Adds `fetch_now` boolean. `budgets` is a small (host,
-    max_fetches_per_round) table - broadcast joined; `default_budget` covers
+    max_fetches_per_round) table - broadcast joined; `fallback_budget` covers
     hosts without a row (None = unlimited).
 
     Skew note: row_number forces each host into one partition. A hot host
@@ -41,14 +34,14 @@ def apply_budget(df: DataFrame, budgets: DataFrame | None,
     smallest `budget` seqs, then rank exactly over the pruned (<= 16*budget
     rows/host) remainder. The full frontier never converges on one task.
     """
-    if budgets is None and default_budget is None:
+    if budgets is None and fallback_budget is None:
         return df.withColumn("fetch_now", F.lit(True))
     if budgets is not None:
         df = df.join(F.broadcast(budgets), on=host_col, how="left")
         bud = F.coalesce(F.col("max_fetches_per_round"),
-                         F.lit(default_budget).cast("int"))
+                         F.lit(fallback_budget).cast("int"))
     else:
-        bud = F.lit(default_budget).cast("int")
+        bud = F.lit(fallback_budget).cast("int")
     df = df.withColumn("_budget", bud)
 
     # phase 1: salted partial top-k (cheap prune for hot hosts)

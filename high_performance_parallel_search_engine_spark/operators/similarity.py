@@ -316,9 +316,7 @@ def probe_lists(q: DataFrame, cdf: DataFrame, nprobe: int,
                 dim: int = 64) -> DataFrame:
     """(query_id, qv, list_id): each query's nprobe nearest coarse lists
     by exact integer L2 with the deterministic (_d, list_id) tie-break.
-    q = (query_id, qv quantized); cdf = broadcast (list_id, cent).
-    Shared by ivf_topk and the persisted ann_store so probe selection
-    stays bit-identical across both."""
+    q = (query_id, qv quantized); cdf = broadcast (list_id, cent)."""
     return (q.crossJoin(cdf)
             .withColumn("_d", _int_l2_fixed(F.col("qv"), F.col("cent"), dim))
             .withColumn("_r", F.row_number().over(
@@ -333,9 +331,7 @@ def score_probed_topk(probes: DataFrame, assigned: DataFrame, k: int,
                       dim: int = 64) -> DataFrame:
     """(query_id, neighbor_id, cos, rk): exact quantized cosine within the
     probed lists, per-query top-k with (cos desc, neighbor asc) ordering;
-    the tiny probes table broadcasts into the list join. Shared scoring
-    tail of ivf_topk and ann_store.ivf_store_topk - the bit-parity
-    contract between them lives HERE, not in two copies."""
+    the tiny probes table broadcasts into the list join."""
     # norms once per side BEFORE the join (not per candidate pair);
     # unrolled codegen dots replace the interpreted HOF fold - exact long
     # arithmetic either way, bit-identical scores

@@ -98,10 +98,6 @@ SYNTH_URL_SQL = """
 
 # --- normalize_url in SQL (crawler.c:515-558 port) --------------------------
 
-NORM_SQL = """
-CASE WHEN u2 LIKE '%/' THEN substr(u2, 1, length(u2) - 1) ELSE u2 END
-"""
-
 URL_CTE_SQL = f"""
 WITH raw AS (
   SELECT doc_id, substr({SYNTH_URL_SQL}, 1, 1023) AS url FROM documents
@@ -215,10 +211,6 @@ SHINGLE_CTE = SURF_CTE + """
   SELECT doc_id, shingle FROM sh WHERE shingle IS NOT NULL
 )
 """
-
-
-def _phash_sql(e: str) -> str:
-    return D.phash_sql(e)
 
 
 # ---------------------------------------------------------------------------

@@ -9,9 +9,10 @@ This source turns a directory of such files into the engine's canonical
 zlib for the member inflate and byte-level WARC/HTTP header parsing.
 
 Scale notes (100 TB of .warc.gz):
-- gzip members are not block-splittable without an external index, so the
-  unit of parallelism is the FILE - exactly how production Common Crawl
-  jobs run (a crawl ships ~72k x ~1 GB files; 1000 executors stay busy).
+- gzip members are not block-splittable without an external (CDX-style)
+  offset index, which this reader does not use, so the unit of
+  parallelism is the FILE - exactly how production Common Crawl jobs
+  run (a crawl ships ~72k x ~1 GB files; 1000 executors stay busy).
   `spark.read.format("binaryFile")` gives one task per file and the record
   parsing runs inside mapInPandas, so nothing but the emitted rows is ever
   shuffled.
@@ -388,142 +389,3 @@ def robots_df_from_warc(spark: SparkSession, path: str,
             .when(status >= 300, F.lit(""))
             .otherwise(F.decode(F.col("cap.html"), "utf-8")))
     return best.select("host", body.alias("robots_txt"))
-
-
-# --- CDX-style offset index: record-level random access into .warc.gz ------
-#
-# Common Crawl publishes exactly this alongside its archives (the cdx-*
-# index files): because every record is its own gzip member, a
-# (file, offset, length) triple addresses one record, and a reader can
-# seek + inflate just that member. Two scale limits of the plain reader
-# fall away: parallelism is no longer capped at one task per FILE (index
-# partitions become the unit of work, balanced by repartition), and a
-# SELECTIVE fetch (one host, one url list) reads only the addressed bytes
-# instead of scanning 100 TB of archives.
-
-CDX_SCHEMA = ("url string, warc_ts timestamp, file string, offset long, "
-              "length long, http_status int")
-
-
-def iter_warc_members(data: bytes) -> Iterator[tuple[int, int, bytes]]:
-    """(offset, length, inflated_bytes) per gzip member - the boundaries a
-    CDX index records. Same bounded-chunk rewind walk as _iter_inflated."""
-    view = memoryview(data)
-    pos = 0
-    while pos < len(view):
-        start = pos
-        d = zlib.decompressobj(47)
-        out = []
-        while pos < len(view) and not d.eof:
-            chunk = view[pos:pos + _INFLATE_CHUNK]
-            pos += len(chunk)
-            out.append(d.decompress(chunk))
-        out.append(d.flush())
-        pos -= len(d.unused_data)
-        yield start, pos - start, b"".join(out)
-
-
-def build_cdx_index(spark: SparkSession, path: str,
-                    pattern: str = "*.warc.gz") -> DataFrame:
-    """One pass over the archives (parallel by file, like read_warc_gz)
-    emitting the CDX-style index: (url, warc_ts, file, offset, length,
-    http_status) per response record. Write it as parquet next to the
-    archives and every later selective fetch skips the full scan."""
-    import pandas as pd
-
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", pattern).load(path)
-             .select("path", "content"))
-
-    def index(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = {"url": [], "warc_ts": [], "file": [], "offset": [],
-                    "length": [], "http_status": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                for off, length, raw in iter_warc_members(bytes(content)):
-                    for url, wdate, _html, _lang, status in \
-                            iter_warc_records_raw(raw):
-                        ts = pd.Timestamp(wdate) if wdate else pd.NaT
-                        if ts is not pd.NaT and ts.tzinfo is not None:
-                            ts = ts.tz_convert("UTC").tz_localize(None)
-                        rows["url"].append(url)
-                        rows["warc_ts"].append(ts)
-                        rows["file"].append(fpath)
-                        rows["offset"].append(off)
-                        rows["length"].append(length)
-                        rows["http_status"].append(status)
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(index, schema=CDX_SCHEMA)
-
-
-def iter_warc_records_raw(raw: bytes) -> Iterator[
-        tuple[str, str, bytes, str, int]]:
-    """iter_warc_records over ALREADY-INFLATED bytes (one member's worth):
-    record scanning for the index builder and the seek reader; field
-    extraction is the shared _record_fields."""
-    off = 0
-    while True:
-        while off < len(raw) and raw[off] in (13, 10):
-            off += 1
-        he = raw.find(_CRLF * 2, off)
-        if he < 0:
-            break
-        if not raw.startswith(b"WARC/", off):
-            raise ValueError("not a WARC record header")
-        head = _split_headers(raw[off:he])
-        clen = int(head.get(b"content-length", b"0"))
-        body_start = he + 4
-        if len(raw) < body_start + clen:
-            break  # truncated tail
-        body = raw[body_start:body_start + clen]
-        off = body_start + clen
-        if head.get(b"warc-type") != b"response":
-            continue
-        yield _record_fields(head, body)
-
-
-def read_warc_gz_by_index(spark: SparkSession, index: DataFrame,
-                          partitions: int | None = None) -> DataFrame:
-    """Selective, record-addressed archive reads: for each index row,
-    seek to (file, offset), read `length` bytes, inflate that one gzip
-    member and parse its record. Filter/join the index FIRST (it is a
-    slim parquet-friendly table) - only the addressed records' bytes are
-    ever read, and parallelism is the index partitioning, not the file
-    count. Grouping by file within each Arrow batch keeps one open handle
-    per file per batch; sorting by offset makes the reads sequential on
-    spinning/object storage."""
-    import pandas as pd
-
-    slim = index.select("url", "file", "offset", "length")
-    if partitions:
-        slim = slim.repartition(partitions, "file")
-
-    def fetch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = {"url": [], "warc_ts": [], "html": [], "lang": []}
-            for fpath, grp in pdf.groupby("file"):
-                local = fpath[len("file:"):] if fpath.startswith("file:") \
-                    else fpath
-                with open(local, "rb") as fh:
-                    for _, r in grp.sort_values("offset").iterrows():
-                        fh.seek(int(r["offset"]))
-                        raw = gzip.decompress(fh.read(int(r["length"])))
-                        for url, wdate, html, lang, _st in \
-                                iter_warc_records_raw(raw):
-                            if url != r["url"]:
-                                continue  # multi-record member: pick ours
-                            if wdate:
-                                ts = pd.Timestamp(wdate)
-                                if ts.tzinfo is not None:
-                                    ts = ts.tz_convert("UTC") \
-                                           .tz_localize(None)
-                            else:
-                                ts = pd.NaT
-                            rows["url"].append(url)
-                            rows["warc_ts"].append(ts)
-                            rows["html"].append(html)
-                            rows["lang"].append(lang or None)
-            yield pd.DataFrame(rows)
-
-    return slim.mapInPandas(fetch, schema=PAGES_SCHEMA)

@@ -1,1 +1,1 @@
-"""Structured Streaming formulation of the crawl pipeline."""
+"""Structured Streaming index maintenance (index_stream)."""

@@ -1,7 +1,5 @@
-"""Coverage for the throughput round path, streaming formulation,
-multimodal plumbing, and physical plan shapes."""
-
-import tempfile
+"""Coverage for the throughput round path, multimodal plumbing, and
+physical plan shapes."""
 
 import pandas as pd
 import pytest
@@ -66,55 +64,6 @@ def test_fast_round_resume(spark, tmp_path):
     got = {r["url"] for r in
            spark.read.parquet(f"{wd}/round=*/pages.parquet").collect()}
     assert got == set(expected.fetch_order)
-
-
-def test_streaming_politeness_monitor(spark, tmp_path):
-    from high_performance_parallel_search_engine_spark.streaming.frontier_stream import (
-        politeness_monitor,
-        read_pages_stream,
-    )
-
-    rows = list(corpus_rows(n_hosts=2, pages_per_host=10, n_medium=4,
-                            with_oracle_text=False))
-    src = str(tmp_path / "pages_src")
-    _pages_df(spark, rows).write.parquet(src)
-    stream = read_pages_stream(spark, src)
-    assert stream.isStreaming
-    mon = politeness_monitor(stream, window="1 hour", watermark="2 hours")
-    q = (mon.writeStream.format("memory").queryName("mon")
-         .outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    out = spark.sql("select * from mon").collect()
-    assert out
-    hosts = {r["host"] for r in out}
-    assert "medium.com" in hosts
-    total = sum(r["fetches"] for r in out)
-    assert total == len(rows)
-
-
-def test_streaming_candidates_foreachbatch(spark, tmp_path):
-    from high_performance_parallel_search_engine_spark.streaming.frontier_stream import (
-        stream_candidates_to_frontier,
-    )
-
-    rows = list(corpus_rows(n_hosts=1, pages_per_host=12, n_medium=0,
-                            with_oracle_text=False))
-    src = str(tmp_path / "src")
-    _pages_df(spark, rows).write.parquet(src)
-    seen = str(tmp_path / "seen")
-    spark.createDataFrame([(page_url(0, 0),)], "url string") \
-        .write.parquet(seen)
-    out = str(tmp_path / "out")
-    q = stream_candidates_to_frontier(
-        spark, src, seen, out, str(tmp_path / "ck2"),
-        base_domain="https://host0.example.com")
-    q.awaitTermination(180)
-    got = spark.read.parquet(out)
-    urls = {r["url"] for r in got.collect()}
-    assert urls  # new candidates discovered
-    assert page_url(0, 0) not in urls  # seen urls were anti-joined away
 
 
 def test_multimodal_feature_plumbing(spark):
@@ -470,6 +419,53 @@ def test_kmeans_centroids_local_matches_spark(spark):
             local_c = kmeans_centroids_local(
                 f"{sf_dir}/embeddings.parquet", n_lists=n_lists, iters=iters)
             assert spark_c == local_c, (sf_dir, n_lists, iters)
+
+
+def test_ivf_topk_is_exact_cosine_within_the_probed_lists(spark):
+    """ivf_topk returns, per query, the exact cosine top-k over the
+    vectors assigned to that query's nprobe nearest lists (integer L2,
+    ties to the lower list id), recomputed here on the driver; probing
+    every list gives the brute-force cosine_topk."""
+    from pyspark.sql import functions as F
+
+    from high_performance_parallel_search_engine_spark.operators.similarity import (
+        cosine_topk,
+        ivf_assign,
+        ivf_centroids,
+        ivf_topk,
+        quant_col,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    qids = [r["vec_id"] for r in
+            emb.select("vec_id").orderBy("vec_id").limit(3).collect()]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(ivf_topk(emb, qids, k=5, n_lists=8, nprobe=8)) == \
+        rows(cosine_topk(emb, qids, k=5))
+
+    cents = ivf_centroids(8)
+    qv = {r["vec_id"]: r["v"] for r in
+          emb.where(F.col("vec_id").isin(qids))
+          .select("vec_id", quant_col(F.col("embedding")).alias("v"))
+          .collect()}
+    lists = ivf_assign(emb, n_lists=8).cache()
+    got = rows(ivf_topk(emb, qids, k=5, n_lists=8, nprobe=2))
+    want = []
+    for q in qids:
+        d = [sum((a - b) ** 2 for a, b in zip(qv[q], c)) for c in cents]
+        probed = sorted(range(8), key=lambda j: (d[j], j))[:2]
+        ids = lists.where(F.col("list_id").isin(probed)).select("vec_id")
+        # the probed lists' vectors, plus the query row when it sits in
+        # a list it does not probe
+        sub = emb.join(ids, "vec_id").where(F.col("vec_id") != q) \
+            .unionByName(emb.where(F.col("vec_id") == q))
+        assert sub.count() < emb.count()     # the probe prunes lists
+        want += rows(cosine_topk(sub, [q], k=5))
+    lists.unpersist()
+    assert got == sorted(want)
 
 
 def test_connected_components_and_survivors(spark):

@@ -1,7 +1,12 @@
 """A crawl round's commit: the per-round metrics.json counts equal the
-counts recomputed from that round's parquet outputs, and a driver killed
-while writing a round's manifest resumes from the previous commit."""
+counts recomputed from that round's parquet outputs, a crawl killed
+while writing a round's manifest resumes from the previous commit, and
+a resume accepts older manifests but refuses url_seen deltas it would
+misread."""
 
+import json
+import shutil
+from dataclasses import replace
 from pathlib import Path
 
 import pytest
@@ -35,9 +40,12 @@ def _events(spark, wd):
                     "action", "delay_ms").orderBy("seq").collect()]
 
 
-def _assert_metrics_match_outputs(spark, wd, config, state):
-    import json
+def _url_seen(spark, wd):
+    return {r["url"] for r in spark.read.parquet(
+        f"{wd}/round=*/url_seen_delta.parquet").collect()}
 
+
+def _assert_metrics_match_outputs(spark, wd, config, state):
     rounds = sorted(p for p in Path(wd).glob("round=0*"))
     assert rounds and len(rounds) == len(state.metrics)
     for d in rounds:
@@ -129,3 +137,55 @@ def test_manifest_write_killed_midway_resumes(spark, pages, tmp_path,
     state = run_crawl(spark, pages, SEEDS, wd, config, resume=True)
     assert state.stopped
     assert _events(spark, wd) == _events(spark, full)
+
+
+# exact parity shape (tests/test_crawl_parity.py) on this module's corpus
+PARITY = CrawlConfig(arbitration="exact", max_depth=3, max_pages=60)
+
+
+def test_resume_accepts_manifests_with_removed_config_keys(spark, pages,
+                                                          tmp_path):
+    """Manifests written before two settings were removed from CrawlConfig
+    still carry them; load_state drops them and the resumed crawl equals
+    the uninterrupted one."""
+    full = str(tmp_path / "full")
+    full_state = run_crawl(spark, pages, SEEDS, full, PARITY)
+    assert len(full_state.metrics) > 2
+
+    wd = str(tmp_path / "old")
+    first = run_crawl(spark, pages, SEEDS, wd, replace(PARITY, max_rounds=2))
+    assert len(first.metrics) == 2 and not first.stopped
+    for mf in Path(wd).glob("round=*/manifest.json"):
+        m = json.loads(mf.read_text())
+        m["config"].update(max_rounds=64, use_bloom=True, default_budget=None)
+        mf.write_text(json.dumps(m))
+    state = run_crawl(spark, pages, SEEDS, wd, resume=True)
+    assert state.stopped == full_state.stopped
+    assert _events(spark, wd) == _events(spark, full)
+    assert _url_seen(spark, wd) == _url_seen(spark, full)
+
+
+def test_resume_refuses_url_seen_delta_without_url_column(spark, pages,
+                                                          tmp_path):
+    """url_seen deltas are read with an explicit `url string` schema, so a
+    delta whose column is named otherwise would read as NULL urls and the
+    anti-join would re-admit seen urls. Both resume forms refuse it, and
+    the refused rewind deletes no round."""
+    import pyarrow.parquet as pq
+
+    wd = str(tmp_path / "wd")
+    state = run_crawl(spark, pages, SEEDS, wd, PARITY)
+    assert len(state.metrics) > 2
+    d = Path(wd) / "round=00000" / "url_seen_delta.parquet"
+    table = pq.read_table(d)
+    table = table.rename_columns(
+        ["u" if c == "url" else c for c in table.column_names])
+    shutil.rmtree(d)
+    d.mkdir()
+    pq.write_table(table, d / "part-00000.parquet")
+
+    with pytest.raises(ValueError, match="round=00000"):
+        run_crawl(spark, pages, SEEDS, wd, resume=True)
+    with pytest.raises(ValueError, match="round=00000"):
+        run_crawl(spark, pages, SEEDS, wd, resume_from=1)
+    assert (Path(wd) / "round=00002" / "manifest.json").exists()

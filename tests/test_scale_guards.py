@@ -141,7 +141,7 @@ def test_politeness_budget_hot_host_skew(spark):
     budgets = spark.createDataFrame(
         [("hot.example.com", 5)], "host string, max_fetches_per_round int")
 
-    out = apply_budget(frontier, budgets, default_budget=None)
+    out = apply_budget(frontier, budgets, fallback_budget=None)
     fetched = out.where(F.col("fetch_now"))
     hot_fetched = sorted(r["seq"] for r in
                          fetched.where(F.col("host") == "hot.example.com")
@@ -153,6 +153,39 @@ def test_politeness_budget_hot_host_skew(spark):
     # frontier: phase 1 pre-prunes to <= 16 * budget rows per host
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Window") >= 2  # salted phase + exact phase
+
+
+def test_politeness_fallback_budget_covers_hosts_without_a_row(spark):
+    """apply_budget: a host with a budget row keeps its own budget, every
+    other host gets `fallback_budget`, and with no budget table at all
+    the fallback alone applies; each host keeps its smallest seqs."""
+    from pyspark.sql import functions as F
+
+    from high_performance_parallel_search_engine_spark.operators.politeness import (
+        apply_budget,
+    )
+
+    frontier = spark.createDataFrame(
+        [(h, f"https://{h}/{i}", s) for s, (h, i) in enumerate(
+            (h, i) for i in range(5) for h in ("a.example", "b.example",
+                                               "c.example"))],
+        "host string, url string, seq long")
+    budgets = spark.createDataFrame(
+        [("a.example", 3)], "host string, max_fetches_per_round int")
+
+    def fetched(out):
+        by_host = {}
+        for r in out.where(F.col("fetch_now")).collect():
+            by_host.setdefault(r["host"], []).append(r["seq"])
+        return {h: sorted(s) for h, s in by_host.items()}
+
+    assert fetched(apply_budget(frontier, budgets, fallback_budget=1)) == {
+        "a.example": [0, 3, 6], "b.example": [1], "c.example": [2]}
+    assert fetched(apply_budget(frontier, None, fallback_budget=2)) == {
+        "a.example": [0, 3], "b.example": [1, 4], "c.example": [2, 5]}
+    out = apply_budget(frontier, budgets, fallback_budget=None)
+    assert fetched(out)["b.example"] == [1, 4, 7, 10, 13]
+    assert out.count() == 15
 
 
 def test_doc_shingles_plan_keeps_projection_boundary(spark):

@@ -1,48 +1,7 @@
-"""applyInPandasWithState tracker + multimodal resize/frame-sample seams."""
+"""Multimodal codecs and the resize/frame-sample seams."""
 
 import pandas as pd
 import pytest
-
-from high_performance_parallel_search_engine_spark.sources.synth import corpus_rows
-
-
-def _pages_df(spark, rows):
-    pdf = pd.DataFrame(rows)[["url", "warc_ts", "html", "lang"]]
-    return spark.createDataFrame(pdf)
-
-
-def test_stateful_host_budget_tracker(spark, tmp_path):
-    from high_performance_parallel_search_engine_spark.streaming.stateful import (
-        host_budget_tracker,
-    )
-
-    rows = list(corpus_rows(n_hosts=2, pages_per_host=8, n_medium=3,
-                            with_oracle_text=False))
-    src = str(tmp_path / "src")
-    # two separate files -> multiple input splits for the stream
-    half = len(rows) // 2
-    _pages_df(spark, rows[:half]).write.parquet(src + "/a.parquet")
-    _pages_df(spark, rows[half:]).write.mode("append").parquet(src + "/a.parquet")
-    stream = (spark.readStream
-              .schema("url string, warc_ts timestamp, html binary, lang string")
-              .option("maxFilesPerTrigger", 1).parquet(src + "/a.parquet"))
-    out = host_budget_tracker(stream, budget=5)
-    q = (out.writeStream.format("memory").queryName("budget_track")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    res = spark.sql(
-        "select host, max(total_fetches) f, max(over_budget) ob "
-        "from budget_track group by host").collect()
-    got = {r["host"]: (r["f"], r["ob"]) for r in res}
-    expected_counts = {}
-    for r in rows:
-        h = r["url"].split("//")[1].split("/")[0]
-        expected_counts[h] = expected_counts.get(h, 0) + 1
-    for h, n in expected_counts.items():
-        assert got[h][0] == n, (h, got)
-        assert got[h][1] == (n > 5)
 
 
 def test_resize_and_frame_sample(spark):
@@ -161,95 +120,6 @@ def test_bmp_resize_real(spark):
     assert resized  # only the image/bmp rows survive the kind filter
     for r in resized:
         assert decode_bmp(bytes(r["payload"]))[:2] == (4, 4)
-
-
-def test_stateful_url_seen_tracker_dedups_across_batches(spark, tmp_path):
-    """First occurrence ever passes; repeats (within AND across
-    micro-batches) are dropped."""
-    from high_performance_parallel_search_engine_spark.streaming.stateful import (
-        url_seen_tracker,
-    )
-
-    src = str(tmp_path / "urls")
-    b1 = [(f"https://h.com/p/{i}",) for i in range(10)]
-    b2 = [(f"https://h.com/p/{i}",) for i in range(5, 15)]  # 5 repeats
-    b2 += [("https://h.com/p/3",)]                          # another repeat
-    spark.createDataFrame(b1, "url string").write.parquet(src + "/u")
-    spark.createDataFrame(b2, "url string").write.mode("append") \
-        .parquet(src + "/u")
-    stream = (spark.readStream.schema("url string")
-              .option("maxFilesPerTrigger", 1).parquet(src + "/u"))
-    out = url_seen_tracker(stream, n_shards=8)
-    q = (out.writeStream.format("memory").queryName("seen_track")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ck_seen"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got = [r["url"] for r in spark.sql("select url from seen_track").collect()]
-    assert sorted(got) == sorted(f"https://h.com/p/{i}" for i in range(15))
-    assert len(got) == len(set(got))  # no url emitted twice
-
-    # state encoding: packed 16-byte records (8B shard xxhash64 + 8B
-    # independent blake2b), not csv - total state bytes == 16 * unique urls
-    state = (spark.read.format("statestore")
-             .load(str(tmp_path / "ck_seen"))
-             .select("value.groupState.seen").collect())
-    assert sum(len(bytes(r["seen"])) for r in state) == 16 * 15
-    for r in state:
-        assert len(bytes(r["seen"])) % 16 == 0
-
-
-def test_url_key_collision_resistance():
-    """Two urls sharing a shard (same pmod) still produce distinct 16-byte
-    keys: the second 8 bytes are an independent hash of the full url."""
-    from high_performance_parallel_search_engine_spark.streaming.stateful import (
-        _url_key,
-    )
-
-    k1 = _url_key("https://a.com/x", 42)
-    k2 = _url_key("https://b.com/y", 42)  # same routing hash (simulated)
-    assert len(k1) == len(k2) == 16
-    assert k1[:8] == k2[:8] and k1[8:] != k2[8:]
-
-
-def test_stateful_url_seen_tracker_state_bytes_at_100k(spark, tmp_path):
-    """Round-3 verdict item 6: the packed-blob invariant at realistic
-    volume - 135k urls (100k distinct, overlaps across batches) through 3
-    micro-batches; every shard's state blob stays 16-byte-aligned and the
-    TOTAL state is byte-exactly 16 * distinct urls (no per-entry encoding
-    overhead, no growth from repeats)."""
-    from pyspark.sql import functions as F
-
-    from high_performance_parallel_search_engine_spark.streaming.stateful import (
-        url_seen_tracker,
-    )
-
-    src = str(tmp_path / "urls100k")
-    # three overlapping windows over 0..99999: 135k rows, 100k distinct
-    for lo, hi in ((0, 45_000), (30_000, 75_000), (55_000, 100_000)):
-        (spark.range(lo, hi)
-         .select(F.concat(F.lit("https://h"), (F.col("id") % 97),
-                          F.lit(".com/p/"), F.col("id")).alias("url"))
-         .coalesce(1)
-         .write.mode("append").parquet(src + "/u"))
-    stream = (spark.readStream.schema("url string")
-              .option("maxFilesPerTrigger", 1).parquet(src + "/u"))
-    out = url_seen_tracker(stream, n_shards=32)
-    q = (out.writeStream.format("memory").queryName("seen_100k")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ck_100k"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    agg = spark.sql(
-        "select count(*) n, count(distinct url) d from seen_100k").collect()[0]
-    assert agg["n"] == 100_000 and agg["d"] == 100_000
-
-    state = (spark.read.format("statestore")
-             .load(str(tmp_path / "ck_100k"))
-             .select("value.groupState.seen").collect())
-    sizes = [len(bytes(r["seen"])) for r in state]
-    assert all(s % 16 == 0 for s in sizes)
-    assert sum(sizes) == 16 * 100_000
 
 
 def test_avi_codec_round_trip_and_real_frame_sampling(spark):
@@ -421,43 +291,3 @@ def test_png_resize_real_and_seam_wiring(spark):
            for r in resized.collect()}
     assert set(got) == {3, 7, 11, 15}
     assert all(v[0] == 3 and v[1] == 2 for v in got.values())
-
-
-def test_stateful_content_seen_tracker_dedups_across_batches(spark,
-                                                             tmp_path):
-    """Streaming exact-content dedup: first copy of each md5(text) ever
-    passes (min doc_id inside a batch), repeats drop across batches; the
-    state blob is exactly 16 bytes per unique document."""
-    from high_performance_parallel_search_engine_spark.streaming.stateful import (
-        content_seen_tracker,
-    )
-
-    src = str(tmp_path / "docs")
-    b1 = [(3, "alpha text"), (1, "alpha text"), (2, "bravo text"),
-          (7, None)]
-    b2 = [(4, "alpha text"), (5, "charlie text"), (6, "bravo text"),
-          (8, None)]
-    spark.createDataFrame(b1, "doc_id long, text string") \
-        .coalesce(1).write.parquet(src + "/d")
-    spark.createDataFrame(b2, "doc_id long, text string") \
-        .coalesce(1).write.mode("append").parquet(src + "/d")
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).parquet(src + "/d"))
-    out = content_seen_tracker(stream, n_shards=4)
-    q = (out.writeStream.format("memory").queryName("content_track")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ck_content"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got = sorted(r["doc_id"] for r in
-                 spark.sql("select doc_id from content_track").collect())
-    # exactly one survivor per distinct content (alpha, bravo, charlie,
-    # and the null-text sentinel group - which must not crash and must
-    # collapse to ONE doc like exact_dedup's md5(NULL) grouping). Batch
-    # delivery order depends on file mtimes, so both orders are legal:
-    assert got in ([1, 2, 5, 7], [4, 5, 6, 8])
-
-    state = (spark.read.format("statestore")
-             .load(str(tmp_path / "ck_content"))
-             .select("value.groupState.seen").collect())
-    assert sum(len(bytes(r["seen"])) for r in state) == 16 * 4

@@ -355,48 +355,6 @@ def test_cli_pages_warc_resume_reuses_completed_staging(spark, tmp_path,
     assert "Parsed WARC archives" in out4
 
 
-def test_cdx_index_and_seek_reads(spark, tmp_path):
-    """CDX-style offset index: build_cdx_index addresses every response
-    record by (file, offset, length); read_warc_gz_by_index seek-reads
-    exactly the addressed records, byte-identical to the full scan - the
-    record-level random access that lifts the one-task-per-file cap and
-    makes selective fetches skip the archive scan entirely."""
-    from high_performance_parallel_search_engine_spark.sources.warc import (
-        build_cdx_index,
-        read_warc_gz_by_index,
-    )
-
-    rows = list(corpus_rows(n_hosts=2, pages_per_host=8, n_medium=2,
-                            with_oracle_text=False))
-    src = _pages_df(spark, rows)
-    out = str(tmp_path / "warc")
-    write_warc_gz(src, out, records_per_file=6)
-
-    index = build_cdx_index(spark, out)
-    idx_rows = index.collect()
-    full = {r["url"]: r for r in read_warc_gz(spark, out).collect()}
-    assert {r["url"] for r in idx_rows} == set(full)
-    assert all(r["length"] > 0 and r["offset"] >= 0 for r in idx_rows)
-    assert all(r["http_status"] == 200 for r in idx_rows)
-
-    # full indexed read == full scan (url, bytes, ts)
-    back = {r["url"]: r
-            for r in read_warc_gz_by_index(spark, index,
-                                           partitions=4).collect()}
-    assert set(back) == set(full)
-    for url in full:
-        assert bytes(back[url]["html"]) == bytes(full[url]["html"])
-        assert back[url]["warc_ts"] == full[url]["warc_ts"]
-
-    # SELECTIVE read: filter the slim index, only those records return
-    import pyspark.sql.functions as F
-
-    some = index.where(F.col("url").contains("host1")).orderBy("url").limit(5)
-    got = read_warc_gz_by_index(spark, some).collect()
-    want = {r["url"] for r in some.collect()}
-    assert {r["url"] for r in got} == want and len(got) == len(want)
-
-
 def test_cli_export_warc_round_trips(spark, tmp_path, capsys):
     """--export-warc re-emits exactly the fetched pages as .warc.gz; the
     archives read back byte-identical and re-crawl to the same result."""
