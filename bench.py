@@ -19,6 +19,14 @@ Phases:
 7. dedup/ANN sf1 (10x) scale probe: wall growth for the pair operators on
    a synthesized 10x-distinct corpus (round-4 verdict #5)
 
+Subcommands (each prints ONE JSON line; no argument runs every phase):
+  python bench.py queries [name ...]    phase 1 only, for the named
+                                        headline queries (default: all)
+  python bench.py warm                  phase 1b only
+  python bench.py plans <tag> [name ...]
+      write .explain("formatted") of each named headline query (default:
+      all) to plans/r06/<name>_<tag>.txt
+
 Stage-vs-kernel methodology (round-4 ADVICE): every crawl run is paired
 with a kernel-ceiling run in the same co-tenancy window, and the official
 extract_stage_vs_kernel ratio is the best SAME-PAIR ratio at each pinning
@@ -145,14 +153,19 @@ def gated(phase_name: str, fn):
     return out, rec
 
 
-def phase_queries(spark) -> tuple[dict[str, float], dict]:
+def phase_queries(spark, names: list[str] = HEADLINE
+                  ) -> tuple[dict[str, float], dict]:
     """Median of 3 per headline query (single-shot timings on this VM swing
     +-30% run to run - round-2 verdict item 2), bracketed by the busy-loop
     control so cross-round comparisons can normalize for host co-tenancy;
-    the whole phase re-runs once if its controls flag co-tenancy."""
+    the whole phase re-runs once if its controls flag co-tenancy. Each
+    query's jobs carry the description `q:<name>`, and the jobs one run
+    of it takes are logged with its timing."""
     import statistics
 
     from high_performance_parallel_search_engine_spark.oracles import QUERIES
+
+    sc = spark.sparkContext
 
     def run_once():
         timings = {}
@@ -161,16 +174,21 @@ def phase_queries(spark) -> tuple[dict[str, float], dict]:
         # url_normalize's 5.2 s was warmup). Must NOT itself be a HEADLINE
         # query, else that query's timing is self-warmed and biased low.
         QUERIES["url_priority"](spark, SF_DIR).count()
-        for name in HEADLINE:
+        for name in names:
             fn = QUERIES[name]
             walls = []
+            sc.setJobDescription(f"q:{name}")
             for _ in range(3):
+                j0 = set(sc.statusTracker().getJobIdsForGroup(None))
                 t0 = time.monotonic()
                 n = fn(spark, SF_DIR).count()
                 walls.append(time.monotonic() - t0)
+                jobs = len(set(sc.statusTracker().getJobIdsForGroup(None))
+                           - j0)
+            sc.setJobDescription(None)
             timings[name] = round(statistics.median(walls), 3)
             print(f"  {name}: {timings[name]}s median of "
-                  f"{[round(w, 2) for w in walls]} ({n} rows)",
+                  f"{[round(w, 2) for w in walls]} ({n} rows, {jobs} jobs)",
                   file=sys.stderr)
         return timings
 
@@ -1170,5 +1188,53 @@ def main() -> None:
     print(line)
 
 
+def phase_plans(spark, tag: str, names: list[str]) -> list[str]:
+    """Write the formatted physical plan of each named headline query to
+    plans/r06/<name>_<tag>.txt (before/after pairs for a plan change);
+    returns the paths written."""
+    from high_performance_parallel_search_engine_spark.oracles import QUERIES
+    from high_performance_parallel_search_engine_spark.plans.lineage import (
+        explain_text,
+    )
+
+    dest = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "plans", "r06")
+    os.makedirs(dest, exist_ok=True)
+    paths = []
+    for name in names:
+        path = os.path.join(dest, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(explain_text(QUERIES[name](spark, SF_DIR), "formatted"))
+        print(f"  wrote {path}", file=sys.stderr)
+        paths.append(path)
+    return paths
+
+
+def subcommand(argv: list[str]) -> None:
+    """`queries [name ...]`, `warm` or `plans <tag> [name ...]`: one phase
+    on one session, printed as one JSON line."""
+    cmd, args = argv[0], argv[1:]
+    if cmd not in ("queries", "warm", "plans") or (cmd == "plans"
+                                                    and not args):
+        raise SystemExit("usage: bench.py [queries [name ...] | warm | "
+                         "plans <tag> [name ...]]")
+    spark = build_session(CPUS)
+    try:
+        if cmd == "queries":
+            timings, ctl = phase_queries(spark, args or HEADLINE)
+            out = {"queries": timings, "query_phase_control": ctl}
+        elif cmd == "warm":
+            out = {"query_warm": phase_query_warm(spark)}
+        else:
+            out = {"plans": phase_plans(spark, args[0],
+                                        args[1:] or HEADLINE)}
+    finally:
+        spark.stop()
+    print(json.dumps(out, separators=(",", ":")))
+
+
 if __name__ == "__main__":
-    main()
+    if len(sys.argv) > 1:
+        subcommand(sys.argv[1:])
+    else:
+        main()

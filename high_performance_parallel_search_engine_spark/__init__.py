@@ -5,7 +5,7 @@ engine PramithaMJ/High-Performance-Parallel-Search-Engine: a distributed URL
 frontier over parquet/Iceberg-style snapshot tables of Common-Crawl-style
 pages ``(url, warc_ts, html, text, lang)``, with
 
-- exact URL canonicalization + URL-seen dedup (bloom pre-filter + anti-join),
+- exact URL canonicalization + URL-seen dedup (xxhash64 left-anti join),
 - per-host politeness budgets, robots rules, priority scheduling,
 - vectorized Arrow/pandas UDFs for byte-identical HTML->text extraction and
   link extraction,
@@ -21,7 +21,6 @@ Layout:
   sources/    synthetic corpus generator + testdata table readers
   operators/  crawl rounds, dedup, politeness, index, ranking, similarity
   plans/      lineage / explain capture helpers
-  streaming/  Structured Streaming frontier formulation
 """
 
 __version__ = "0.1.0"

@@ -257,8 +257,7 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.8,
     missed) - the standard trade at 10^10 rows; raise recall by lowering
     n_planes or probing neighbor buckets. The same bucket-size cap as
     minhash_lsh_pairs bounds within-bucket pair blowup."""
-    from .similarity import (hyperplane_lsh_buckets, int_dot_fixed,
-                             quant_col)
+    from .similarity import hyperplane_lsh_buckets, int_dot, quant_col
 
     # slim (vec_id, bucket) table materialized once - feeds the hot-bucket
     # agg, the anti-join and the candidate join (see minhash_lsh_pairs)
@@ -270,21 +269,19 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.8,
                .where(F.col("_n") > max_bucket_size).select("bucket"))
         buckets = buckets.join(F.broadcast(hot), "bucket", "left_anti")
     # the checkpointed table carries each vector's norm, computed ONCE per
-    # row instead of once per candidate pair side; dots are unrolled
-    # codegen arithmetic (similarity.int_dot_fixed) - exact long sums,
-    # bit-identical cosines
-    dim = 64
+    # row instead of once per candidate pair side; dots are exact long
+    # sums (similarity.int_dot), so cosines are bit-identical
     wb = (embeddings.select(F.col(id_col).alias("vec_id"),
                             quant_col(F.col(vec_col)).alias("v"))
           .join(buckets, "vec_id")
           .withColumn("nrm", F.sqrt(
-              int_dot_fixed(F.col("v"), F.col("v"), dim).cast("double")))
+              int_dot(F.col("v"), F.col("v")).cast("double")))
           .localCheckpoint(eager=False))  # reused by both join sides
     a = wb.select(F.col("vec_id").alias("doc_a"), F.col("v").alias("va"),
                   F.col("nrm").alias("na"), "bucket")
     b = wb.select(F.col("vec_id").alias("doc_b"), F.col("v").alias("vb"),
                   F.col("nrm").alias("nb"), "bucket")
-    dot = int_dot_fixed(F.col("va"), F.col("vb"), dim).cast("double")
+    dot = int_dot(F.col("va"), F.col("vb")).cast("double")
     return (a.join(b, "bucket")
             .where(F.col("doc_a") < F.col("doc_b"))
             .withColumn("cos", F.round(dot / (F.col("na") * F.col("nb")), 6))

@@ -57,20 +57,6 @@ MANIFEST_NAME = "_bucketed_store.json"
 # directory without polluting the postings scan
 DOC_STATS_DIR = "_doc_stats"
 DOC_MAP_DIR = "_doc_map"
-# versioned-store layout (streaming republish): the root holds immutable
-# pv%06d publish dirs plus a CURRENT pointer file naming the live one -
-# a republish never touches files a reader of the old publish holds open
-CURRENT_NAME = "CURRENT"
-
-
-def resolve_store_dir(path: str) -> str:
-    """A store path is either a plain store directory or a versioned root
-    (CURRENT pointer -> live pv dir). Readers call this once per open."""
-    cur = os.path.join(path, CURRENT_NAME)
-    if os.path.isfile(cur):
-        with open(cur) as f:
-            return os.path.join(path, f.read().strip())
-    return path
 
 
 def _pin_bucketed_scan(spark: SparkSession) -> None:
@@ -82,8 +68,7 @@ def save_bucketed_table(df: DataFrame, path: str, table: str,
                         buckets: int = DEFAULT_BUCKETS,
                         bucket_col: str = "term",
                         sort_col: str = "term",
-                        schema_ddl: str | None = None,
-                        extra_meta: dict | None = None) -> DataFrame:
+                        schema_ddl: str | None = None) -> DataFrame:
     """Generic core: write ANY table bucketed+sorted on a key column as a
     self-describing external directory (the sidecar records the DDL, so
     register_postings_store re-attaches any schema - it was always
@@ -105,7 +90,7 @@ def save_bucketed_table(df: DataFrame, path: str, table: str,
         .saveAsTable(table))
     manifest = {"table": table, "buckets": buckets,
                 "bucket_col": bucket_col, "sort_col": sort_col,
-                "schema_ddl": schema_ddl, **(extra_meta or {})}
+                "schema_ddl": schema_ddl}
     tmp = os.path.join(path, MANIFEST_NAME + ".tmp")
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=1)
@@ -115,8 +100,7 @@ def save_bucketed_table(df: DataFrame, path: str, table: str,
 
 def save_postings_bucketed(postings: DataFrame, path: str,
                            table: str = "postings_store",
-                           buckets: int = DEFAULT_BUCKETS,
-                           extra_meta: dict | None = None) -> DataFrame:
+                           buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Write postings as an external term-bucketed table at `path` and
     return the registered table. Bucket count is a layout decision made
     once at save time: size B so one bucket's posting lists fit an executor
@@ -128,8 +112,7 @@ def save_postings_bucketed(postings: DataFrame, path: str,
         F.col("tf").cast("bigint").alias("tf"),
     )
     # the canonical select above IS the schema pin; the DDL auto-derives
-    return save_bucketed_table(canonical, path, table, buckets,
-                               extra_meta=extra_meta)
+    return save_bucketed_table(canonical, path, table, buckets)
 
 
 def _table_location(spark: SparkSession, table: str) -> str | None:
@@ -170,8 +153,7 @@ def register_postings_store(spark: SparkSession, path: str,
 def publish_store(postings: DataFrame, path: str,
                   table: str = "postings_store",
                   buckets: int = DEFAULT_BUCKETS,
-                  doc_map: DataFrame | None = None,
-                  extra_meta: dict | None = None) -> DataFrame:
+                  doc_map: DataFrame | None = None) -> DataFrame:
     """One self-contained serving artifact: the term-bucketed postings
     table plus everything a BM25 server needs beside it - `_doc_stats`
     (dl = sum(tf) per doc, exactly build_doc_stats' value, derived in one
@@ -179,7 +161,7 @@ def publish_store(postings: DataFrame, path: str,
     (doc_id, url) so results resolve to urls without the source corpus.
     Returns the registered store table."""
     tbl = save_postings_bucketed(postings, path, table=table,
-                                 buckets=buckets, extra_meta=extra_meta)
+                                 buckets=buckets)
     stats = tbl.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats.write.mode("overwrite").parquet(os.path.join(path, DOC_STATS_DIR))
     if doc_map is not None:
@@ -190,11 +172,9 @@ def publish_store(postings: DataFrame, path: str,
 
 def open_store(spark: SparkSession, path: str, table: str | None = None
                ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
-    """Query-side entry for a published store directory (plain, or a
-    versioned root - resolved through CURRENT): (postings table,
+    """Query-side entry for a published store directory: (postings table,
     doc_stats, doc_map or None) - a fresh session/catalog re-attaches via
     the sidecar DDL, ready for rank_bm25(tbl, stats, query)."""
-    path = resolve_store_dir(path)
     tbl = register_postings_store(spark, path, table=table)
     stats = spark.read.parquet(os.path.join(path, DOC_STATS_DIR))
     map_dir = os.path.join(path, DOC_MAP_DIR)

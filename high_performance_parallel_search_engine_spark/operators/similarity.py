@@ -27,28 +27,21 @@ def quant_col(vec: Column) -> Column:
 
 
 def int_dot(a: Column, b: Column) -> Column:
-    """Exact integer dot product for arrays of unknown length. Higher-order
-    functions are interpreted (no whole-stage codegen) - prefer
-    int_dot_fixed when the dimensionality is statically known."""
+    """Exact integer dot product as one interpreted higher-order fold.
+
+    MEASURED NEGATIVE RESULT, kept as the record: unrolling the dot to
+    `dim` explicit getItem products (the DuckDB oracle's shape) ran 2-3x
+    SLOWER than this fold on this corpus (cosine_topk noop min 0.47 s ->
+    1.66 s, lsh_buckets 1.52 -> 3.10) - the 64-term chains blow past the
+    codegen method-size limits and the whole expression falls back to
+    per-node interpreted eval, which is worse than one HOF fold."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                        F.lit(0).cast("long"), lambda s, x: s + x)
 
 
-def int_dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """MEASURED NEGATIVE RESULT, kept as the record: unrolling the dot to
-    `dim` explicit getItem products (the DuckDB oracle's shape) ran 2-3x
-    SLOWER than the interpreted fold on this corpus (cosine_topk noop min
-    0.47 s -> 1.66 s, lsh_buckets 1.52 -> 3.10) - the 64-term chains blow
-    past the codegen method-size limits and the whole expression falls
-    back to per-node interpreted eval, which is worse than one HOF fold.
-    Delegates to int_dot; `dim` is kept as the call-site contract so a
-    future codegen-friendly form can slot in."""
-    return int_dot(a, b)
-
-
 def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                dim: int = 64) -> DataFrame:
+                id_col: str = "vec_id", vec_col: str = "embedding"
+                ) -> DataFrame:
     """Exact brute-force cosine top-k: (query_id, neighbor_id, cos) with the
     query rows broadcast against the corpus; ordering (cos desc, neighbor
     asc); self-matches excluded; cos rounded to 6.
@@ -63,12 +56,12 @@ def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
          .select(F.col(id_col).alias("query_id"),
                  quant_col(F.col(vec_col)).alias("qv"))
          .withColumn("nq", F.sqrt(
-             int_dot_fixed(F.col("qv"), F.col("qv"), dim).cast("double"))))
+             int_dot(F.col("qv"), F.col("qv")).cast("double"))))
     c = (embeddings.select(F.col(id_col).alias("neighbor_id"),
                            quant_col(F.col(vec_col)).alias("cv"))
          .withColumn("nc", F.sqrt(
-             int_dot_fixed(F.col("cv"), F.col("cv"), dim).cast("double"))))
-    dot = int_dot_fixed(F.col("qv"), F.col("cv"), dim).cast("double")
+             int_dot(F.col("cv"), F.col("cv")).cast("double"))))
+    dot = int_dot(F.col("qv"), F.col("cv")).cast("double")
     scored = (
         F.broadcast(q).crossJoin(c)
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -162,12 +155,6 @@ def _int_l2(a: Column, b: Column) -> Column:
     return F.aggregate(d, F.lit(0).cast("long"), lambda s, x: s + x)
 
 
-def _int_l2_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Delegates to _int_l2 - same measured codegen-fallback result as
-    int_dot_fixed (see its docstring)."""
-    return _int_l2(a, b)
-
-
 def kmeans_centroids(embeddings: DataFrame, n_lists: int = 16,
                      iters: int = 5, id_col: str = "vec_id",
                      vec_col: str = "embedding", dim: int = 64,
@@ -197,8 +184,7 @@ def kmeans_centroids(embeddings: DataFrame, n_lists: int = 16,
                 [(j, c) for j, c in enumerate(cents)],
                 "list_id int, cent array<bigint>"))
             assigned = (base.crossJoin(cdf)
-                        .withColumn("_d", _int_l2_fixed(F.col("v"),
-                                                        F.col("cent"), dim))
+                        .withColumn("_d", _int_l2(F.col("v"), F.col("cent")))
                         .groupBy("vec_id")
                         .agg(F.min_by(F.struct("list_id", "v"),
                                       F.struct("_d", "list_id")).alias("_m"))
@@ -290,8 +276,7 @@ def _ivf_assign_full(embeddings: DataFrame, n_lists: int,
     v = quant_col(F.col(vec_col))
     scored = (embeddings.select(F.col(id_col).alias("vec_id"), v.alias("v"))
               .crossJoin(cdf)
-              .withColumn("_d", _int_l2_fixed(F.col("v"), F.col("cent"),
-                                              dim)))
+              .withColumn("_d", _int_l2(F.col("v"), F.col("cent"))))
     return (scored.groupBy("vec_id")
             .agg(F.min_by(F.struct("list_id", "v"),
                           F.struct("_d", "list_id")).alias("_m"))
@@ -310,47 +295,6 @@ def ivf_assign(embeddings: DataFrame, n_lists: int = 16,
     probe touches nprobe/n_lists of the corpus."""
     return _ivf_assign_full(embeddings, n_lists, id_col, vec_col, dim,
                             seed, centroids).select("vec_id", "list_id")
-
-
-def probe_lists(q: DataFrame, cdf: DataFrame, nprobe: int,
-                dim: int = 64) -> DataFrame:
-    """(query_id, qv, list_id): each query's nprobe nearest coarse lists
-    by exact integer L2 with the deterministic (_d, list_id) tie-break.
-    q = (query_id, qv quantized); cdf = broadcast (list_id, cent)."""
-    return (q.crossJoin(cdf)
-            .withColumn("_d", _int_l2_fixed(F.col("qv"), F.col("cent"), dim))
-            .withColumn("_r", F.row_number().over(
-                Window.partitionBy("query_id")
-                .orderBy(F.asc("_d"), F.asc("list_id"))))
-            .where(F.col("_r") <= nprobe)
-            .select("query_id", "qv", "list_id"))
-
-
-def score_probed_topk(probes: DataFrame, assigned: DataFrame, k: int,
-                      exclude_matching_ids: bool = True,
-                      dim: int = 64) -> DataFrame:
-    """(query_id, neighbor_id, cos, rk): exact quantized cosine within the
-    probed lists, per-query top-k with (cos desc, neighbor asc) ordering;
-    the tiny probes table broadcasts into the list join."""
-    # norms once per side BEFORE the join (not per candidate pair);
-    # unrolled codegen dots replace the interpreted HOF fold - exact long
-    # arithmetic either way, bit-identical scores
-    probes = probes.withColumn("_nq", F.sqrt(
-        int_dot_fixed(F.col("qv"), F.col("qv"), dim).cast("double")))
-    assigned = assigned.withColumn("_nc", F.sqrt(
-        int_dot_fixed(F.col("cv"), F.col("cv"), dim).cast("double")))
-    dot = int_dot_fixed(F.col("qv"), F.col("cv"), dim).cast("double")
-    nq = F.col("_nq")
-    nc = F.col("_nc")
-    scored = F.broadcast(probes).join(assigned, "list_id")
-    if exclude_matching_ids:
-        scored = scored.where(F.col("query_id") != F.col("neighbor_id"))
-    scored = scored.withColumn("cos", F.round(dot / (nq * nc), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= k)
-            .select("query_id", "neighbor_id", "cos", "rk"))
 
 
 def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
@@ -375,14 +319,38 @@ def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
         "list_id int, cent array<bigint>"))
     full = _ivf_assign_full(embeddings, n_lists, id_col, vec_col, dim, seed,
                             centroids)
-    assigned = full.select(F.col("vec_id").alias("neighbor_id"),
-                           F.col("v").alias("cv"), "list_id")
+    # norms once per side BEFORE the join (not per candidate pair)
+    assigned = (full.select(F.col("vec_id").alias("neighbor_id"),
+                            F.col("v").alias("cv"), "list_id")
+                .withColumn("_nc", F.sqrt(
+                    int_dot(F.col("cv"), F.col("cv")).cast("double"))))
     # queries re-quantize from a predicate-pushdown-pruned scan (|Q| rows)
-    # rather than re-running the corpus-wide assignment aggregate
-    q = (embeddings.where(F.col(id_col).isin(query_ids))
-         .select(F.col(id_col).alias("query_id"),
-                 quant_col(F.col(vec_col)).alias("qv")))
-    return score_probed_topk(probe_lists(q, cdf, nprobe), assigned, k)
+    # rather than re-running the corpus-wide assignment aggregate, then
+    # keep their nprobe nearest coarse lists by exact integer L2 with the
+    # deterministic (_d, list_id) tie-break
+    probes = (embeddings.where(F.col(id_col).isin(query_ids))
+              .select(F.col(id_col).alias("query_id"),
+                      quant_col(F.col(vec_col)).alias("qv"))
+              .crossJoin(cdf)
+              .withColumn("_d", _int_l2(F.col("qv"), F.col("cent")))
+              .withColumn("_r", F.row_number().over(
+                  Window.partitionBy("query_id")
+                  .orderBy(F.asc("_d"), F.asc("list_id"))))
+              .where(F.col("_r") <= nprobe)
+              .select("query_id", "qv", "list_id")
+              .withColumn("_nq", F.sqrt(
+                  int_dot(F.col("qv"), F.col("qv")).cast("double"))))
+    # the tiny probes table broadcasts into the list join
+    dot = int_dot(F.col("qv"), F.col("cv")).cast("double")
+    scored = (F.broadcast(probes).join(assigned, "list_id")
+              .where(F.col("query_id") != F.col("neighbor_id"))
+              .withColumn("cos", F.round(dot / (F.col("_nq") * F.col("_nc")),
+                                         6)))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
+                                               F.asc("neighbor_id"))
+    return (scored.withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") <= k)
+            .select("query_id", "neighbor_id", "cos", "rk"))
 
 
 def lsh_cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
@@ -403,14 +371,15 @@ def lsh_cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
         hyperplane_bucket_col(F.col(vec_col), n_planes,
                               dim, kw.get("seed", 42))
         .alias("bucket")).withColumn("nrm", F.sqrt(
-            int_dot_fixed(F.col("v"), F.col("v"), dim).cast("double")))         .localCheckpoint(eager=False)
+            int_dot(F.col("v"), F.col("v")).cast("double"))) \
+        .localCheckpoint(eager=False)
     q = (with_b.where(F.col("vec_id").isin(query_ids))
          .select(F.col("vec_id").alias("query_id"),
                  F.col("v").alias("qv"), F.col("nrm").alias("nq"), "bucket"))
     c = with_b.select(F.col("vec_id").alias("neighbor_id"),
                       F.col("v").alias("cv"), F.col("nrm").alias("nc"),
                       "bucket")
-    dot = int_dot_fixed(F.col("qv"), F.col("cv"), dim).cast("double")
+    dot = int_dot(F.col("qv"), F.col("cv")).cast("double")
     scored = (
         q.join(c, "bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))

@@ -339,8 +339,7 @@ def hash_docs_df(spark, n_docs: int, start: int = 0,
                  tokens_per_doc: int = 100, vocab: int = 20_000):
     """Deterministic pure-Column benchmark corpus for index benches:
     token i of doc d is w<xxhash64(d*T+i) mod V>. Never materializes on
-    the driver; shared by tools/bench_index_store.py and
-    tools/bench_index_maintenance.py so the two benches can't drift."""
+    the driver; tools/bench_index_store.py builds its stores from it."""
     from pyspark.sql import functions as F
 
     return (spark.range(start, start + n_docs)

@@ -219,9 +219,7 @@ def _record_fields(head: dict[bytes, bytes],
                    body: bytes) -> tuple[str, str, bytes, str, int]:
     """(url, warc_date, html, lang, http_status) from a response record's
     parsed WARC headers + raw body - the ONE place that strips the HTTP
-    header block, decodes chunked/gzip framing and extracts the status
-    (shared by the streaming reader, the index builder and the seek
-    reader, so their record semantics cannot drift)."""
+    header block, decodes chunked/gzip framing and extracts the status."""
     url = head.get(b"warc-target-uri", b"").decode()
     wdate = head.get(b"warc-date", b"").decode()
     lang = head.get(b"warc-identified-content-language", b"").decode()

@@ -343,9 +343,9 @@ def test_api_store_backed_serving(spark, tmp_path):
 
 
 def test_api_distributed_search_without_url_table(spark):
-    """A store published without _doc_map (the streaming publisher's
-    output) has NO url table: the distributed path must serve the hits
-    url-less instead of inner-joining every result away."""
+    """A store published without doc_map has NO url table: the
+    distributed path must serve the hits url-less instead of
+    inner-joining every result away."""
     from high_performance_parallel_search_engine_spark.api import EngineState
     from high_performance_parallel_search_engine_spark.operators.index import (
         build_index_tables)

@@ -10,7 +10,11 @@ pin the pure helpers that build that line - no Spark session needed:
   the old cross-run best-vs-best overstated the evidence): the stage wall
   and the kernel ceiling come from the same crawl+ceiling pair,
 - _crawl_compact keeps the fields speedup_vs_baseline needs next round
-  (threads + "HxPxW" shape string) while dropping the bulky corpus dict.
+  (threads + "HxPxW" shape string) while dropping the bulky corpus dict,
+- the one-phase subcommands dispatch to their phase and print one JSON
+  line, and a bad subcommand exits non-zero,
+- phase_queries labels each query's jobs `q:<name>` and phase_plans
+  writes one plan file per query.
 """
 
 from __future__ import annotations
@@ -412,32 +416,203 @@ def test_index_store_artifact_is_self_consistent():
     assert rec["n_postings"] > 10_000_000
 
 
-def test_index_maintenance_artifact_is_self_consistent():
-    """bench_index_maintenance.json (LSM vs full-rewrite maintenance I/O)
-    must recompute from its own raw readings: headline = steady full/lsm
-    bytes, totals = per-batch sums, equality asserted before reporting,
-    and LSM's non-compaction small batches each cost a small fraction of
-    a full-mode rewrite."""
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "bench_index_maintenance.json")
-    rec = json.load(open(path))
+class _FakeSpark:
+    stopped = False
 
-    assert rec["read_views_identical"] is True
-    # equality was checked with segments outstanding - the LSM merged
-    # read view, not just the compaction path
-    assert rec["outstanding_deltas_at_check"] > 0
-    per = rec["bytes_per_batch"]
-    for mode in ("full", "lsm"):
-        assert sum(per[mode]) == rec["total_bytes"][mode]
-        assert sum(per[mode][1:]) == rec["steady_bytes"][mode]
-    assert abs(rec["value"] - rec["steady_bytes"]["full"]
-               / rec["steady_bytes"]["lsm"]) < 5e-2
-    assert rec["value"] >= 2  # the LSM claim at this base/delta ratio
-    # a non-compaction LSM batch writes a small fraction of a full
-    # rewrite (compaction fires when the Kth outstanding delta arrives,
-    # i.e. at batch indices where (i+1) % K == 0)
-    k = rec["compact_every"]
-    seg_batches = [b for i, b in enumerate(per["lsm"][1:], 1)
-                   if (i + 1) % k]
-    full_small = rec["steady_bytes"]["full"] / (len(per["full"]) - 1)
-    assert max(seg_batches) < full_small * 0.25
+    def stop(self):
+        self.stopped = True
+
+
+def test_queries_subcommand_runs_only_the_named_queries(monkeypatch, capsys):
+    """`bench.py queries url_valid` runs phase 1 for that one query on one
+    session, stops it, and prints one JSON line of its timings."""
+    spark = _FakeSpark()
+    calls = []
+
+    def fake_phase_queries(sp, names):
+        calls.append((sp, list(names)))
+        return {n: 0.5 for n in names}, {"clean": True}
+
+    monkeypatch.setattr(bench, "build_session", lambda threads: spark)
+    monkeypatch.setattr(bench, "phase_queries", fake_phase_queries)
+    bench.subcommand(["queries", "url_valid"])
+
+    assert calls == [(spark, ["url_valid"])]
+    assert spark.stopped
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1
+    assert json.loads(lines[0]) == {"queries": {"url_valid": 0.5},
+                                    "query_phase_control": {"clean": True}}
+
+
+def test_unknown_subcommand_exits_nonzero(monkeypatch):
+    """A mistyped subcommand (or `plans` without its tag) exits non-zero
+    before any session starts."""
+    import subprocess
+
+    def no_session(threads):
+        raise AssertionError("session built for a bad subcommand")
+
+    monkeypatch.setattr(bench, "build_session", no_session)
+    for argv in (["query"], ["plans"]):
+        try:
+            bench.subcommand(argv)
+        except SystemExit as e:
+            assert e.code not in (0, None)
+        else:
+            raise AssertionError(f"{argv} did not exit")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run([sys.executable, "bench.py", "nosuchmode"],
+                          cwd=root, capture_output=True, text=True,
+                          timeout=60)
+    assert proc.returncode != 0 and proc.stdout == ""
+
+
+def _one_json_line(capsys) -> dict:
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1
+    return json.loads(lines[0])
+
+
+def test_queries_subcommand_defaults_to_every_headline_query(monkeypatch,
+                                                             capsys):
+    calls = []
+
+    def fake_phase_queries(sp, names):
+        calls.append(list(names))
+        return {n: 0.1 for n in names}, {"clean": True}
+
+    monkeypatch.setattr(bench, "build_session", lambda threads: _FakeSpark())
+    monkeypatch.setattr(bench, "phase_queries", fake_phase_queries)
+    bench.subcommand(["queries"])
+    assert calls == [bench.HEADLINE]
+    assert list(_one_json_line(capsys)["queries"]) == bench.HEADLINE
+
+
+def test_warm_subcommand_runs_only_the_warm_phase(monkeypatch, capsys):
+    spark = _FakeSpark()
+    calls = []
+
+    def fake_warm(sp):
+        calls.append(sp)
+        return {"25_docs": {"query_ms": 12.0}}
+
+    def no_phase(*a, **k):
+        raise AssertionError("warm ran another phase")
+
+    monkeypatch.setattr(bench, "build_session", lambda threads: spark)
+    monkeypatch.setattr(bench, "phase_query_warm", fake_warm)
+    monkeypatch.setattr(bench, "phase_queries", no_phase)
+    monkeypatch.setattr(bench, "phase_plans", no_phase)
+    bench.subcommand(["warm"])
+    assert calls == [spark] and spark.stopped
+    assert _one_json_line(capsys) == {
+        "query_warm": {"25_docs": {"query_ms": 12.0}}}
+
+
+def test_plans_subcommand_passes_tag_and_query_names(monkeypatch, capsys):
+    """`plans <tag> name ...` writes the named queries' plans under the
+    tag; with no names it covers every headline query."""
+    calls = []
+
+    def fake_plans(sp, tag, names):
+        calls.append((tag, list(names)))
+        return [f"{n}_{tag}.txt" for n in names]
+
+    monkeypatch.setattr(bench, "build_session", lambda threads: _FakeSpark())
+    monkeypatch.setattr(bench, "phase_plans", fake_plans)
+    bench.subcommand(["plans", "before", "url_valid", "postings"])
+    assert _one_json_line(capsys) == {
+        "plans": ["url_valid_before.txt", "postings_before.txt"]}
+    bench.subcommand(["plans", "after"])
+    _one_json_line(capsys)
+    assert calls == [("before", ["url_valid", "postings"]),
+                     ("after", bench.HEADLINE)]
+
+
+def test_subcommand_stops_the_session_when_its_phase_fails(monkeypatch,
+                                                           capsys):
+    spark = _FakeSpark()
+
+    def failing_warm(sp):
+        raise RuntimeError("query failed")
+
+    monkeypatch.setattr(bench, "build_session", lambda threads: spark)
+    monkeypatch.setattr(bench, "phase_query_warm", failing_warm)
+    try:
+        bench.subcommand(["warm"])
+    except RuntimeError:
+        pass
+    else:
+        raise AssertionError("the phase's failure was swallowed")
+    assert spark.stopped
+    assert capsys.readouterr().out == ""
+
+
+class _FakeQuery:
+    def __init__(self, jobs: set, n_jobs: int, n_rows: int):
+        self.jobs, self.n_jobs, self.n_rows = jobs, n_jobs, n_rows
+
+    def count(self):
+        for _ in range(self.n_jobs):
+            self.jobs.add(len(self.jobs))
+        return self.n_rows
+
+
+def test_phase_queries_labels_each_querys_jobs(monkeypatch, capsys):
+    """Phase 1 times only the queries it is given, runs each under the
+    job description `q:<name>`, clears it afterwards, and logs the job
+    count of one run next to the query's timing."""
+    from high_performance_parallel_search_engine_spark import oracles
+
+    jobs: set = set()
+    descriptions = []
+
+    class Tracker:
+        def getJobIdsForGroup(self, group):
+            assert group is None
+            return sorted(jobs)
+
+    class Context:
+        def setJobDescription(self, text):
+            descriptions.append(text)
+
+        def statusTracker(self):
+            return Tracker()
+
+    class Spark:
+        sparkContext = Context()
+
+    queries = {
+        "url_priority": lambda sp, sf: _FakeQuery(jobs, 1, 1),
+        "two_jobs": lambda sp, sf: _FakeQuery(jobs, 2, 10),
+        "one_job": lambda sp, sf: _FakeQuery(jobs, 1, 3),
+        "not_asked": lambda sp, sf: 1 / 0,
+    }
+    monkeypatch.setattr(oracles, "QUERIES", queries)
+    monkeypatch.setattr(bench, "gated", lambda name, fn: (fn(), {"ok": 1}))
+    timings, ctl = bench.phase_queries(Spark(), ["two_jobs", "one_job"])
+
+    assert list(timings) == ["two_jobs", "one_job"] and ctl == {"ok": 1}
+    assert descriptions == ["q:two_jobs", None, "q:one_job", None]
+    err = capsys.readouterr().err
+    assert "(10 rows, 2 jobs)" in err and "(3 rows, 1 jobs)" in err
+
+
+def test_phase_plans_writes_one_plan_file_per_query(monkeypatch, tmp_path):
+    from high_performance_parallel_search_engine_spark import oracles
+    from high_performance_parallel_search_engine_spark.plans import lineage
+
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setattr(oracles, "QUERIES",
+                        {"url_valid": lambda sp, sf: "df:url_valid",
+                         "postings": lambda sp, sf: "df:postings"})
+    monkeypatch.setattr(lineage, "explain_text",
+                        lambda df, mode: f"{mode} plan of {df}")
+    paths = bench.phase_plans(object(), "after", ["url_valid", "postings"])
+
+    dest = tmp_path / "plans" / "r06"
+    assert paths == [str(dest / "url_valid_after.txt"),
+                     str(dest / "postings_after.txt")]
+    assert (dest / "postings_after.txt").read_text() == \
+        "formatted plan of df:postings"

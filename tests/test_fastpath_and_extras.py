@@ -468,6 +468,71 @@ def test_ivf_topk_is_exact_cosine_within_the_probed_lists(spark):
     assert got == sorted(want)
 
 
+def test_int_dot_and_int_l2_are_exact_integer_sums(spark):
+    """The integer fold behind every cosine and IVF distance is an exact
+    long sum, at the largest quantized magnitude the module's headroom
+    note allows (64 dims of +-2^21)."""
+    import random
+
+    from high_performance_parallel_search_engine_spark.operators.similarity import (
+        _int_l2,
+        int_dot,
+    )
+
+    rng = random.Random(7)
+    big = 1 << 21
+    pairs = [([big] * 64, [-big] * 64),
+             ([rng.randint(-big, big) for _ in range(64)],
+              [rng.randint(-big, big) for _ in range(64)]),
+             ([3, -1, 0], [2, 5, -7])]
+    df = spark.createDataFrame([(i, a, b) for i, (a, b) in enumerate(pairs)],
+                               "i int, a array<long>, b array<long>")
+    got = {r["i"]: (r["dot"], r["l2"]) for r in df.select(
+        "i", int_dot(F.col("a"), F.col("b")).alias("dot"),
+        _int_l2(F.col("a"), F.col("b")).alias("l2")).collect()}
+    for i, (a, b) in enumerate(pairs):
+        assert got[i] == (sum(x * y for x, y in zip(a, b)),
+                          sum((x - y) ** 2 for x, y in zip(a, b)))
+
+
+def test_cosine_topk_matches_driver_bruteforce(spark):
+    """cosine_topk against a plain-Python brute force: per query the k
+    best other vectors by cosine of the quantized vectors, ranked 1..k.
+    Components are multiples of 1/8, so quantization is exact."""
+    import math
+    import random
+
+    from high_performance_parallel_search_engine_spark.operators.similarity import (
+        cosine_topk,
+    )
+
+    rng = random.Random(11)
+    vecs = {i: [rng.randint(-400, 400) / 8 for _ in range(8)]
+            for i in range(30)}
+    emb = spark.createDataFrame(list(vecs.items()),
+                                "vec_id long, embedding array<double>")
+    qids = [0, 13, 29]
+    got = sorted(tuple(r) for r in cosine_topk(emb, qids, k=5).collect())
+
+    want = []
+    for q in qids:
+        qv = [round(x * 1_000_000) for x in vecs[q]]
+        scored = []
+        for n, v in vecs.items():
+            if n == q:
+                continue
+            cv = [round(x * 1_000_000) for x in v]
+            dot = sum(a * b for a, b in zip(qv, cv))
+            scored.append((dot / math.sqrt(sum(a * a for a in qv))
+                           / math.sqrt(sum(b * b for b in cv)), n))
+        scored.sort(key=lambda t: (-t[0], t[1]))
+        want += [(q, n, c, rk) for rk, (c, n) in enumerate(scored[:5], 1)]
+    assert [(q, n, rk) for q, n, _, rk in got] == \
+        [(q, n, rk) for q, n, _, rk in sorted(want)]
+    for (_, _, c_got, _), (_, _, c_want, _) in zip(got, sorted(want)):
+        assert abs(c_got - c_want) <= 5e-7
+
+
 def test_connected_components_and_survivors(spark):
     """Near-dup clustering: min-label propagation finds components across
     chained pairs (a-b, b-c => one cluster labeled by its min id),

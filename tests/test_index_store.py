@@ -7,8 +7,14 @@ Scale invariants under test (the 100 TB index-read story):
 - term-keyed aggregation over the store runs without an Exchange,
 - results are bit-identical to the unbucketed path,
 - the store directory is self-describing: a fresh catalog re-attaches it
-  with register_postings_store and prunes identically.
+  with register_postings_store and prunes identically,
+- a published store (publish_store) serves BM25 through open_store from a
+  fresh catalog with its own doc_stats, and a republish into the same
+  directory replaces every part of the previous one, sidecars included.
 """
+
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,7 +22,8 @@ from pyspark.sql import functions as F
 from high_performance_parallel_search_engine_spark.operators.index import (
     build_index_tables, term_df)
 from high_performance_parallel_search_engine_spark.operators.index_store import (
-    register_postings_store, save_postings_bucketed, selected_buckets)
+    MANIFEST_NAME, open_store, publish_store, register_postings_store,
+    save_postings_bucketed, selected_buckets)
 from high_performance_parallel_search_engine_spark.operators.ranking import (
     TERM_PUSHDOWN_MAX, _pushdown_candidate_terms, rank_bm25)
 from high_performance_parallel_search_engine_spark.plans.lineage import explain_text
@@ -157,3 +164,63 @@ def test_reregister_rebinds_when_location_changed(spark, corpus, tmp_path):
     assert tbl.where(F.col("term") == "alpha").count() == 0
     sel = selected_buckets(tbl.where(F.col("term") == "bravo"))
     assert sel is not None and sel[1] == 8  # bucket spec is b's, too
+
+
+def test_published_store_serves_bm25_from_fresh_catalog(spark, corpus,
+                                                        tmp_path):
+    """publish_store -> catalog wipe -> open_store: the store's derived
+    doc_stats equal build_index_tables' and BM25 over (store, stats) is
+    bit-identical to the in-memory index, reading only candidate-term
+    buckets. The sidecar holds the layout and nothing else."""
+    postings, stats = corpus
+    path = str(tmp_path / "pub")
+    publish_store(postings, path, table="t_pub_fresh", buckets=16)
+    with open(os.path.join(path, MANIFEST_NAME)) as f:
+        assert set(json.load(f)) == {"table", "buckets", "bucket_col",
+                                     "sort_col", "schema_ddl"}
+
+    spark.sql("DROP TABLE t_pub_fresh")
+    tbl, pub_stats, doc_map = open_store(spark, path)
+    assert doc_map is None
+    assert _rows(pub_stats) == _rows(stats)
+    got = rank_bm25(tbl, pub_stats, "alpha echo lima", top_k=10)
+    assert _rows(got) == _rows(rank_bm25(postings, stats, "alpha echo lima",
+                                         top_k=10))
+    sel = selected_buckets(got)
+    assert sel is not None and sel[0] < sel[1] == 16
+
+
+def test_open_store_returns_the_published_doc_map(spark, corpus, tmp_path):
+    postings, _ = corpus
+    path = str(tmp_path / "pub_map")
+    urls = spark.createDataFrame(
+        [(i, f"https://h{i % 4}.example.com/p/{i}", "en") for i in range(40)],
+        "doc_id long, url string, lang string")
+    publish_store(postings, path, table="t_pub_map", buckets=8,
+                  doc_map=urls)
+    _, _, doc_map = open_store(spark, path, table="t_pub_map_read")
+    assert doc_map.columns == ["doc_id", "url"]
+    assert _rows(doc_map) == _rows(urls.select("doc_id", "url"))
+
+
+def test_republish_replaces_postings_stats_and_doc_map(spark, corpus,
+                                                       tmp_path):
+    """Publishing a new index into an existing store directory leaves
+    nothing of the old one: postings and doc_stats are the new index's,
+    and a doc_map the new publish does not write is gone rather than
+    served stale."""
+    postings, _ = corpus
+    path = str(tmp_path / "pub_again")
+    publish_store(postings, path, table="t_pub_again", buckets=8,
+                  doc_map=spark.createDataFrame(
+                      [(0, "https://old.example.com/")],
+                      "doc_id long, url string"))
+    docs = spark.createDataFrame([(7, "november oscar oscar")],
+                                 "doc_id long, text string")
+    new_postings, new_stats = build_index_tables(docs)
+    publish_store(new_postings, path, table="t_pub_again", buckets=8)
+    spark.sql("DROP TABLE t_pub_again")
+    tbl, stats, doc_map = open_store(spark, path)
+    assert _rows(tbl) == _rows(new_postings)
+    assert _rows(stats) == _rows(new_stats)
+    assert doc_map is None

@@ -1,14 +1,18 @@
-"""Every package module is reached from outside itself: some non-test
-file (the package, tools/, perfbench/ or a top-level script) imports it.
-A module that only its own tests import is code no entry point runs.
-Stdlib only (ast), no Spark."""
+"""Every package module is reached from outside itself: some file that is
+neither a test nor measurement code (the package, a non-bench tool or
+`__spark_entry__.py`) imports it. A module that only its own tests or
+benches import is code no entry point runs. Measurement code - `bench.py`,
+`tools/bench_*.py` and `perfbench/` - is scanned but does not count as an
+importer. Stdlib only (ast), no Spark."""
 
 import ast
 from pathlib import Path
 
+import pytest
+
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "high_performance_parallel_search_engine_spark"
-SCRIPTS = ("bench.py", "bench_extra.py", "__spark_entry__.py")
+SCRIPTS = ("bench.py", "__spark_entry__.py")
 
 
 def _sources(root: Path) -> list[Path]:
@@ -46,9 +50,17 @@ def _imported_names(path: Path, root: Path) -> set[str]:
     return names
 
 
+def _is_measurement(path: Path, root: Path) -> bool:
+    rel = path.relative_to(root)
+    return (rel.parts[0] == "perfbench" or rel.name == "bench.py"
+            or (rel.parts[0] == "tools" and rel.name.startswith("bench_")))
+
+
 def _orphans(root: Path) -> list[str]:
     importers = {}
     for path in _sources(root):
+        if _is_measurement(path, root):
+            continue
         me = _module(path, root)
         for name in _imported_names(path, root):
             if name != me:
@@ -66,14 +78,15 @@ def _orphans(root: Path) -> list[str]:
 def test_every_package_module_has_an_importer():
     orphans = _orphans(ROOT)
     assert not orphans, (
-        f"package modules no non-test file imports: {orphans}")
+        f"package modules only tests or benches import: {orphans}")
 
 
 def test_guard_resolves_each_import_form(tmp_path):
     """On a made-up tree: a module reached by `from . import m`, by
     `from .m import x`, by `from ..pkg.m import x`, by an absolute import
     from tools/ or by a top-level script counts as imported; one that only
-    imports itself, or only its tests import, is an orphan."""
+    imports itself, or only its tests, bench.py, a tools/bench_*.py script
+    or perfbench/ import, is an orphan."""
     files = {
         f"{PKG}/__init__.py": "from . import a\n",
         f"{PKG}/a.py": "from .b import x\n",
@@ -84,12 +97,54 @@ def test_guard_resolves_each_import_form(tmp_path):
         f"{PKG}/sub/e.py": "",
         f"{PKG}/sub/f.py": "",
         f"{PKG}/sub/g.py": "",
+        f"{PKG}/sub/h.py": "",
+        f"{PKG}/sub/i.py": "",
+        f"{PKG}/sub/j.py": "",
         f"{PKG}/__main__.py": "",
         "tools/run.py": f"from {PKG}.sub import e\n",
-        "bench.py": f"import {PKG}.sub.f as f\n",
+        "__spark_entry__.py": f"import {PKG}.sub.f as f\n",
         "tests/test_g.py": f"from {PKG}.sub import g\n",
+        "tools/bench_x.py": f"from {PKG}.sub import h\n",
+        "bench.py": f"import {PKG}.sub.i\n",
+        "perfbench/run.py": f"from {PKG}.sub.j import z\n",
     }
     for name, text in files.items():
         (tmp_path / name).parent.mkdir(parents=True, exist_ok=True)
         (tmp_path / name).write_text(text)
-    assert _orphans(tmp_path) == [f"{PKG}.sub.c", f"{PKG}.sub.g"]
+    assert _orphans(tmp_path) == [f"{PKG}.sub.{m}"
+                                  for m in ("c", "g", "h", "i", "j")]
+
+
+@pytest.mark.parametrize("rel, measurement", [
+    ("bench.py", True),
+    ("tools/bench_crawl.py", True),
+    ("perfbench/workloads/serve.py", True),
+    ("tools/serve_api.py", False),
+    ("__spark_entry__.py", False),
+    (f"{PKG}/operators/bench_util.py", False),
+])
+def test_measurement_code_is_bench_py_tools_bench_and_perfbench(rel,
+                                                               measurement):
+    assert _is_measurement(ROOT / rel, ROOT) is measurement
+
+
+def test_a_bench_import_does_not_hide_a_real_one(tmp_path):
+    """A module that a bench AND a non-bench file import is reached; so is
+    one imported by a package module whose name starts with bench_, or by
+    a tools/ script not named bench_*."""
+    files = {
+        f"{PKG}/__init__.py": "from . import bench_util\n",
+        f"{PKG}/bench_util.py": "from .a import x\n",
+        f"{PKG}/a.py": "x = 1\n",
+        f"{PKG}/b.py": "",
+        f"{PKG}/c.py": "",
+        "tools/bench_x.py": f"from {PKG} import b, c\n",
+        "tools/run.py": f"import {PKG}.b\n",
+        "tools/benchmarks.py": f"from {PKG}.c import y\n",
+    }
+    for name, text in files.items():
+        (tmp_path / name).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / name).write_text(text)
+    assert _orphans(tmp_path) == []
+    (tmp_path / "tools/run.py").write_text("")
+    assert _orphans(tmp_path) == [f"{PKG}.b"]
