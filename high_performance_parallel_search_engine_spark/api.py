@@ -173,6 +173,7 @@ class EngineState:
     def _build_index(self):
         from pyspark.sql import functions as F
 
+        from .operators.common import local_frame
         from .operators.index import (
             avg_doc_len, build_index_tables, term_df, term_df_map,
         )
@@ -187,8 +188,8 @@ class EngineState:
                                              table="api_postings_store")
             postings = tbl
             urls_src = (doc_map if doc_map is not None else
-                        self.spark.createDataFrame(
-                            [], "doc_id long, url string"))
+                        local_frame(self.spark, [],
+                                    "doc_id long, url string"))
         else:
             docs = (self.spark.read
                     .parquet(f"{self.workdir}/round=*/pages.parquet")

@@ -2,9 +2,36 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
+
+
+def arrow_table(rows: list[tuple], schema: StructType):
+    """Row tuples as a pyarrow Table in `schema`'s Arrow types (nested
+    structs may be tuples)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType | str) -> DataFrame:
+    """A driver-side row list as a DataFrame with exactly `schema` (a
+    StructType or DDL string), sent to the JVM as Arrow. Below
+    spark.sql.execution.arrow.localRelationThreshold it plans as a
+    LocalTableScan; above it, as a JVM-side RDD of Arrow batches. Neither
+    starts a Python worker, unlike createDataFrame(<list>), whose
+    parallelize + pickle path runs a Python task per partition every time
+    the frame is scanned or broadcast."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
 
 
 def with_global_seq_counted(df: DataFrame, order_cols: list[str],

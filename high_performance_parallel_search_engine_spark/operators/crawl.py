@@ -1,9 +1,10 @@
 """The crawl engine: BSP fetch rounds over a pages table.
 
 Re-expression of the serial crawl loop (Serial Version/src/crawler.c:
-1032-1403) as checkpointed Spark jobs - one job per BFS round - with exact
-crawl-order parity (proved against kernel/bfs.py, itself proved against a
-literal FIFO simulation). Every round runs one pipeline (run_round):
+1032-1403) as checkpointed Spark jobs - one committed round per BFS level,
+18 jobs in an exact (trace) round - with exact crawl-order parity (proved
+against kernel/bfs.py, itself proved against a literal FIFO simulation).
+Every round runs one pipeline (run_round):
 
   frontier_r --(gates, one frame: validity c.c:1082, robots (ours) and
   politeness budget (ours) tag every valid row attempt / robots_denied /
@@ -74,7 +75,9 @@ from ..functions.urlsql import (
 from .arbitrate import (
     MAX_LINKS_PER_PAGE, arbitrate_exact, arbitrate_scale, arbitration_mode,
 )
-from .common import seen_anti_join, with_global_seq_counted
+from .common import (
+    arrow_table, local_frame, seen_anti_join, with_global_seq_counted,
+)
 from .politeness import apply_budget, delay_ms_col
 from .robots import apply_robots
 
@@ -189,17 +192,12 @@ def init_crawl(spark: SparkSession, seeds: list[str], workdir: str,
 def _write_rows(path: Path, rows: list[tuple], schema: StructType) -> None:
     """An in-memory row list as a one-file parquet dir that Spark reads
     with `schema`."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
     shutil.rmtree(path, ignore_errors=True)
     path.mkdir(parents=True)
-    pq.write_table(pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
-        schema=arrow), str(path / "part-00000-init.parquet"))
+    pq.write_table(arrow_table(rows, schema),
+                   str(path / "part-00000-init.parquet"))
 
 
 def _write_text(path: Path, text: str) -> None:
@@ -508,8 +506,8 @@ def _gates(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
     attempts), n_ok, n_deferred, max_ok_seq}, or None without trace)."""
     politeness = config.politeness or {}
     budgets = [(h, b) for h, b in politeness.items() if h != "*"]
-    budgets = (spark.createDataFrame(
-        budgets, "host string, max_fetches_per_round int")
+    budgets = (local_frame(
+        spark, budgets, "host string, max_fetches_per_round int")
         if budgets else None)
     cols = FRONTIER_SCHEMA.fieldNames()
     f = apply_robots(frontier.where(
@@ -697,7 +695,7 @@ def _arbitrate_children(spark: SparkSession, stored: DataFrame,
     # empty input at any parallelism).
     rnd = state.round
     if config.politeness is None and rnd + 1 >= config.max_depth:
-        return spark.createDataFrame([], FRONTIER_SCHEMA) \
+        return local_frame(spark, [], FRONTIER_SCHEMA) \
             .withColumn("child", F.lit(True))
     cols = FRONTIER_SCHEMA.fieldNames()[:5]
     cands = (

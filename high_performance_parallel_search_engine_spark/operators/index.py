@@ -193,9 +193,10 @@ def term_df_map(dfs: DataFrame, vocab: int | None = None,
     vocabulary exceeds max_vocab. The ONE definition of the warm-query
     df_map contract shared by the dashboard (api.EngineState), the CLI
     interactive mode and bench.py - candidate resolution and the
-    plural/singular fallback preference then run as dict lookups, making
-    a warm query a single Spark job (rank_bm25's df_map path). Pass the
-    already-known vocab count to skip the extra count job."""
+    plural/singular fallback preference then run as dict lookups, so a
+    warm query runs no df aggregate and no vocabulary scan: 3 Spark jobs
+    (rank_bm25's df_map path). Pass the already-known vocab count to skip
+    the extra count job."""
     if vocab is None:
         vocab = dfs.count()
     if vocab > max_vocab:

@@ -65,31 +65,27 @@ def _pin_bucketed_scan(spark: SparkSession) -> None:
 
 
 def save_bucketed_table(df: DataFrame, path: str, table: str,
-                        buckets: int = DEFAULT_BUCKETS,
-                        bucket_col: str = "term",
-                        sort_col: str = "term",
-                        schema_ddl: str | None = None) -> DataFrame:
-    """Generic core: write ANY table bucketed+sorted on a key column as a
-    self-describing external directory (the sidecar records the DDL, so
-    register_postings_store re-attaches any schema - it was always
-    schema-generic on the read side). schema_ddl defaults to the frame's
-    own schema. The positional index uses this directly: phrase queries
-    then bucket-prune exactly like BM25's candidate terms do."""
+                        buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """Write a table with a `term` column, bucketed and sorted on term, as
+    a self-describing external directory. The sidecar records the layout
+    and the frame's own schema as DDL, so register_postings_store
+    re-attaches any such schema. save_postings_bucketed is the package's
+    caller; a positional postings table stored the same way bucket-prunes
+    phrase scans like BM25's candidate terms (tests/test_phrase.py)."""
     spark = df.sparkSession
     _pin_bucketed_scan(spark)
-    if schema_ddl is None:
-        # backtick-quoted so non-plain identifiers survive the round trip
-        # into register_postings_store's CREATE TABLE
-        schema_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                               for f in df.schema.fields)
+    # backtick-quoted so non-plain identifiers survive the round trip into
+    # register_postings_store's CREATE TABLE
+    schema_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+                           for f in df.schema.fields)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     (df.write.format("parquet")
-        .bucketBy(buckets, bucket_col).sortBy(sort_col)
+        .bucketBy(buckets, "term").sortBy("term")
         .option("path", os.path.abspath(path))
         .mode("overwrite")
         .saveAsTable(table))
     manifest = {"table": table, "buckets": buckets,
-                "bucket_col": bucket_col, "sort_col": sort_col,
+                "bucket_col": "term", "sort_col": "term",
                 "schema_ddl": schema_ddl}
     tmp = os.path.join(path, MANIFEST_NAME + ".tmp")
     with open(tmp, "w") as f:

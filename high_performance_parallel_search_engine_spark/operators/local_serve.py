@@ -4,9 +4,9 @@ The reference engine's interactive search IS a single-node in-memory
 index walk (Serial Version/src/ranking.c:54-117: the whole inverted
 index lives in the process; a query walks |terms| posting lists and
 sums BM25 parts). The Spark warm path (ranking.rank_bm25's df_map form)
-already compiles a query to ONE job, but one job is ~0.4 s of
-scheduling floor on local[32] - two orders of magnitude above the
-kernel cost of scoring a few posting lists. This module is the
+already compiles a query to 3 jobs (two broadcasts and the scoring
+job), each with a scheduling floor far above the kernel cost of
+scoring a few posting lists. This module is the
 size-gated answer: when the warm index's postings row count is under a
 cap, collect (term, doc_id, tf) + (doc_id, dl) ONCE via Arrow into
 numpy posting lists at index-build time, and serve rank queries

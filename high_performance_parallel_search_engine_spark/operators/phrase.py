@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel.text import DEFAULT_STOPWORDS, tokenize
+from .common import local_frame
 from .index import tokens_col
 from .ranking import BM25_B, BM25_K1, bm25_score_col
 
@@ -148,8 +149,8 @@ def rank_bm25_phrase(pos_postings: DataFrame, doc_stats: DataFrame,
                .agg(F.count("*").alias("df")).collect())
     term_df_map = {r["term"]: r["df"] for r in df_rows}
     spark = pos_postings.sparkSession
-    dfs = spark.createDataFrame([(r["term"], r["df"]) for r in df_rows],
-                                "term string, df long")
+    dfs = local_frame(spark, list(term_df_map.items()),
+                      "term string, df long")
     matches = phrase_match(pos_postings, phrase, stopwords,
                            term_dfs=term_df_map)
     postings = term_rows.join(matches, "doc_id")

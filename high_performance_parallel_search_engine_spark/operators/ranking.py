@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..kernel.text import BM25_B, BM25_K1, DEFAULT_STOPWORDS, stem_serial
+from .common import local_frame
 
 
 # interactive_query_conf touches SESSION-GLOBAL conf, and the dashboard's
@@ -159,7 +160,7 @@ def rank_bm25(postings: DataFrame, doc_stats: DataFrame, query: str,
     aggregation over candidate postings disappears: candidate dfs are
     looked up from the (vocabulary-sized, tiny vs postings) table, the
     pref/idf selection runs on the <= 2|terms| collected rows, and the
-    whole query becomes ONE scoring job - the warm-dashboard path
+    whole query becomes one scoring plan - the warm-dashboard path
     (EngineState/api.py). Results are identical; without it the df
     aggregation runs inline (the cold / gate-checked path).
 
@@ -167,11 +168,14 @@ def rank_bm25(postings: DataFrame, doc_stats: DataFrame, query: str,
     warm-index build). Candidate resolution - df lookup, fallback
     preference (primary beats plural/singular retry, ranking.c's early
     break), idf inputs - all happen in Python on <= 2|terms| entries, so
-    the per-query plan is EXACTLY one job: postings x broadcast(<=|terms|
-    literal rows) -> stats join -> score -> top-k. No vocab-table scan, no
-    pref window. Valid while the vocabulary fits driver memory (EngineState
-    guards with a vocab-size cap); df_table remains the unbounded-vocab
-    path and both produce identical results (parity-tested)."""
+    the per-query plan is postings x broadcast(<=|terms| literal rows) ->
+    stats join -> score -> top-k: on a warm index under
+    interactive_query_conf, 3 jobs (the candidate-table broadcast, the
+    doc_stats broadcast, the scoring job). No vocab-table scan, no pref
+    window, and the literal rows are an Arrow LocalTableScan. Valid while
+    the vocabulary fits driver memory (EngineState guards with a
+    vocab-size cap); df_table remains the unbounded-vocab path and both
+    produce identical results (parity-tested)."""
     spark = postings.sparkSession
     stats_df = None
     if total_docs is None or avg_dl is None:
@@ -189,13 +193,13 @@ def rank_bm25(postings: DataFrame, doc_stats: DataFrame, query: str,
         avg_col = F.col("_s").cast("double") / n_col
     else:
         if total_docs == 0:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(spark, [], "doc_id long, score double")
         n_col = F.lit(float(total_docs))
         avg_col = F.lit(float(avg_dl))
 
     terms = query_terms(query, stopwords)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
 
     if df_map is not None and df_table is None:
         # Driver-side candidate resolution: df_map covers exactly the
@@ -213,8 +217,8 @@ def rank_bm25(postings: DataFrame, doc_stats: DataFrame, query: str,
             if d:
                 rows.append((i, t, d))
         if not rows:
-            return spark.createDataFrame([], "doc_id long, score double")
-        sel = spark.createDataFrame(rows, "qpos int, term string, df long")
+            return local_frame(spark, [], "doc_id long, score double")
+        sel = local_frame(spark, rows, "qpos int, term string, df long")
         postings = _pushdown_candidate_terms(postings,
                                              [r[1] for r in rows])
         return _score_candidates(postings, doc_stats, sel, n_col, avg_col,
@@ -228,7 +232,7 @@ def rank_bm25(postings: DataFrame, doc_stats: DataFrame, query: str,
             a = alt_term(t)
             if a is not None:
                 cands.append((i, a, 1))
-    cdf = spark.createDataFrame(cands, "qpos int, term string, pref int")
+    cdf = local_frame(spark, cands, "qpos int, term string, pref int")
     # both the cold df aggregation and the scoring join scan postings:
     # push the full candidate set (primary + retry forms) into the scan
     postings = _pushdown_candidate_terms(postings, [c[1] for c in cands])
@@ -236,10 +240,10 @@ def rank_bm25(postings: DataFrame, doc_stats: DataFrame, query: str,
     if df_table is not None:
         # Warm path: candidate dfs come from the cached (term, df) table -
         # a broadcast lookup over the vocabulary-sized table INSIDE the
-        # scoring plan (one job), replacing the df aggregation that would
-        # otherwise scan the full postings a second time per query. At
-        # 10^9-posting scale this is the difference between a vocab scan
-        # and a postings scan on every dashboard keystroke.
+        # scoring plan (no separate df job), replacing the df aggregation
+        # that would otherwise scan the full postings a second time per
+        # query. At 10^9-posting scale this is the difference between a
+        # vocab scan and a postings scan on every dashboard keystroke.
         df_tbl = (df_table.join(F.broadcast(cdf), "term")
                   .select("qpos", "pref", "term", "df"))
     else:
@@ -325,8 +329,8 @@ def rank_bm25_batch(postings: DataFrame, doc_stats: DataFrame,
     rank_bm25 per (query, position) - a batched query must rank exactly
     like the same query sent alone (the dashboard serves both forms)."""
     spark = postings.sparkSession
-    empty = spark.createDataFrame(
-        [], "query_id int, doc_id long, score double, rk int")
+    empty = local_frame(
+        spark, [], "query_id int, doc_id long, score double, rk int")
     stats_df = None
     if total_docs is None or avg_dl is None:
         # cold path: in-plan 1-row stats broadcast instead of a separate
@@ -349,8 +353,8 @@ def rank_bm25_batch(postings: DataFrame, doc_stats: DataFrame,
         return empty
 
     if df_map is not None and df_table is None:
-        # driver-side df resolution (see rank_bm25.df_map): the batch plan
-        # collapses to one job - postings x broadcast(literal candidates).
+        # driver-side df resolution (see rank_bm25.df_map): no df
+        # aggregate - postings x broadcast(literal candidates), 3 jobs.
         # Fallback is a dict lookup per position, primary beats retry.
         rows = []
         for qid, i, t in cands:
@@ -363,8 +367,8 @@ def rank_bm25_batch(postings: DataFrame, doc_stats: DataFrame,
                 rows.append((qid, i, t, d))
         if not rows:
             return empty
-        df_tbl = spark.createDataFrame(
-            rows, "query_id int, qpos int, term string, df long")
+        df_tbl = local_frame(
+            spark, rows, "query_id int, qpos int, term string, df long")
         postings = _pushdown_candidate_terms(postings,
                                              [r[2] for r in rows])
         return _score_candidates_batch(postings, doc_stats, df_tbl,
@@ -377,8 +381,8 @@ def rank_bm25_batch(postings: DataFrame, doc_stats: DataFrame,
             a = alt_term(t)
             if a is not None:
                 prefd.append((qid, i, a, 1))
-    cdf = spark.createDataFrame(
-        prefd, "query_id int, qpos int, term string, pref int")
+    cdf = local_frame(
+        spark, prefd, "query_id int, qpos int, term string, pref int")
     postings = _pushdown_candidate_terms(postings, [c[2] for c in prefd])
 
     if df_table is not None:

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .common import local_frame
+
 QUANT = 1_000_000
 
 
@@ -180,8 +182,8 @@ def kmeans_centroids(embeddings: DataFrame, n_lists: int = 16,
     try:
         for _ in range(iters):
             spark = embeddings.sparkSession
-            cdf = F.broadcast(spark.createDataFrame(
-                [(j, c) for j, c in enumerate(cents)],
+            cdf = F.broadcast(local_frame(
+                spark, list(enumerate(cents)),
                 "list_id int, cent array<bigint>"))
             assigned = (base.crossJoin(cdf)
                         .withColumn("_d", _int_l2(F.col("v"), F.col("cent")))
@@ -270,8 +272,8 @@ def _ivf_assign_full(embeddings: DataFrame, n_lists: int,
     spark = embeddings.sparkSession
     cents = centroids if centroids is not None \
         else ivf_centroids(n_lists, dim, seed)
-    cdf = F.broadcast(spark.createDataFrame(
-        [(j, c) for j, c in enumerate(cents)],
+    cdf = F.broadcast(local_frame(
+        spark, list(enumerate(cents)),
         "list_id int, cent array<bigint>"))
     v = quant_col(F.col(vec_col))
     scored = (embeddings.select(F.col(id_col).alias("vec_id"), v.alias("v"))
@@ -314,8 +316,8 @@ def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
     spark = embeddings.sparkSession
     cents = centroids if centroids is not None \
         else ivf_centroids(n_lists, dim, seed)
-    cdf = F.broadcast(spark.createDataFrame(
-        [(j, c) for j, c in enumerate(cents)],
+    cdf = F.broadcast(local_frame(
+        spark, list(enumerate(cents)),
         "list_id int, cent array<bigint>"))
     full = _ivf_assign_full(embeddings, n_lists, id_col, vec_col, dim, seed,
                             centroids)

@@ -333,19 +333,3 @@ def build_corpus_df(spark, n_hosts: int = 3, pages_per_host: int = 25,
             yield pd.DataFrame(rows)
 
     return spine.mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def hash_docs_df(spark, n_docs: int, start: int = 0,
-                 tokens_per_doc: int = 100, vocab: int = 20_000):
-    """Deterministic pure-Column benchmark corpus for index benches:
-    token i of doc d is w<xxhash64(d*T+i) mod V>. Never materializes on
-    the driver; tools/bench_index_store.py builds its stores from it."""
-    from pyspark.sql import functions as F
-
-    return (spark.range(start, start + n_docs)
-            .select(F.col("id").alias("doc_id"),
-                    F.expr(
-                        f"array_join(transform(sequence(1, "
-                        f"{tokens_per_doc}), i -> concat('w', "
-                        f"pmod(xxhash64(id * {tokens_per_doc} + i), "
-                        f"{vocab}))), ' ')").alias("text")))

@@ -614,6 +614,47 @@ def test_bm25_df_map_single_job_plan(spark, docs):
         stats.unpersist()
 
 
+def test_bm25_df_map_warm_query_jobs_and_local_candidates(spark, tmp_path):
+    """One warm df_map query as the dashboard serves it (cached index,
+    corpus stats passed in, interactive_query_conf) starts at most 3 jobs:
+    the candidate-table broadcast, the doc_stats broadcast and the scoring
+    job. The candidate table is an Arrow LocalTableScan, so no Python
+    worker runs. Docs come from parquet so the only local scan in the plan
+    is the candidate table."""
+    spark.createDataFrame(
+        [(0, "spark join window stream"), (1, "join join vector hash"),
+         (2, "window stream agg sort")],
+        "doc_id long, text string").write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    postings = IX.build_postings(docs).cache()
+    postings.count()
+    stats = IX.build_doc_stats(docs).cache()
+    try:
+        total = stats.count()
+        avg_dl = IX.avg_doc_len(stats, total)
+        df_map = dict(
+            (r["term"], r["df"]) for r in IX.term_df(postings).collect())
+        want = RK.rank_bm25(postings, stats, "joins window", top_k=5,
+                            fallback=True).collect()
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        with RK.interactive_query_conf(spark):
+            out = RK.rank_bm25(postings, stats, "joins window", top_k=5,
+                               fallback=True, df_map=df_map,
+                               total_docs=total, avg_dl=avg_dl)
+            jobs0 = dag.numTotalJobs()
+            rows = out.collect()
+            jobs = dag.numTotalJobs() - jobs0
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        assert rows == want and len(rows) == 3
+        assert jobs <= 3, jobs
+        assert "ExistingRDD" not in plan
+        assert any("LocalTableScan [term#" in line
+                   for line in plan.splitlines()), plan
+    finally:
+        postings.unpersist()
+        stats.unpersist()
+
+
 def test_auto_pushdown_cap_resolution(spark, tmp_path):
     """url_pushdown_max="auto" resolves per-corpus from bucket-file sizes:
     small buckets (~one row group) keep the conservative one-chunk cap;

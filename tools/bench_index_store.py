@@ -51,12 +51,16 @@ QUERIES = ["w101 w2202", "w777 w8080 w15000", "w42 w4242 w424 w2",
            "w19999 w1", "w3141 w2718 w1618"]
 
 
-def synth_docs(spark, n_docs: int):
-    from high_performance_parallel_search_engine_spark.sources.synth import (
-        hash_docs_df)
-
-    return hash_docs_df(spark, n_docs, tokens_per_doc=TOKENS_PER_DOC,
-                        vocab=VOCAB)
+def hash_docs_df(spark, n_docs: int):
+    """Deterministic pure-Column corpus: token i of doc d is
+    w<xxhash64(d*T+i) mod V>. Never materializes on the driver."""
+    return (spark.range(n_docs)
+            .select(F.col("id").alias("doc_id"),
+                    F.expr(
+                        f"array_join(transform(sequence(1, "
+                        f"{TOKENS_PER_DOC}), i -> concat('w', "
+                        f"pmod(xxhash64(id * {TOKENS_PER_DOC} + i), "
+                        f"{VOCAB}))), ' ')").alias("text")))
 
 
 def _median_wall(fn, reps: int = REPS) -> float:
@@ -76,7 +80,7 @@ def main() -> None:
     import tempfile
     work = tempfile.mkdtemp(prefix="bench-ixstore-")
 
-    docs = synth_docs(spark, n_docs)
+    docs = hash_docs_df(spark, n_docs)
     postings, stats_df = build_index_tables(docs)
     plain_path = f"{work}/plain_postings"
     postings.write.parquet(plain_path)
