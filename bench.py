@@ -160,10 +160,15 @@ def phase_queries(spark, names: list[str] = HEADLINE
     control so cross-round comparisons can normalize for host co-tenancy;
     the whole phase re-runs once if its controls flag co-tenancy. Each
     query's jobs carry the description `q:<name>`, and the jobs one run
-    of it takes are logged with its timing."""
+    of it takes are logged with its timing, next to the generated classes
+    it compiled (process-wide Janino count): a repeated run that still
+    compiles means the working set outgrew the codegen cache."""
     import statistics
 
     from high_performance_parallel_search_engine_spark.oracles import QUERIES
+    from high_performance_parallel_search_engine_spark.session import (
+        codegen_compiles,
+    )
 
     sc = spark.sparkContext
 
@@ -180,15 +185,18 @@ def phase_queries(spark, names: list[str] = HEADLINE
             sc.setJobDescription(f"q:{name}")
             for _ in range(3):
                 j0 = set(sc.statusTracker().getJobIdsForGroup(None))
+                c0 = codegen_compiles(spark)
                 t0 = time.monotonic()
                 n = fn(spark, SF_DIR).count()
                 walls.append(time.monotonic() - t0)
                 jobs = len(set(sc.statusTracker().getJobIdsForGroup(None))
                            - j0)
+                compiles = codegen_compiles(spark) - c0
             sc.setJobDescription(None)
             timings[name] = round(statistics.median(walls), 3)
             print(f"  {name}: {timings[name]}s median of "
-                  f"{[round(w, 2) for w in walls]} ({n} rows, {jobs} jobs)",
+                  f"{[round(w, 2) for w in walls]} ({n} rows, {jobs} jobs, "
+                  f"{compiles} compiles)",
                   file=sys.stderr)
         return timings
 

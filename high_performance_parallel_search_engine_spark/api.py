@@ -11,7 +11,10 @@ Routes (reference analog in parens):
                                          postings pass via rank_bm25_batch;
                                          per-query timing in the response)
   GET  /api/metrics                     (api.py:414 - per-round crawl
-                                         metrics.json list)
+                                         metrics.json list: counts, stage
+                                         walls, codegen_compiles - the
+                                         process-wide count of classes the
+                                         JVM generated during the round)
   POST /api/crawl   {start_url, depth?, max_pages?}
                                         (api.py:428 /api/build analog:
                                          launches a crawl into the workdir;

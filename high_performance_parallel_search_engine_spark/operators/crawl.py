@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
+from pyspark.util import inheritable_thread_target
 
 from ..functions.udfs import html_text_and_links
 from ..functions.urlsql import (
@@ -72,6 +73,7 @@ from ..functions.urlsql import (
     url_priority_col,
     valid_crawl_url_col,
 )
+from ..session import codegen_compiles
 from .arbitrate import (
     MAX_LINKS_PER_PAGE, arbitrate_exact, arbitrate_scale, arbitration_mode,
 )
@@ -79,7 +81,7 @@ from .common import (
     arrow_table, local_frame, seen_anti_join, with_global_seq_counted,
 )
 from .politeness import apply_budget, delay_ms_col
-from .robots import apply_robots
+from .robots import apply_robots, robots_table
 
 FRONTIER_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -493,10 +495,11 @@ def _fetch_ok(html_len):
 
 
 def _gates(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
-           config: CrawlConfig, rnd: int) -> tuple[DataFrame, dict | None]:
-    """Validity (silent drop, c.c:1082), robots and politeness budget as ONE
-    frame: every valid frontier row, with `action` = 'attempt',
-    'robots_denied' or 'deferred'.
+           config: CrawlConfig, rnd: int,
+           robots: DataFrame | None) -> tuple[DataFrame, dict | None]:
+    """Validity (silent drop, c.c:1082), robots (the crawl's robots_table)
+    and politeness budget as ONE frame: every valid frontier row, with
+    `action` = 'attempt', 'robots_denied' or 'deferred'.
 
     Trace mode adds the fetch gate as a boolean `ok` from a left join with
     a slim (url, length(html)) projection, so html never shuffles, and
@@ -511,8 +514,7 @@ def _gates(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
         if budgets else None)
     cols = FRONTIER_SCHEMA.fieldNames()
     f = apply_robots(frontier.where(
-        valid_crawl_url_col(F.col("url"), F.col("base_domain"))),
-        config.robots)
+        valid_crawl_url_col(F.col("url"), F.col("base_domain"))), robots)
     ranked = apply_budget(f.where(F.col("robots_ok")), budgets,
                           politeness.get("*"))
     gated = ranked.select(*cols, F.when(F.col("fetch_now"), F.lit("attempt"))
@@ -786,8 +788,14 @@ def _write_outputs(d: Path, rnd: int, nxt: DataFrame, stored: DataFrame,
             *[F.count_if(F.col("action") == a).alias(a) for a in actions],
             F.sum("delay_ms").alias("delay")).write.mode("overwrite") \
             .parquet(str(d / "events.parquet"))
+    # pool threads start with empty JVM local properties: carry the
+    # caller's job group and description into each job. Only pinned-thread
+    # mode (the default) has per-thread properties; otherwise the helper
+    # hands the session back and the jobs run as they are
+    inherit = inheritable_thread_target(nxt.sparkSession)
     with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futs = {k: pool.submit(fn) for k, fn in jobs.items()}
+        futs = {k: pool.submit(inherit(fn) if callable(inherit) else fn)
+                for k, fn in jobs.items()}
         res = {k: fu.result() for k, fu in futs.items()}
     lineage = [{"partition": r["lineage_partition"], "pages": r["cnt"]}
                for r in res["lineage"]]
@@ -805,19 +813,26 @@ def _write_outputs(d: Path, rnd: int, nxt: DataFrame, stored: DataFrame,
 
 
 def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
-              state: CrawlState, config: CrawlConfig) -> dict:
+              state: CrawlState, config: CrawlConfig,
+              robots: DataFrame | None) -> dict:
     """Execute one BSP round as one sequence of stages; writes the round
     snapshot (manifest.json last = commit marker); mutates state.
     config.trace materializes the gate frame (with the fetch gate) once and
     adds the stop cutoff and the events; without it the stop conditions
-    must be unbounded."""
+    must be unbounded. `robots` is robots_table(spark, config.robots),
+    which run_crawl builds once per crawl.
+
+    metrics.json's `codegen_compiles` is how many generated classes the
+    driver JVM compiled during the round. The counter is process-wide, so
+    it includes any concurrent work in the same JVM; a repeated round
+    shape whose classes are still in the codegen cache reads 0."""
     assert config.trace or (config.max_pages >= 10**9
                             and config.failure_stop >= 10**9), \
         "trace=False requires unbounded stop conditions"
     if config.trace and config.priority and config.arbitration == "scale":
         raise ValueError("priority ordering runs in the exact arbitration "
                          "pass; use arbitration='exact' or 'auto'")
-    t0 = time.monotonic()
+    t0, compiles0 = time.monotonic(), codegen_compiles(spark)
     stage_wall: dict[str, float] = {}
     _last = [t0]
 
@@ -835,7 +850,7 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
         str(_round_dir(workdir, rnd - 1) / "frontier_next.parquet"))
     pages, scan_bounded, k_files = _prune_and_pushdown(pages, frontier,
                                                       config, state)
-    gated, gate = _gates(spark, frontier, pages, config, rnd)
+    gated, gate = _gates(spark, frontier, pages, config, rnd, robots)
     events, carry = None, None
     if config.trace:
         _mark("fetch_gate")
@@ -867,6 +882,7 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
     _mark("writes_and_metrics")
     metrics["wall_sec"] = round(time.monotonic() - t0, 3)
     metrics["stage_wall"] = stage_wall
+    metrics["codegen_compiles"] = codegen_compiles(spark) - compiles0
     _write_text(d / "metrics.json", json.dumps(metrics, indent=1))
 
     state.pages_crawled += metrics["fetched"]
@@ -937,9 +953,10 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: list[str],
             shutil.rmtree(d, ignore_errors=True)
         (Path(workdir) / "_compacted_upto").unlink(missing_ok=True)
         state = init_crawl(spark, seeds, workdir, config)
+    robots = robots_table(spark, config.robots)
     while (state.round < config.max_rounds and not state.stopped
            and state.next_frontier_rows):
-        m = run_round(spark, pages, workdir, state, config)
+        m = run_round(spark, pages, workdir, state, config, robots)
         state.metrics.append(m)
         state.round += 1
         if (config.compact_every

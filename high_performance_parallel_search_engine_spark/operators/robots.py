@@ -12,7 +12,7 @@ the frontier).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.urlsql import base_domain_col
@@ -60,7 +60,7 @@ def robots_rules_from_df(robots_txt: DataFrame, agent: str = "*",
     """Distributed robots.txt ingestion: (host, robots_txt) -> exploded
     (host, rule, path_prefix) rules table via one Arrow pass - at 10^7 hosts
     the parse runs where the bodies live and only the tiny rules table
-    returns. Collect the result into CrawlConfig.robots (apply_robots)."""
+    returns. Collect the result into CrawlConfig.robots (robots_table)."""
     from pyspark.sql.types import (
         ArrayType, StringType, StructField, StructType,
     )
@@ -83,28 +83,34 @@ def robots_rules_from_df(robots_txt: DataFrame, agent: str = "*",
                     F.col("_r.path_prefix").alias("path_prefix")))
 
 
-def apply_robots(df: DataFrame, rules: list[tuple[str, str, str]] | None,
-                 url_col: str = "url", host_col: str = "host") -> DataFrame:
-    """Adds `robots_ok` boolean from (host, rule, path_prefix) rules.
+def robots_table(spark: SparkSession,
+                 rules: list[tuple[str, str, str]] | None) -> DataFrame | None:
+    """(host, rule, path_prefix) rules grouped per host on the driver: one
+    row per host holding its (rule, path_prefix) array, or None without
+    rules. A crawl builds it once (run_crawl) and joins it every round.
 
-    The rules are grouped per host on the driver (one row per host holding
-    its (rule, path_prefix) array) and broadcast-joined on host, so each
-    `df` row costs one hash lookup plus a pass over its own host's rules,
-    and `df` is never shuffled or regrouped."""
+    The driver-side build dominates at scale: a 50k-row gate read 13-19 s
+    at 10^6 hosts with 2 rules each (local[4]), where the 58 MB Arrow table
+    passes localRelationThreshold and ships as a JVM-side RDD."""
     if not rules:
-        return df.withColumn("robots_ok", F.lit(True))
+        return None
     by_host: dict[str, list[tuple[str, str]]] = {}
     for host, rule, prefix in rules:
         by_host.setdefault(host, []).append((rule, prefix))
-    # the driver-side build dominates at scale: a 50k-row gate read 13-19 s
-    # at 10^6 hosts with 2 rules each (local[4]), where the 58 MB Arrow
-    # table passes localRelationThreshold and ships as a JVM-side RDD
-    table = local_frame(
-        df.sparkSession, list(by_host.items()),
-        f"{host_col} string, _rules array<struct<rule:string,"
-        "path_prefix:string>>")
-    path = F.substring(F.col(url_col),
-                       F.length(base_domain_col(F.col(url_col))) + 1, 1 << 30)
+    return local_frame(
+        spark, list(by_host.items()),
+        "host string, _rules array<struct<rule:string,path_prefix:string>>")
+
+
+def apply_robots(df: DataFrame, table: DataFrame | None) -> DataFrame:
+    """Adds `robots_ok` boolean to a (url, host, ...) frame from a
+    robots_table. The table is broadcast-joined on host, so each `df` row
+    costs one hash lookup plus a pass over its own host's rules, and `df`
+    is never shuffled or regrouped."""
+    if table is None:
+        return df.withColumn("robots_ok", F.lit(True))
+    path = F.substring(F.col("url"),
+                       F.length(base_domain_col(F.col("url"))) + 1, 1 << 30)
     path = F.when(path == "", "/").otherwise(path)
     match = F.filter("_rules", lambda r: path.startswith(r["path_prefix"]))
 
@@ -114,7 +120,7 @@ def apply_robots(df: DataFrame, rules: list[tuple[str, str, str]] | None,
     best = longest(match)
     dis_best = longest(F.filter(match, lambda r: r["rule"] == "disallow"))
     # longest match wins; a disallow at the winning length beats an allow
-    return (df.join(F.broadcast(table), on=host_col, how="left")
+    return (df.join(F.broadcast(table), on="host", how="left")
             .withColumn("robots_ok", best.isNull()
                         | (F.coalesce(dis_best, F.lit(-1)) < best))
             .drop("_rules"))

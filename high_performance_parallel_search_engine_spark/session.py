@@ -57,6 +57,16 @@ def build_session(app: str = "hppse-spark", master: str | None = None,
         # URL_PUSHDOWN_MAX note); past this threshold Spark's min/max
         # degradation is the safe behavior, not a missed optimization
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "600")
+        # generated-code cache: whole-stage-codegen classes live in an LRU
+        # of spark.sql.codegen.cache.maxEntries (default 100). A whole
+        # perfbench `serve` run generates 244-256 distinct classes and a
+        # whole `crawl_exact` run (2-round crawls) 132-142, each op in the
+        # same order, so at 100 every op evicted its own classes and a warm
+        # op re-ran Janino (14 ms mean a class, 4 cores) and then the JIT on
+        # 171-176 (serve) or 103-138 (crawl) of them. 1000 holds either
+        # working set ~4x over; a warm op now compiles 0-8. Static: only
+        # the conf the JVM starts with counts (spark-submit must pass it).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -64,3 +74,13 @@ def build_session(app: str = "hppse-spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """How many generated classes this JVM has compiled so far (Janino runs,
+    from CodegenMetrics). Process-wide: it counts every session and thread
+    of the driver JVM, so a delta across a call also counts whatever ran
+    concurrently with it. Under local[n] the tasks run in that JVM too; on
+    a cluster each executor JVM compiles (and counts) its own copies."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()

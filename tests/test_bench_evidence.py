@@ -562,8 +562,12 @@ class _FakeQuery:
 def test_phase_queries_labels_each_querys_jobs(monkeypatch, capsys):
     """Phase 1 times only the queries it is given, runs each under the
     job description `q:<name>`, clears it afterwards, and logs the job
-    count of one run next to the query's timing."""
-    from high_performance_parallel_search_engine_spark import oracles
+    and generated-class compile counts of one run next to the query's
+    timing."""
+    from high_performance_parallel_search_engine_spark import (
+        oracles,
+        session,
+    )
 
     jobs: set = set()
     descriptions = []
@@ -590,13 +594,17 @@ def test_phase_queries_labels_each_querys_jobs(monkeypatch, capsys):
         "not_asked": lambda sp, sf: 1 / 0,
     }
     monkeypatch.setattr(oracles, "QUERIES", queries)
+    # a fake JVM compile counter: 3 classes per job
+    monkeypatch.setattr(session, "codegen_compiles",
+                        lambda sp: 3 * len(jobs))
     monkeypatch.setattr(bench, "gated", lambda name, fn: (fn(), {"ok": 1}))
     timings, ctl = bench.phase_queries(Spark(), ["two_jobs", "one_job"])
 
     assert list(timings) == ["two_jobs", "one_job"] and ctl == {"ok": 1}
     assert descriptions == ["q:two_jobs", None, "q:one_job", None]
     err = capsys.readouterr().err
-    assert "(10 rows, 2 jobs)" in err and "(3 rows, 1 jobs)" in err
+    assert "(10 rows, 2 jobs, 6 compiles)" in err
+    assert "(3 rows, 1 jobs, 3 compiles)" in err
 
 
 def test_phase_plans_writes_one_plan_file_per_query(monkeypatch, tmp_path):

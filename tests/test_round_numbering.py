@@ -8,7 +8,9 @@ inside the exact arbitration pass.
   url_seen set round by round;
 - a fixed 2-round exact crawl (robots, `*` budget, binding max_pages)
   never calls the global numbering primitive and runs at most 20 Spark
-  jobs per round;
+  jobs per round; it builds the robots rules table once, not per round;
+- every job an exact round starts, including the writes its thread pool
+  runs, carries the caller's job group;
 - scale arbitration in trace mode numbers its FIFO frontier densely too:
   with a links cap that never binds (so the revival quirk cannot occur)
   it reproduces the serial oracle; a priority policy, which only the
@@ -118,8 +120,16 @@ def test_exact_round_job_floor(spark, pages_df, tmp_path, monkeypatch):
     def numbering(*a, **k):
         raise AssertionError("with_global_seq_counted called")
 
+    built = []
+    robots_table = crawl.robots_table
+
+    def robots_built(*a, **k):
+        built.append(1)
+        return robots_table(*a, **k)
+
     monkeypatch.setattr(crawl, "run_round", counted)
     monkeypatch.setattr(crawl, "with_global_seq_counted", numbering)
+    monkeypatch.setattr(crawl, "robots_table", robots_built)
     config = CrawlConfig(arbitration="exact", max_depth=3, max_pages=10,
                          politeness={"*": 4}, robots=ROBOTS)
     seeds = [page_url(h, 0) for h in range(3)]
@@ -128,3 +138,24 @@ def test_exact_round_job_floor(spark, pages_df, tmp_path, monkeypatch):
     assert {"deferred", "robots_denied"} <= {
         a for m in state.metrics for a in m["events"]}
     assert all(n <= 20 for n in jobs), jobs
+    assert len(built) == 1      # once per crawl, not per round
+
+
+def test_round_jobs_keep_caller_job_group(spark, pages_df, tmp_path):
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    config = CrawlConfig(arbitration="exact", max_depth=3, max_pages=60,
+                         politeness={"*": 4}, robots=ROBOTS, max_rounds=1)
+    sc.setJobGroup("crawl-under-test", "one exact round")
+    try:
+        j0 = jsc.dagScheduler().numTotalJobs()
+        state = run_crawl(spark, pages_df, [page_url(h, 0) for h in range(3)],
+                          str(tmp_path / "c"), config)
+        j1 = jsc.dagScheduler().numTotalJobs()
+    finally:
+        jsc.clearJobGroup()
+    assert len(state.metrics) == 1 and state.next_frontier_rows > 0
+    jsc.listenerBus().waitUntilEmpty()
+    grouped = set(sc.statusTracker().getJobIdsForGroup("crawl-under-test"))
+    assert j1 > j0 and set(range(j0, j1)) <= grouped, \
+        sorted(set(range(j0, j1)) - grouped)
