@@ -514,14 +514,14 @@ def phase_long_crawl(corpus_path: str, priority: bool = False,
     own_session = spark is None
     if own_session:
         spark = build_session(CPUS)
-    pages, n_buckets = read_bucketed_pages(spark, corpus_path)
+    pages = read_bucketed_pages(spark, corpus_path)
     seeds = [page_url(h, 0) for h in range(min(8, N_HOSTS))]
     workdir = tempfile.mkdtemp(prefix="bench_long_")
     cfg = CrawlConfig(max_depth=MAX_DEPTH, max_pages=1 << 40,
                       failure_stop=1 << 40, arbitration="scale",
                       trace=False, max_rounds=64, priority=priority,
                       politeness={"*": 800},  # budget stretches the rounds
-                      compact_every=4, pages_buckets=n_buckets)
+                      compact_every=4)
     t0 = time.monotonic()
     state = run_crawl(spark, pages, seeds, workdir, cfg)
     wall = time.monotonic() - t0

@@ -19,6 +19,9 @@ Flag semantics kept from main.c:
   -q QUERY runs one BM25 query over the crawl's extracted text and prints
      the top-10 (the reference enters an interactive prompt; one-shot here)
 
+Queries (-q, -i, --index-store) are answered by api.EngineState, the
+dashboard's serving stack; this module only prints what it returns.
+
 Usage examples:
   python -m high_performance_parallel_search_engine_spark -c https://host0.example.com/p/0/0 -d 3 -p 20
   python -m high_performance_parallel_search_engine_spark -m user0 -q "spark join" --workdir /tmp/crawl
@@ -150,21 +153,33 @@ def _clamped_limits(args) -> tuple[int, int]:
     return depth, pages
 
 
-def _print_hits(entries) -> None:
-    """Ranked-result lines shared by every CLI serving path; entries are
-    (doc_id, score, url) tuples."""
-    entries = list(entries)
-    for rank, (d, s, u) in enumerate(entries, 1):
-        print(f"{rank:2d}. doc {d} score={s:.4f} {u}")
-    if not entries:
+def _print_result(res: dict) -> float:
+    """Print one EngineState.search result as ranked lines; returns the
+    query's wall in ms (0.0 for an error)."""
+    if res["status"] != "ok":
+        print(f"Error: {res['error']}")
+        return 0.0
+    print(f"Query processed in {res['query_time_ms']:.2f} ms")
+    for rank, r in enumerate(res["results"], 1):
+        print(f"{rank:2d}. doc {r['doc_id']} score={r['score']:.4f} "
+              f"{r['url']}")
+    if not res["results"]:
         print("No results.")
+    return res["query_time_ms"]
 
 
-def _interactive_loop(run_query) -> float:
-    """The reference's query prompt (main.c:172-184); EOF or 'exit'
-    quits. Returns the last query's wall in ms (0.0 if none ran)."""
-    print("Search engine ready for queries.")
+def _answer_queries(engine, args) -> float:
+    """-q, then the reference's query prompt for -i (main.c:172-184; EOF
+    or 'exit' quits), every query answered by engine.search (the same
+    serving stack as the dashboard). Returns the last query's wall in ms
+    (0.0 if none ran)."""
     last = 0.0
+    if args.query:
+        print(f"\nSearching for: {args.query}")
+        last = _print_result(engine.search(args.query, 10))
+    if not args.interactive:
+        return last
+    print("Search engine ready for queries.")
     while True:
         try:
             q = input("Enter your search query: ").strip()
@@ -173,64 +188,16 @@ def _interactive_loop(run_query) -> float:
         if not q or q.lower() in ("exit", "quit"):
             break
         print(f"\nSearching for: {q}")
-        last = run_query(q)
+        last = _print_result(engine.search(q, 10)) or last
     return last
 
 
-def _serve_from_store(args, spark=None) -> int:
-    """Serve-only mode: -q / -i answered straight from a published
-    term-bucketed store directory (no crawl, no source corpus). The BM25
-    plan is the store's whole point: candidate terms prune the scan to
-    their buckets, df comes from the exchange-free (term, df) table."""
-    from pyspark.sql import functions as F
-
-    from .operators.index import avg_doc_len, term_df
-    from .operators.index_store import open_store
-    from .operators.ranking import interactive_query_conf, rank_bm25
+def _session(args):
     from .session import build_session
 
-    if spark is None:
-        master = f"local[{args.threads}]" if args.threads else None
-        spark = build_session("hppse-cli", master=master,
-                              shuffle_partitions=args.threads)
-    tbl, stats, doc_map = open_store(spark, args.index_store,
-                                     table="cli_postings_store")
-    total = stats.count()
-    avg_dl = avg_doc_len(stats, total)
-    dfs = term_df(tbl).cache()
-    dfs.count()
-    print(f"Serving published index from {args.index_store}: "
-          f"{total} documents.")
-
-    def run_query(q: str) -> float:
-        from .operators.phrase import as_quoted_phrase
-
-        if as_quoted_phrase(q) is not None:
-            # the API's store-backed server 400s this for the same reason
-            print("Error: phrase search needs a crawl workdir (the "
-                  "published store has no positions)")
-            return 0.0
-        t0 = time.perf_counter()
-        with interactive_query_conf(spark):
-            top = rank_bm25(tbl, stats, q, total_docs=total, avg_dl=avg_dl,
-                            top_k=10, fallback=True, df_table=dfs).collect()
-        ms = (time.perf_counter() - t0) * 1000
-        urls = {}
-        if doc_map is not None and top:
-            urls = {r["doc_id"]: r["url"] for r in
-                    doc_map.where(F.col("doc_id").isin(
-                        [r["doc_id"] for r in top])).collect()}
-        print(f"Query processed in {ms:.2f} ms")
-        _print_hits((r["doc_id"], r["score"], urls.get(r["doc_id"], ""))
-                    for r in top)
-        return ms
-
-    if args.query:
-        print(f"\nSearching for: {args.query}")
-        run_query(args.query)
-    if args.interactive:
-        _interactive_loop(run_query)
-    return 0
+    master = f"local[{args.threads}]" if args.threads else None
+    return build_session("hppse-cli", master=master,
+                         shuffle_partitions=args.threads)
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
@@ -266,18 +233,22 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         if ignored:
             print(f"Warning: {', '.join(ignored)} ignored in "
                   f"--index-store mode")
-        return _serve_from_store(args, spark)
+        from .api import EngineState
+
+        # serve-only: the published store's postings, doc stats and url
+        # map; no crawl, no source corpus
+        engine = EngineState(spark or _session(args), None,
+                             index_store=args.index_store)
+        print(f"Serving published index from {args.index_store}: "
+              f"{engine.build()['total']} documents.")
+        _answer_queries(engine, args)
+        return 0
     if not (args.crawl or args.medium):
         build_parser().print_help()
         return 0
 
-    from pyspark.sql import functions as F
-
     from .baseline import load_baseline, save_baseline, speedup_report
     from .operators.crawl import CrawlConfig, run_crawl
-    from .operators.index import build_doc_stats, build_postings
-    from .operators.ranking import rank_bm25
-    from .session import build_session
     from .sources.synth import build_corpus_df
 
     depth, max_pages = _clamped_limits(args)
@@ -294,13 +265,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                   f"Will crawl up to {max_pages} pages.")
         print(f"Starting website crawl from URL: {start_url}")
 
-    if spark is None:
-        master = f"local[{args.threads}]" if args.threads else None
-        spark = build_session("hppse-cli", master=master,
-                              shuffle_partitions=args.threads)
+    spark = spark or _session(args)
     workdir = args.workdir or tempfile.mkdtemp(prefix="hppse-crawl-")
     resuming = args.resume or args.resume_from is not None
-    pages_buckets = None
     if args.pages_table:
         pages = spark.read.parquet(args.pages_table) \
             .select("url", "warc_ts", "html", "lang")
@@ -347,7 +314,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 _json.dump({"pages_warc": src_now}, fh)
             print(f"Parsed WARC archives from {args.pages_warc} "
                   f"-> {staged} (16 buckets)")
-        pages, pages_buckets = read_bucketed_pages(spark, staged)
+        pages = read_bucketed_pages(spark, staged)
     else:
         pages = build_corpus_df(spark).select("url", "warc_ts", "html", "lang")
     priority = {"fifo": False, "north": True, "openmp": "openmp"}[args.priority]
@@ -373,7 +340,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                   robots_rules_from_df(bodies).collect()]
     cfg = CrawlConfig(max_depth=depth, max_pages=max_pages,
                       priority=priority, politeness=politeness,
-                      robots=robots, pages_buckets=pages_buckets)
+                      robots=robots)
     _warn_resume_overrides(args)
     t0 = time.perf_counter()
     try:
@@ -416,36 +383,17 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     last_query_ms = 0.0
     if (args.query or args.interactive or args.save_baseline
             or args.publish_index):
-        docs = (spark.read.parquet(f"{workdir}/round=*/pages.parquet")
-                .select(F.col("seq").alias("doc_id"), "url", "text"))
-        from .operators.index import avg_doc_len, term_df, term_df_map
+        # the dashboard's serving stack over the crawl's pages: one
+        # tokenization pass, the df map and, while the index fits the
+        # collect caps, in-process serving (the reference's prompt serves
+        # from its in-process index, main.c:172-184)
+        from .api import EngineState
 
+        engine = EngineState(spark, workdir)
         t1 = time.perf_counter()
-        postings = build_postings(docs).cache()
-        stats = build_doc_stats(docs).cache()
-        total = stats.count()
-        avg_dl = avg_doc_len(stats, total)
-        n_postings = postings.count()  # warm the cache; queries reuse it
-        dfs = term_df(postings).cache()
-        # driver-side {term: df} while the vocab fits (shared contract:
-        # operators.index.term_df_map): each interactive query is then
-        # ONE Spark job
-        df_map = term_df_map(dfs)
-        # the reference's prompt loop serves from its in-process index
-        # (main.c:172-184); when the index fits the collect caps, do the
-        # same (the gate-then-build sequence is shared with the dashboard:
-        # operators.local_serve.build_local_serving) - a query then costs
-        # microseconds instead of a Spark job. Past either cap, or when no
-        # query will run (--save-baseline alone): the distributed path.
-        local_ix = url_map = None
-        if args.query or args.interactive:
-            from .operators.local_serve import build_local_serving
-
-            local_ix, url_map = build_local_serving(
-                postings, stats, docs.select("doc_id", "url"),
-                total_docs=total, avg_dl=avg_dl, n_postings=n_postings)
+        ix = engine.build()
         phase_ms["IndexingTime_ms"] = (time.perf_counter() - t1) * 1000
-        print(f"Indexed {total} documents.")
+        print(f"Indexed {ix['total']} documents.")
 
         if args.publish_index:
             # a CLI crawl is clamped to <=100 pages, so 16 buckets keeps
@@ -453,79 +401,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             # the cluster (index_store.save_postings_bucketed docstring)
             from .operators.index_store import publish_store
 
-            publish_store(postings, args.publish_index,
+            publish_store(ix["postings"], args.publish_index,
                           table="cli_postings_store", buckets=16,
-                          doc_map=docs.select("doc_id", "url"))
+                          doc_map=ix["urls"])
             print(f"Published bucketed index store to {args.publish_index}")
-
-        pos_holder: list = []  # lazy positional index for phrase queries
-
-        def run_query(q: str) -> float:
-            from .operators.ranking import interactive_query_conf
-
-            from .operators.phrase import as_quoted_phrase
-
-            phrase = as_quoted_phrase(q)
-            if phrase is not None:
-                # quoted query -> exact phrase match over the lazily-built
-                # positional index (built once, reused by later phrases)
-                from .operators.phrase import (build_positional_postings,
-                                               phrase_terms,
-                                               rank_bm25_phrase)
-
-                if not phrase_terms(phrase):
-                    print("Error: phrase has no indexable terms")
-                    return 0.0
-                if not pos_holder:
-                    pos_holder.append(build_positional_postings(
-                        docs.select("doc_id", "text")).cache())
-                    pos_holder[0].count()
-                t2 = time.perf_counter()
-                with interactive_query_conf(spark):
-                    top = rank_bm25_phrase(
-                        pos_holder[0], stats, phrase, total_docs=total,
-                        avg_dl=avg_dl, top_k=10).collect()
-                    by_id = {r["doc_id"]: r["url"]
-                             for r in docs.where(F.col("doc_id").isin(
-                                 [r["doc_id"] for r in top] or [-1]))
-                             .select("doc_id", "url").collect()}
-                ms = (time.perf_counter() - t2) * 1000
-                print(f"Query processed in {ms:.2f} ms")
-                _print_hits((r["doc_id"], r["score"],
-                             by_id.get(r["doc_id"], "")) for r in top)
-                return ms
-
-            if local_ix is not None:
-                t2 = time.perf_counter()
-                hits = local_ix.rank(q, top_k=10, fallback=True)
-                ms = (time.perf_counter() - t2) * 1000
-                print(f"Query processed in {ms:.2f} ms")
-                _print_hits((d, s, url_map.get(d, "")) for d, s in hits)
-                return ms
-
-            t2 = time.perf_counter()
-            with interactive_query_conf(spark):
-                top = rank_bm25(postings, stats, q, total_docs=total,
-                                avg_dl=avg_dl, top_k=10, fallback=True,
-                                df_table=None if df_map is not None else dfs,
-                                df_map=df_map).collect()
-            ms = (time.perf_counter() - t2) * 1000
-            by_id = {r["doc_id"]: r["url"]
-                     for r in docs.where(F.col("doc_id").isin(
-                         [r["doc_id"] for r in top] or [-1]))
-                     .select("doc_id", "url").collect()}
-            print(f"Query processed in {ms:.2f} ms")
-            _print_hits((r["doc_id"], r["score"],
-                         by_id.get(r["doc_id"], "")) for r in top)
-            return ms
-
-        if args.query:
-            print(f"\nSearching for: {args.query}")
-            last_query_ms = run_query(args.query)
-        if args.interactive:
-            ms = _interactive_loop(run_query)
-            if ms:
-                last_query_ms = ms
+        last_query_ms = _answer_queries(engine, args)
     if last_query_ms:
         phase_ms["QueryProcessingTime_ms"] = last_query_ms
     phase_ms["TotalExecutionTime_ms"] = (time.perf_counter() - t0) * 1000

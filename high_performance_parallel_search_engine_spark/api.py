@@ -251,6 +251,15 @@ class EngineState:
             self._readers += 1
             return self._index
 
+    def build(self) -> dict:
+        """Build the index now if it is not built yet and return it (the
+        dict _build_index returns: postings, stats, total, urls, ...).
+        The CLI calls it to time the build, report the document count and
+        publish the postings before its first query."""
+        ix = self._acquire_index()
+        self._release_index()
+        return ix
+
     def _release_index(self):
         with self._lock:
             self._readers -= 1

@@ -74,6 +74,7 @@ from ..functions.urlsql import (
     valid_crawl_url_col,
 )
 from ..session import codegen_compiles
+from ..sources.tables import bucket_count
 from .arbitrate import (
     MAX_LINKS_PER_PAGE, arbitrate_exact, arbitrate_scale, arbitration_mode,
 )
@@ -126,10 +127,6 @@ class CrawlConfig:
     # merge url_seen deltas every k completed rounds (None = never);
     # bounds the multi-dir anti-join fan-in on long crawls
     compact_every: int | None = None
-    # bucket count of a bucket-partitioned pages table (sources/tables.py
-    # write_bucketed_pages); enables partition-pruned fetch scans for small
-    # frontiers. None = unbucketed pages.
-    pages_buckets: int | None = None
     # frontiers up to this size push their exact url list into the pages
     # scan (point-lookup pushdown; see _prune_and_pushdown). "auto"
     # (default) resolves ONCE per crawl from the bucket files' sizes
@@ -342,7 +339,8 @@ def resolve_pushdown_max(pages: DataFrame,
     An explicit int/None passes through untouched."""
     if config.url_pushdown_max != "auto":
         return config.url_pushdown_max
-    if not config.pages_buckets or "bucket" not in pages.columns:
+    B = bucket_count(pages)
+    if not B:
         return URL_PUSHDOWN_CHUNK
     total = 0
     for f in pages.inputFiles():
@@ -352,7 +350,7 @@ def resolve_pushdown_max(pages: DataFrame,
             total += os.path.getsize(f[len("file:"):])
         except OSError:
             return URL_PUSHDOWN_CHUNK
-    if total / config.pages_buckets >= AUTO_PUSHDOWN_BYTES_PER_BUCKET:
+    if total / B >= AUTO_PUSHDOWN_BYTES_PER_BUCKET:
         return URL_PUSHDOWN_MAX
     return URL_PUSHDOWN_CHUNK
 
@@ -435,8 +433,9 @@ def _prune_and_pushdown(pages: DataFrame, frontier: DataFrame,
     applies and the bucket id only when bucket pruning applies (bucket is a
     function of url). Both narrowings are semantics-neutral:
 
-    - bucket pruning, on a bucket-partitioned table (sources/tables.py
-      write_bucketed_pages) with a frontier small enough (<= 4*B urls) to
+    - bucket pruning, on a bucket-partitioned table read through
+      sources/tables.py read_bucketed_pages (B is the count its `bucket`
+      column carries) with a frontier small enough (<= 4*B urls) to
       plausibly miss buckets: keep the frontier's buckets only. A pruned
       page can never match the fetch join, and a 32-url round against a
       100 TB corpus costs 32 buckets, not a full scan.
@@ -459,7 +458,7 @@ def _prune_and_pushdown(pages: DataFrame, frontier: DataFrame,
     signal _coalesce_small_round needs to avoid serializing a scan whose
     frontier is small but whose bytes are not."""
     n = state.next_frontier_rows
-    B = config.pages_buckets if "bucket" in pages.columns else None
+    B = bucket_count(pages)
     cap = config.url_pushdown_max
     if cap == "auto":
         cap = URL_PUSHDOWN_CHUNK
@@ -825,7 +824,10 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
     metrics.json's `codegen_compiles` is how many generated classes the
     driver JVM compiled during the round. The counter is process-wide, so
     it includes any concurrent work in the same JVM; a repeated round
-    shape whose classes are still in the codegen cache reads 0."""
+    shape whose classes are still in the codegen cache reads 0. Its
+    `arbitration` is the mode the round resolved, 'exact' or 'scale': an
+    'auto' crawl switches to scale semantics above the size hint, and this
+    is where that switch shows."""
     assert config.trace or (config.max_pages >= 10**9
                             and config.failure_stop >= 10**9), \
         "trace=False requires unbounded stop conditions"
@@ -877,7 +879,7 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
         spark, stored, cut.where(F.col("action") == "deferred"), workdir,
         state, config, mode)
     _mark("arbitrate_ckpt")
-    metrics = {"round": rnd, **_write_outputs(
+    metrics = {"round": rnd, "arbitration": mode, **_write_outputs(
         d, rnd, nxt, stored, events, config.max_depth, bool(state.stopped))}
     _mark("writes_and_metrics")
     metrics["wall_sec"] = round(time.monotonic() - t0, 3)

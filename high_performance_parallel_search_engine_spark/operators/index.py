@@ -191,8 +191,8 @@ def term_df_map(dfs: DataFrame, vocab: int | None = None,
                 max_vocab: int = DF_MAP_MAX_VOCAB) -> dict | None:
     """Driver-side {term: df} from a (term, df) table, or None when the
     vocabulary exceeds max_vocab. The ONE definition of the warm-query
-    df_map contract shared by the dashboard (api.EngineState), the CLI
-    interactive mode and bench.py - candidate resolution and the
+    df_map contract shared by api.EngineState (which serves both the
+    dashboard and the CLI) and bench.py - candidate resolution and the
     plural/singular fallback preference then run as dict lookups, so a
     warm query runs no df aggregate and no vocabulary scan: 3 Spark jobs
     (rank_bm25's df_map path). Pass the already-known vocab count to skip

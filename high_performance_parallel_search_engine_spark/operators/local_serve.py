@@ -42,7 +42,7 @@ from .ranking import alt_term, query_terms
 LOCAL_INDEX_MAX_POSTINGS = 20_000_000
 
 # Companion gate for callers that also collect a doc_id->url map to
-# resolve hits locally (dashboard, CLI prompt): ~2M urls is ~200 MB of
+# resolve hits locally (api.EngineState): ~2M urls is ~200 MB of
 # driver dict; past it results resolve through a broadcast join against
 # the cached urls DataFrame on the distributed path.
 LOCAL_URLMAP_MAX_DOCS = 2_000_000
@@ -121,20 +121,18 @@ class LocalIndex:
         return n
 
 
-def build_local_serving(postings, doc_stats, urls,
+def build_local_serving(postings, doc_stats, urls, n_urls: int,
                         total_docs: int | None = None,
                         avg_dl: float | None = None,
                         n_postings: int | None = None,
-                        n_urls: int | None = None,
                         max_postings: int = LOCAL_INDEX_MAX_POSTINGS,
                         max_urls: int = LOCAL_URLMAP_MAX_DOCS):
     """(LocalIndex, {doc_id: url}) or (None, None) when either collect cap
-    fails - the ONE gate-then-build sequence the dashboard (api.EngineState)
-    and the CLI prompt share, so the caps can never silently diverge
-    between them. `urls` is a (doc_id, url) DataFrame; pass n_urls/
-    n_postings to skip count jobs the caller already ran."""
-    n_u = urls.count() if n_urls is None else n_urls
-    if n_u > max_urls:
+    fails - the gate-then-build sequence of api.EngineState, which serves
+    both the dashboard and the CLI prompt, so one set of caps governs
+    both. `urls` is a (doc_id, url) DataFrame of n_urls rows; pass
+    n_postings to skip a count job the caller already ran."""
+    if n_urls > max_urls:
         return None, None
     ix = build_local_index(postings, doc_stats, total_docs=total_docs,
                            avg_dl=avg_dl, max_postings=max_postings,

@@ -54,8 +54,8 @@ def build_positional_postings(docs: DataFrame, id_col: str = "doc_id",
 
 def as_quoted_phrase(query: str) -> str | None:
     """'"quick brown fox"' -> 'quick brown fox'; None for plain queries.
-    The classic quoted-phrase syntax, shared by the CLI prompt and the
-    dashboard /api/search."""
+    The classic quoted-phrase syntax of api.EngineState.search, behind
+    both the CLI prompt and the dashboard /api/search."""
     q = query.strip()
     if len(q) > 2 and q.startswith('"') and q.endswith('"'):
         return q[1:-1]

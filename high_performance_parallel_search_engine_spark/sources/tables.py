@@ -68,10 +68,27 @@ def write_bucketed_pages(df: DataFrame, path: str, n_buckets: int = 64,
                     "sorted_by": "url" if sort_within_buckets else None}))
 
 
-def read_bucketed_pages(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
-    """Returns (pages_df_with_bucket_column, n_buckets)."""
+def read_bucketed_pages(spark: SparkSession, path: str) -> DataFrame:
+    """The pages table write_bucketed_pages wrote, its `bucket` column
+    carrying the table's bucket count B from _bucketing.json as field
+    metadata {"n_buckets": B}: the crawl reads B there (bucket_count), so
+    B has one source and cannot disagree with the files. The alias is what
+    attaches it (spark.read.schema(...) drops field metadata); it survives
+    filters, and partition filters on `bucket` still reach the scan."""
     import json
     from pathlib import Path
 
+    from pyspark.sql import functions as F
+
     meta = json.loads((Path(path) / BUCKETING_META).read_text())
-    return spark.read.parquet(path), int(meta["n_buckets"])
+    return spark.read.parquet(path).withColumn(
+        "bucket", F.col("bucket").alias(
+            "bucket", metadata={"n_buckets": int(meta["n_buckets"])}))
+
+
+def bucket_count(pages: DataFrame) -> int | None:
+    """B of a frame from read_bucketed_pages; None for any other frame,
+    which then counts as unbucketed (no bucket pruning, still correct)."""
+    if "bucket" not in pages.columns:
+        return None
+    return pages.schema["bucket"].metadata.get("n_buckets")

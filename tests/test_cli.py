@@ -255,3 +255,49 @@ def test_cli_phrase_error_paths(spark, tmp_path, capsys):
                  "5", "--workdir", wd, "-q", '"the of a"']) == 0
     out = capsys.readouterr().out
     assert "no indexable terms" in out  # graceful, not a traceback
+
+
+def test_cli_query_tokenizes_the_crawl_once(spark, tmp_path, capsys,
+                                            monkeypatch):
+    """A -q run builds postings and doc stats from one tokenization pass
+    (the serving stack's build_index_tables), not one pass per table."""
+    from high_performance_parallel_search_engine_spark.operators import (
+        index as IX,
+    )
+
+    calls = []
+    doc_tokens = IX.doc_tokens
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return doc_tokens(*a, **kw)
+
+    monkeypatch.setattr(IX, "doc_tokens", counting)
+    rc = main(["-c", "https://host0.example.com/p/0", "-d", "2", "-p", "10",
+               "-q", "crawl", "--workdir", str(tmp_path / "w")])
+    assert rc == 0 and "Query processed in" in capsys.readouterr().out
+    assert len(calls) == 1
+
+
+def test_cli_has_no_serving_stack_of_its_own():
+    """__main__.py prints what api.EngineState returns: the index build,
+    the ranking calls and the url lookups live behind EngineState, which
+    the dashboard serves from too, so the CLI imports none of them."""
+    import ast
+    from pathlib import Path
+
+    import high_performance_parallel_search_engine_spark.__main__ as cli
+
+    pkg = "high_performance_parallel_search_engine_spark."
+    banned = {f"operators.{m}"
+              for m in ("ranking", "index", "local_serve", "phrase")}
+    imported = set()
+    for node in ast.walk(ast.parse(Path(cli.__file__).read_text())):
+        if isinstance(node, ast.ImportFrom):
+            mod = (node.module or "").removeprefix(pkg)
+            imported.add(mod)
+            imported.update(f"{mod}.{a.name}" for a in node.names)
+        elif isinstance(node, ast.Import):
+            imported.update(a.name.removeprefix(pkg) for a in node.names)
+    assert not imported & banned, sorted(imported & banned)
+    assert "api" in imported

@@ -134,10 +134,17 @@ def test_priority_mode_exact_parity(spark, tmp_path, pages_df=None):
     assert got == want
 
 
-def test_bucketed_pages_crawl_parity(spark, tmp_path):
+def test_bucketed_pages_crawl_parity(spark, tmp_path, monkeypatch):
     """A bucket-partitioned pages table (partition-pruned fetch scans) must
-    produce the identical event trace as the plain table."""
+    produce the identical event trace as the plain table. The crawl takes
+    the bucket count from the frame read_bucketed_pages returns, and its
+    small rounds really prune: some round's scan keeps fewer than B
+    bucket files."""
+    from high_performance_parallel_search_engine_spark.operators import (
+        crawl as C,
+    )
     from high_performance_parallel_search_engine_spark.sources.tables import (
+        bucket_count,
         read_bucketed_pages,
         write_bucketed_pages,
     )
@@ -148,15 +155,28 @@ def test_bucketed_pages_crawl_parity(spark, tmp_path):
     plain = _pages_df(spark, rows)
     bpath = str(tmp_path / "bucketed_pages")
     write_bucketed_pages(plain, bpath, n_buckets=16)
-    bucketed, nb = read_bucketed_pages(spark, bpath)
+    bucketed = read_bucketed_pages(spark, bpath)
+    nb = bucket_count(bucketed)
     assert nb == 16 and "bucket" in bucketed.columns
 
+    k_files = []
+    narrow = C._prune_and_pushdown
+
+    def recording(*a):
+        out = narrow(*a)
+        k_files.append(out[2])
+        return out
+
+    monkeypatch.setattr(C, "_prune_and_pushdown", recording)
     w1 = str(tmp_path / "plain")
     w2 = str(tmp_path / "bkt")
     run_crawl(spark, plain, seeds, w1,
               CrawlConfig(max_depth=3, max_pages=10_000))
+    assert k_files and all(k is None for k in k_files)  # unbucketed
+    k_files.clear()
     run_crawl(spark, bucketed, seeds, w2,
-              CrawlConfig(max_depth=3, max_pages=10_000, pages_buckets=16))
+              CrawlConfig(max_depth=3, max_pages=10_000))
+    assert any(k is not None and k < nb for k in k_files), k_files
     ev1 = [(r["seq"], r["url"], r["action"]) for r in
            spark.read.parquet(f"{w1}/round=*/events.parquet")
            .orderBy("seq").collect()]
@@ -169,7 +189,7 @@ def test_bucketed_pages_crawl_parity(spark, tmp_path):
     st = run_crawl(spark, bucketed, seeds, w3,
                    CrawlConfig(max_depth=3, max_pages=1 << 40,
                                failure_stop=1 << 40, arbitration="scale",
-                               trace=False, pages_buckets=16))
+                               trace=False))
     fetched_fast = {r["url"] for r in
                     spark.read.parquet(f"{w3}/round=*/pages.parquet")
                     .select("url").collect()}

@@ -29,7 +29,7 @@ CONFIG = CrawlConfig(
     politeness={"*": 2, "a.example": 5},
     robots=[("a.example", "disallow", "/private")], priority="openmp",
     arbitration="exact", max_rounds=12, trace=True, compact_every=3,
-    pages_buckets=8, url_pushdown_max=128)
+    url_pushdown_max=128)
 STATE = CrawlState(round=4, pages_crawled=31, fail_carry=2, next_seq=90,
                    next_event_seq=77, next_frontier_rows=12)
 
@@ -56,10 +56,12 @@ def test_manifest_config_round_trips_every_field(tmp_path):
 
 
 def test_load_state_drops_config_keys_that_are_not_fields(tmp_path):
-    """Manifests written before `use_bloom` and `default_budget` were
-    removed carry them; any key that is not a field is ignored."""
+    """Manifests written before `use_bloom`, `default_budget` and
+    `pages_buckets` were removed carry them; any key that is not a field
+    is ignored."""
     _commit(tmp_path, STATE, CONFIG,
-            {"use_bloom": True, "default_budget": 4, "not_a_field": [1]})
+            {"use_bloom": True, "default_budget": 4, "pages_buckets": 8,
+             "not_a_field": [1]})
     _, config, _ = load_state(str(tmp_path))
     assert config == CONFIG
 

@@ -139,6 +139,26 @@ def test_manifest_write_killed_midway_resumes(spark, pages, tmp_path,
     assert _events(spark, wd) == _events(spark, full)
 
 
+def test_round_metrics_record_the_arbitration_mode(spark, pages, tmp_path):
+    """Each round's metrics.json (and /api/metrics) names the arbitration
+    mode the round resolved: 'exact' for a default ('auto') crawl of this
+    size, 'scale' when the crawl pins it."""
+    from high_performance_parallel_search_engine_spark.api import (
+        EngineState,
+    )
+
+    for arbitration, want in (("auto", "exact"), ("scale", "scale")):
+        wd = str(tmp_path / arbitration)
+        state = run_crawl(spark, pages, SEEDS, wd, CrawlConfig(
+            max_depth=3, max_pages=30, arbitration=arbitration))
+        assert len(state.metrics) > 1
+        assert [m["arbitration"] for m in state.metrics] == \
+            [want] * len(state.metrics)
+        served = EngineState(spark, wd).metrics()["rounds"]
+        assert [m["arbitration"] for m in served] == \
+            [want] * len(state.metrics)
+
+
 # exact parity shape (tests/test_crawl_parity.py) on this module's corpus
 PARITY = CrawlConfig(arbitration="exact", max_depth=3, max_pages=60)
 

@@ -227,7 +227,6 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
         page_url,
     )
     from high_performance_parallel_search_engine_spark.sources.tables import (
-        read_bucketed_pages,
         write_bucketed_pages,
     )
 
@@ -235,7 +234,6 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
                          with_oracle_text=False)
     write_bucketed_pages(df.select("url", "warc_ts", "html", "lang"),
                          str(tmp_path / "p"), n_buckets=8)
-    pages, _ = read_bucketed_pages(spark, str(tmp_path / "p"))
     # sorted layout is recorded in the bucketing meta
     import json as _json
     meta = _json.loads((tmp_path / "p" / "_bucketing.json").read_text())
@@ -243,10 +241,11 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
 
     fr = spark.createDataFrame([(page_url(0, i),) for i in range(3)],
                                "url string")
-    # pages_buckets=None: the url pushdown alone, no bucket pruning
+    # a plain read carries no bucket count: the url pushdown alone, no
+    # bucket pruning
+    pages = spark.read.parquet(str(tmp_path / "p"))
     small, applied, _ = _prune_and_pushdown(
-        pages, fr, CrawlConfig(pages_buckets=None),
-        CrawlState(next_frontier_rows=3))
+        pages, fr, CrawlConfig(), CrawlState(next_frontier_rows=3))
     assert applied
     plan = small._jdf.queryExecution().executedPlan().toString()
     scan_lines = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
@@ -275,7 +274,7 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
         [(page_url(0, i),) for i in range(n_mid)], "url string")
     # url_pushdown_max=None: the JVM-safe max (the "auto" default resolves
     # to one chunk on this small-file table and would skip a 519-url list)
-    wide = CrawlConfig(pages_buckets=None, url_pushdown_max=None)
+    wide = CrawlConfig(url_pushdown_max=None)
     mid, _, _ = _prune_and_pushdown(pages, fr_mid, wide,
                                     CrawlState(next_frontier_rows=n_mid))
     mid_plan = mid._jdf.queryExecution().executedPlan().toString()
@@ -348,6 +347,7 @@ def test_prune_and_pushdown_regimes(spark, tmp_path):
         page_url,
     )
     from high_performance_parallel_search_engine_spark.sources.tables import (
+        bucket_count,
         read_bucketed_pages,
         write_bucketed_pages,
     )
@@ -356,7 +356,10 @@ def test_prune_and_pushdown_regimes(spark, tmp_path):
                          with_oracle_text=False)
     write_bucketed_pages(df.select("url", "warc_ts", "html", "lang"),
                          str(tmp_path / "p"), n_buckets=8)
-    bucketed, nb = read_bucketed_pages(spark, str(tmp_path / "p"))
+    bucketed = read_bucketed_pages(spark, str(tmp_path / "p"))
+    nb = bucket_count(bucketed)
+    # the same files read plainly: no bucket count, so no pruning
+    flat = spark.read.parquet(str(tmp_path / "p"))
 
     def urls_of(pages):
         return sorted(r["url"] for r in pages.select("url").collect())
@@ -371,45 +374,51 @@ def test_prune_and_pushdown_regimes(spark, tmp_path):
     bucket_urls = sorted(r["url"] for r in rows if r["bucket"] in fr_bks)
     assert len(fr_bks) < nb  # the frontier misses buckets: pruning bites
     cases = [
-        # (config, frontier rows, expected regime: prune, push)
-        (CrawlConfig(pages_buckets=nb), 10, True, True),        # both
-        (CrawlConfig(pages_buckets=nb, url_pushdown_max=4), 10,
+        # (pages, config, frontier rows, expected regime: prune, push)
+        (bucketed, CrawlConfig(), 10, True, True),              # both
+        (bucketed, CrawlConfig(url_pushdown_max=4), 10,
          True, False),          # prune-only: frontier above the pushdown cap
-        (CrawlConfig(pages_buckets=None), 10, False, True),    # push-only
-        (CrawlConfig(pages_buckets=nb), 10_000, False, False),  # neither
+        (flat, CrawlConfig(), 10, False, True),                 # push-only
+        (bucketed, CrawlConfig(), 10_000, False, False),        # neither
         # threshold boundaries (ADVICE r4 #4): the regime flips exactly
         # at the boundary, not only inside/outside it
-        (CrawlConfig(pages_buckets=nb), 4 * nb, True, True),    # n == 4*B
-        (CrawlConfig(pages_buckets=nb), 4 * nb + 1, False, True),
-        (CrawlConfig(pages_buckets=nb, url_pushdown_max=10), 10,
+        (bucketed, CrawlConfig(), 4 * nb, True, True),          # n == 4*B
+        (bucketed, CrawlConfig(), 4 * nb + 1, False, True),
+        (bucketed, CrawlConfig(url_pushdown_max=10), 10,
          True, True),           # n == pushdown cap exactly
     ]
-    for cfg, n, prune, push in cases:
+    for pages, cfg, n, prune, push in cases:
         got, bounded, k_files = _prune_and_pushdown(
-            bucketed, fr, cfg, CrawlState(next_frontier_rows=n))
-        key = (cfg.pages_buckets, cfg.url_pushdown_max, n)
+            pages, fr, cfg, CrawlState(next_frontier_rows=n))
+        key = (bucket_count(pages), cfg.url_pushdown_max, n)
         want = fr_urls if push else bucket_urls if prune else all_urls
         assert urls_of(got) == want, key
         assert bounded == (prune or push), key
         # k_files: the kept bucket count when pruning applied; the full
-        # bucket count for a pushdown-only scan of a table configured as
-        # bucketed; None otherwise (unbounded scan, or pages_buckets=None)
+        # bucket count for a pushdown-only scan of a frame carrying its
+        # bucket count; None otherwise (unbounded scan, or a plain read)
         assert k_files == (len(fr_bks) if prune
-                           else nb if push and cfg.pages_buckets
+                           else nb if push and bucket_count(pages)
                            else None), key
+    # pruning reaches the parquet scan as a partition filter, through the
+    # alias that carries the bucket count on the `bucket` column
+    import re
+    pruned, _, _ = _prune_and_pushdown(
+        bucketed, fr, CrawlConfig(url_pushdown_max=4),
+        CrawlState(next_frontier_rows=10))
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN", plan), plan
     # the both-gates regime actually filters down to the frontier's pages
     # and reports the scan as bounded (the coalesce-gate contract)
     st = CrawlState(next_frontier_rows=10)
     both, bounded, k_files = _prune_and_pushdown(bucketed, fr,
-                                                 CrawlConfig(pages_buckets=nb),
-                                                 st)
+                                                 CrawlConfig(), st)
     assert both.count() == 10 and bounded
     assert k_files is not None and k_files <= nb
     # neither-regime: full scan, NOT bounded -> coalesce must not apply
     st_big = CrawlState(next_frontier_rows=10_000)
     full, bounded, k_files = _prune_and_pushdown(bucketed, fr,
-                                                 CrawlConfig(pages_buckets=nb),
-                                                 st_big)
+                                                 CrawlConfig(), st_big)
     assert full is bucketed and not bounded and k_files is None
 
 
@@ -674,9 +683,9 @@ def test_auto_pushdown_cap_resolution(spark, tmp_path):
                          with_oracle_text=False)
     write_bucketed_pages(df.select("url", "warc_ts", "html", "lang"),
                          str(tmp_path / "p"), n_buckets=8)
-    pages, nb = read_bucketed_pages(spark, str(tmp_path / "p"))
+    pages = read_bucketed_pages(spark, str(tmp_path / "p"))
 
-    cfg = C.CrawlConfig(pages_buckets=nb)  # default url_pushdown_max="auto"
+    cfg = C.CrawlConfig()  # default url_pushdown_max="auto"
     # tiny bucket files -> conservative one-chunk cap
     assert C.resolve_pushdown_max(pages, cfg) == C.URL_PUSHDOWN_CHUNK
     # same corpus judged against a tiny per-bucket threshold -> wide cap
@@ -693,10 +702,9 @@ def test_auto_pushdown_cap_resolution(spark, tmp_path):
         flat, C.CrawlConfig()) == C.URL_PUSHDOWN_CHUNK
     # explicit settings pass through (int and None = JVM-safe max)
     assert C.resolve_pushdown_max(
-        pages, C.CrawlConfig(pages_buckets=nb, url_pushdown_max=7)) == 7
+        pages, C.CrawlConfig(url_pushdown_max=7)) == 7
     assert C.resolve_pushdown_max(
-        pages, C.CrawlConfig(pages_buckets=nb,
-                             url_pushdown_max=None)) is None
+        pages, C.CrawlConfig(url_pushdown_max=None)) is None
     # an unresolved "auto" reaching the scan narrowing (config used outside
     # run_crawl) behaves like the conservative one-chunk cap
     from high_performance_parallel_search_engine_spark.sources.synth import (
@@ -717,7 +725,7 @@ def test_auto_pushdown_cap_resolution(spark, tmp_path):
     C.run_crawl(spark, pages, [page_url(0, 0)], wd,
                 C.CrawlConfig(max_depth=2, max_pages=1 << 40,
                               failure_stop=1 << 40, arbitration="scale",
-                              max_rounds=2, trace=False, pages_buckets=nb))
+                              max_rounds=2, trace=False))
     m = _json.loads(
         (tmp_path / "wd" / "round=00000" / "manifest.json").read_text())
     assert m["config"]["url_pushdown_max"] == C.URL_PUSHDOWN_CHUNK

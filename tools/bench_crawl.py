@@ -47,6 +47,7 @@ def main() -> None:
                               "spark.sql.files.maxPartitionBytes": "33554432"})
 
     from high_performance_parallel_search_engine_spark.sources.tables import (
+        bucket_count,
         read_bucketed_pages,
         write_bucketed_pages as _wbp,
     )
@@ -55,9 +56,9 @@ def main() -> None:
     print(f"[bench_crawl] session up {t_sess - T0:.1f}s", file=sys.stderr)
 
     try:
-        pages, n_buckets = read_bucketed_pages(spark, corpus_path)
+        pages = read_bucketed_pages(spark, corpus_path)
     except FileNotFoundError:
-        pages, n_buckets = spark.read.parquet(corpus_path), None
+        pages = spark.read.parquet(corpus_path)
 
     # warmup: a tiny crawl compiles the round pipeline + spawns workers
     # BEFORE the clock starts, with the SAME bucket count as the timed
@@ -77,7 +78,7 @@ def main() -> None:
     # share one copy at a versioned path instead of each paying the ~5 s
     # bucketed write. Built under a unique temp dir, atomically renamed in;
     # a lost race just falls back to the existing copy.
-    wb = n_buckets or 16
+    wb = bucket_count(pages) or 16
     warm_root = os.path.join(tempfile.gettempdir(),
                              f"warm_corpus_v1_b{wb}")
     if not os.path.isdir(os.path.join(warm_root, "p")):
@@ -94,13 +95,12 @@ def main() -> None:
     print(f"[bench_crawl] warm corpus ready {time.monotonic() - T0:.1f}s",
           file=sys.stderr)
     wwd = tempfile.mkdtemp(prefix="warm_wd_")
-    warm_pages, _ = read_bucketed_pages(spark, warm_root + "/p")
+    warm_pages = read_bucketed_pages(spark, warm_root + "/p")
     warm_seeds = [page_url(h, p) for h in range(2) for p in range(20)]
     run_crawl(spark, warm_pages, warm_seeds, wwd,
               CrawlConfig(max_depth=2, max_pages=1 << 40,
                           failure_stop=1 << 40, arbitration="scale",
-                          max_rounds=2, trace=False,
-                          pages_buckets=wb))
+                          max_rounds=2, trace=False))
     shutil.rmtree(wwd, ignore_errors=True)
     print(f"[bench_crawl] warmup done {time.monotonic() - T0:.1f}s",
           file=sys.stderr)
@@ -115,8 +115,7 @@ def main() -> None:
     workdir = tempfile.mkdtemp(prefix="bench_crawl_")
     cfg = CrawlConfig(max_depth=depth, max_pages=1 << 40,
                       failure_stop=1 << 40, arbitration="scale",
-                      max_rounds=depth + 1, trace=False,
-                      pages_buckets=n_buckets)
+                      max_rounds=depth + 1, trace=False)
     t0 = time.monotonic()
     state = run_crawl(spark, pages, seeds, workdir, cfg)
     wall = time.monotonic() - t0
