@@ -290,7 +290,8 @@ def phase_query_warm(spark) -> dict:
                 local_ix.rank("spark join window stream", top_k=10)
                 ltimes.append((time.monotonic() - t0) * 1000)
             t0 = time.monotonic()
-            local_ix.rank_batch(batch_queries, top_k=10)
+            for q in batch_queries:
+                local_ix.rank(q, top_k=10)
             lbatch = (time.monotonic() - t0) * 1000
             out[label]["local_median_ms"] = round(
                 statistics.median(ltimes), 3)
@@ -494,11 +495,15 @@ def phase_long_crawl(corpus_path: str, priority: bool = False,
     url_seen read fan-in before/after compaction and that the rewind barrier
     refuses a resume past the compaction point.
 
-    With priority=True the SAME crawl runs under the north-rule priority
-    queue (classifier + host in-degree + recency; crawler.c:693-731 family)
-    - identical corpus, seeds, politeness budgets and compaction, so its
-    wall is directly comparable to the FIFO run's (round-3 verdict item 4:
-    the priority insertion policy's cost at scale)."""
+    With priority=True the SAME crawl (identical corpus, seeds, politeness
+    budgets and compaction) runs under the north-rule priority queue
+    (classifier + host in-degree + recency; crawler.c:693-731 family).
+    The policy orders children inside the exact arbitration pass, which
+    needs trace mode, so this run is trace=True with arbitration='exact'
+    while the FIFO run is throughput mode (trace=False, 'scale'). Its
+    wall_vs_fifo therefore prices the priority policy TOGETHER with the
+    trace cost (gate materialization, stop cutoff, event trace and the
+    single-partition exact pass), not the policy alone."""
     import glob as _g
 
     from high_performance_parallel_search_engine_spark.operators.crawl import (
@@ -518,8 +523,9 @@ def phase_long_crawl(corpus_path: str, priority: bool = False,
     seeds = [page_url(h, 0) for h in range(min(8, N_HOSTS))]
     workdir = tempfile.mkdtemp(prefix="bench_long_")
     cfg = CrawlConfig(max_depth=MAX_DEPTH, max_pages=1 << 40,
-                      failure_stop=1 << 40, arbitration="scale",
-                      trace=False, max_rounds=64, priority=priority,
+                      failure_stop=1 << 40,
+                      arbitration="exact" if priority else "scale",
+                      trace=priority, max_rounds=64, priority=priority,
                       politeness={"*": 800},  # budget stretches the rounds
                       compact_every=4)
     t0 = time.monotonic()
@@ -988,7 +994,8 @@ def main() -> None:
     long_crawl, long_ctl = gated(
         "long_crawl", lambda: phase_long_crawl(corpus_path,
                                                spark=spark_long))
-    print("phase 6: priority (north-rule) crawl, same config",
+    print("phase 6: priority (north-rule) crawl, same config in trace "
+          "mode with exact arbitration",
           file=sys.stderr)
     prio_crawl, prio_ctl = gated(
         "crawl_priority", lambda: phase_long_crawl(corpus_path,
@@ -1059,8 +1066,11 @@ def main() -> None:
         "wall_sec": prio_crawl["wall_sec"],
         "urls_per_sec": prio_crawl["urls_per_sec"],
         "rounds": prio_crawl["rounds"],
-        # same corpus/seeds/budgets/compaction as the FIFO long crawl ->
-        # directly comparable walls; target <= 1.3x (r3 verdict item 4)
+        # same corpus/seeds/budgets/compaction as the FIFO long crawl,
+        # but in trace mode with exact arbitration (the only mode that
+        # applies a priority policy): the ratio includes the trace cost,
+        # so the r3 verdict's <= 1.3x target for the policy alone does
+        # not apply to it
         "wall_vs_fifo": round(prio_crawl["wall_sec"]
                               / long_crawl["wall_sec"], 3)
         if long_crawl["wall_sec"] else None,

@@ -55,7 +55,9 @@ def build_parser() -> argparse.ArgumentParser:
     src = ap.add_mutually_exclusive_group()
     src.add_argument("--pages-table", metavar="PARQUET",
                      help="parquet of (url, warc_ts, html, lang) to crawl "
-                          "over; default: deterministic synthetic web")
+                          "over (a write_bucketed_pages table keeps its "
+                          "bucket pruning); default: deterministic "
+                          "synthetic web")
     src.add_argument("--pages-warc", metavar="DIR",
                      help="directory of .warc.gz files (Common Crawl "
                           "layout) to crawl over: records are parsed once "
@@ -250,6 +252,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     from .baseline import load_baseline, save_baseline, speedup_report
     from .operators.crawl import CrawlConfig, run_crawl
     from .sources.synth import build_corpus_df
+    from .sources.tables import read_pages_table
 
     depth, max_pages = _clamped_limits(args)
     if args.medium:
@@ -269,8 +272,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     workdir = args.workdir or tempfile.mkdtemp(prefix="hppse-crawl-")
     resuming = args.resume or args.resume_from is not None
     if args.pages_table:
-        pages = spark.read.parquet(args.pages_table) \
-            .select("url", "warc_ts", "html", "lang")
+        pages = read_pages_table(spark, args.pages_table)
     elif args.pages_warc:
         # parse the archives ONCE into a bucketed parquet table (a crawl
         # scans its pages table every round; re-inflating gzip per round

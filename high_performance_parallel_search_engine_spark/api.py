@@ -207,11 +207,12 @@ class EngineState:
         avg_dl = avg_doc_len(stats, total)
         n_postings = postings.count()  # also materializes the cache
         # (term, df) built once per index. Small vocab: collected to a
-        # driver-side {term: df} and every warm query is ONE Spark job
-        # (rank_bm25 df_map path) - the TABLE is then never queried, so it
-        # is NOT cached (a vocab-sized cache pinned for the index lifetime
-        # would serve nothing). Big vocab: the table is cached and serves
-        # the unbounded df_table path (identical results).
+        # driver-side {term: df}, and a warm query resolves its candidates
+        # in Python and runs 3 Spark jobs (rank_bm25's df_map source) -
+        # the TABLE is then never queried, so it is NOT cached (a
+        # vocab-sized cache pinned for the index lifetime would serve
+        # nothing). Big vocab: the table is cached and is the df_table
+        # source, for unbounded vocabularies (identical results).
         dfs = term_df(postings)
         vocab = dfs.count()
         df_map = term_df_map(dfs, vocab)
@@ -452,8 +453,8 @@ class EngineState:
         try:
             if ix["local"] is not None:
                 t0 = time.perf_counter()
-                per_lists = ix["local"].rank_batch(queries, top_k=limit,
-                                                   fallback=True)
+                per_lists = [ix["local"].rank(q, top_k=limit, fallback=True)
+                             for q in queries]
                 ms = (time.perf_counter() - t0) * 1000
                 return {"status": "ok", "queries": list(queries),
                         "batch_time_ms": round(ms, 2),

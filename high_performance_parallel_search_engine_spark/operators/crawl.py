@@ -108,13 +108,15 @@ class CrawlConfig:
     # (priority + diversity, insert at 0 / n/4 / n/2; crawler.c:693-731).
     # Both order the children inside the exact arbitration pass, so a
     # priority crawl always arbitrates exactly ('auto' resolves to exact,
-    # an explicit 'scale' raises ValueError). Trace mode only.
+    # an explicit 'scale' raises ValueError). Trace mode only: with
+    # trace=False it raises ValueError.
     priority: bool | str = False
     # 'auto' | 'exact' | 'scale': auto = exact greedy below ~5M candidates
     # (event-for-event serial parity), distributed two-window pass above
     # (drops only the revival quirk; see operators/arbitrate.py). Parity
     # suites pin 'exact'; a default FIFO crawl never gets a repartition(1)
-    # stage on a big frontier.
+    # stage on a big frontier. Throughput mode (trace=False) always
+    # arbitrates with 'scale', so it refuses 'exact' (ValueError).
     arbitration: str = "auto"
     max_rounds: int = 64                    # safety rail
     # trace=True (default, exact parity) materializes the round's gate frame
@@ -831,9 +833,14 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
     assert config.trace or (config.max_pages >= 10**9
                             and config.failure_stop >= 10**9), \
         "trace=False requires unbounded stop conditions"
-    if config.trace and config.priority and config.arbitration == "scale":
+    if config.priority and (config.arbitration == "scale"
+                            or not config.trace):
         raise ValueError("priority ordering runs in the exact arbitration "
-                         "pass; use arbitration='exact' or 'auto'")
+                         "pass, which needs trace=True and arbitration="
+                         "'exact' or 'auto'")
+    if not config.trace and config.arbitration == "exact":
+        raise ValueError("the exact arbitration pass needs trace=True; "
+                         "throughput mode arbitrates with 'scale'")
     t0, compiles0 = time.monotonic(), codegen_compiles(spark)
     stage_wall: dict[str, float] = {}
     _last = [t0]

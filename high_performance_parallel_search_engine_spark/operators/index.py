@@ -183,7 +183,8 @@ def term_df(postings: DataFrame) -> DataFrame:
 
 # vocabulary cap for the driver-side {term: df} map: ~2M terms is tens of
 # MB of driver dict; past it the (term, df) TABLE keeps serving unbounded
-# vocabularies (rank_bm25's df_table path, identical results)
+# vocabularies (the df_table source of rank_bm25/rank_bm25_batch,
+# identical results)
 DF_MAP_MAX_VOCAB = 2_000_000
 
 
@@ -193,10 +194,11 @@ def term_df_map(dfs: DataFrame, vocab: int | None = None,
     vocabulary exceeds max_vocab. The ONE definition of the warm-query
     df_map contract shared by api.EngineState (which serves both the
     dashboard and the CLI) and bench.py - candidate resolution and the
-    plural/singular fallback preference then run as dict lookups, so a
-    warm query runs no df aggregate and no vocabulary scan: 3 Spark jobs
-    (rank_bm25's df_map path). Pass the already-known vocab count to skip
-    the extra count job."""
+    plural/singular fallback preference then run as dict lookups
+    (ranking.resolve_terms), so a warm query runs no df aggregate and no
+    vocabulary scan: 3 Spark jobs (the df_map source of rank_bm25 and
+    rank_bm25_batch). Pass the already-known vocab count to skip the
+    extra count job."""
     if vocab is None:
         vocab = dfs.count()
     if vocab > max_vocab:

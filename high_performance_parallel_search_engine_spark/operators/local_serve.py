@@ -3,19 +3,18 @@
 The reference engine's interactive search IS a single-node in-memory
 index walk (Serial Version/src/ranking.c:54-117: the whole inverted
 index lives in the process; a query walks |terms| posting lists and
-sums BM25 parts). The Spark warm path (ranking.rank_bm25's df_map form)
-already compiles a query to 3 jobs (two broadcasts and the scoring
-job), each with a scheduling floor far above the kernel cost of
-scoring a few posting lists. This module is the
-size-gated answer: when the warm index's postings row count is under a
-cap, collect (term, doc_id, tf) + (doc_id, dl) ONCE via Arrow into
-numpy posting lists at index-build time, and serve rank queries
-entirely in-process with semantics identical to rank_bm25 - same
-tokenize/stem/stopword pipeline, duplicate query terms score once per
-occurrence (ranking.c keeps them), the same plural/singular fallback
-preference (primary beats retry), score > 0 filter, and the
-(score desc, doc_id asc) deterministic tie-break. Parity is pytest-
-enforced against the Spark path.
+sums BM25 parts). The Spark warm path (ranking.rank_bm25 with a df_map)
+compiles a query to 3 jobs (two broadcasts and the scoring job), each
+with a scheduling floor far above the kernel cost of scoring a few
+posting lists. This module is the size-gated answer: when the warm
+index's postings row count is under a cap, collect (term, doc_id, tf) +
+(doc_id, dl) ONCE via Arrow into numpy posting lists at index-build
+time, and serve rank queries entirely in-process with rank_bm25's
+semantics - the same query_terms pipeline and the same candidate
+resolution (ranking.resolve_terms: duplicate query terms score once per
+occurrence, primary beats the plural/singular retry), score > 0 filter,
+and the (score desc, doc_id asc) deterministic tie-break. Parity is
+pytest-enforced against the Spark path.
 
 This is the serving-side analog of broadcasting a small join side: the
 DISTRIBUTED path built the index (tokenize/groupBy over the corpus);
@@ -33,7 +32,7 @@ import math
 import numpy as np
 
 from ..kernel.text import BM25_B, BM25_K1, DEFAULT_STOPWORDS
-from .ranking import alt_term, query_terms
+from .ranking import query_terms, resolve_terms
 
 # Collect-to-driver gate: ~20M postings is ~0.6 GB of numpy arrays plus
 # a vocabulary-sized dict - comfortable on any serving node; past it the
@@ -64,31 +63,16 @@ class LocalIndex:
 
     # ---- query path (pure numpy, no Spark) -----------------------------
 
-    def _resolve(self, query: str, fallback: bool, stopwords) -> list:
-        """Candidate posting lists in query-term order. A term absent from
-        the index resolves to its plural/singular alternate when fallback
-        is on (primary beats retry - ranking.c's early break); duplicate
-        query occurrences each contribute (the C keeps them)."""
-        out = []
-        for t in query_terms(query, stopwords):
-            e = self.terms.get(t)
-            if e is None and fallback:
-                a = alt_term(t)
-                if a is not None:
-                    e = self.terms.get(a)
-            if e is not None:
-                out.append(e)
-        return out
-
     def rank(self, query: str, top_k: int = 10, fallback: bool = False,
              stopwords=DEFAULT_STOPWORDS) -> list[tuple[int, float]]:
         """Top-k (doc_id, score), ordered (score desc, doc_id asc) -
         rank_bm25's contract, served without a Spark job."""
-        cands = self._resolve(query, fallback, stopwords)
+        cands = resolve_terms(query_terms(query, stopwords), self.terms,
+                              fallback)
         if not cands:
             return []
         acc = np.zeros(len(self.doc_ids))
-        for idx, tf, df in cands:
+        for _, _, (idx, tf, df) in cands:
             idf = math.log((self.total_docs - df + 0.5) / (df + 0.5) + 1.0)
             dl = self.dl[idx]
             part = idf * (tf * (BM25_K1 + 1.0)) / (
@@ -104,14 +88,6 @@ class LocalIndex:
         order = np.argsort(-acc[pos], kind="stable")[:top_k]
         chosen = pos[order]
         return [(int(self.doc_ids[i]), float(acc[i])) for i in chosen]
-
-    def rank_batch(self, queries: list[str], top_k: int = 10,
-                   fallback: bool = False,
-                   stopwords=DEFAULT_STOPWORDS) -> list[list[tuple]]:
-        """Per-query top-k lists; at local-serve latencies a loop IS the
-        batch plan (no shared scan to amortize)."""
-        return [self.rank(q, top_k=top_k, fallback=fallback,
-                          stopwords=stopwords) for q in queries]
 
     def nbytes(self) -> int:
         """Approximate resident bytes (capacity-planning/status surface)."""

@@ -1,18 +1,16 @@
 """BM25 query ranking (Serial Version/src/ranking.c:27-91).
 
-Plan shape: the tiny query-candidate table broadcasts into the postings join
-(ranking.c's linear index scan R2 becomes a broadcast hash join); doc_stats
-joins on doc_id; the score is one codegen'd column expression; scores ADD
-across query terms via groupBy(doc_id).sum; top-k is TakeOrderedAndProject.
-The MPI gather-top-2k merge (MPI Version/src/ranking.c:110-188) is what
-orderBy().limit() already does distributed.
-
-Scale note (round-1 verdict fix): document frequency is computed ONLY over
-the candidate-term postings - the broadcast(candidates) semi-join narrows the
-scan BEFORE the df aggregate, so the broadcast df table is at most
-2 x |query terms| rows. Aggregating df over the full vocabulary and
-broadcasting it (the round-1 shape) would ship every unique term in a 100 TB
-corpus to every executor.
+rank_bm25 (one query) and rank_bm25_batch (N queries in one plan, the
+evaluate.c:12-18 harness shape) share one path, each part written once:
+resolve_terms (the driver-side primary-beats-retry lookup, also used by
+LocalIndex), _candidates (corpus stats, the candidate-term scan pushdown
+and the df of each candidate from one of three sources) and _scores
+(postings x broadcast(candidates) -> doc_stats join -> one codegen'd
+score column -> per-key sum). rank_bm25 sums per doc_id and ends in
+orderBy().limit(), a TakeOrderedAndProject - what the MPI gather-top-2k
+merge (MPI Version/src/ranking.c:110-188) does, distributed.
+rank_bm25_batch sums per (query_id, doc_id) and keeps top-k with a
+window per query.
 
 k1=1.5, b=0.75, idf=ln((N-df+0.5)/(df+0.5)+1) hard-coded as in
 ranking.c:55-61 (config.ini's k1=1.2 is dead config - code wins).
@@ -139,6 +137,137 @@ def _pushdown_candidate_terms(postings: DataFrame, terms) -> DataFrame:
     return postings
 
 
+def resolve_terms(terms: list[str], lookup, fallback: bool) -> list[tuple]:
+    """Driver-side candidate resolution over a dict keyed by index term
+    ({term: df}, or LocalIndex's {term: posting list}): (qpos, term,
+    value) for each query position whose term - or, with fallback, its
+    plural/singular retry form - the index holds. The primary form wins
+    when present (ranking.c's early break). Duplicate query terms each
+    resolve (ranking.c keeps them). A position that resolves to nothing
+    drops out, as it never joins in the Spark paths."""
+    out = []
+    for i, t in enumerate(terms):
+        v = lookup.get(t)
+        if v is None and fallback:
+            a = alt_term(t)
+            if a is not None:
+                t, v = a, lookup.get(a)
+        if v is not None:
+            out.append((i, t, v))
+    return out
+
+
+def _candidates(postings: DataFrame, doc_stats: DataFrame,
+                queries: list[str], total_docs: int | None,
+                avg_dl: float | None, stopwords, fallback: bool,
+                df_table: DataFrame | None, df_map: dict | None):
+    """What a scoring pass needs for N queries, or None when nothing can
+    score: (postings with the candidate-term pushdown applied, sel =
+    (query_id, qpos, term, df) resolved candidates, n_col, avg_col,
+    stats_df).
+
+    Corpus stats: passed-in total_docs/avg_dl become literals (a warm
+    index costs no aggregation job). Without them the stats ride INSIDE
+    the scoring plan as a 1-row broadcast `stats_df` (crossJoin) instead
+    of a separate collect() job - the former extra driver sync was a
+    fixed ~0.2 s on every cold query. The arithmetic is bit-identical:
+    double(s)/double(n) rounds as Python's s/n does. An empty corpus
+    yields an empty join result.
+
+    df sources, each yielding the same sel (parity-tested):
+    - df_map (without df_table): a driver-side {term: df} dict. The
+      lookup and the fallback preference run in resolve_terms on
+      <= |terms| entries, so sel is an Arrow LocalTableScan of literal
+      rows: no vocab-table scan, no pref window. On a warm index under
+      interactive_query_conf a query is 3 jobs (the candidate-table
+      broadcast, the doc_stats broadcast, the scoring job). Valid while
+      the vocabulary fits driver memory (index.term_df_map's cap).
+    - df_table: a cached (term, df) table joined against the broadcast
+      candidate table inside the scoring plan - a vocab lookup instead
+      of a second postings scan per query; the unbounded-vocab path.
+    - neither (cold): df = count(*) over the candidate-term postings
+      only: the broadcast join narrows the scan BEFORE the aggregate, so
+      the df table has <= |cands| rows - never the full vocabulary,
+      which at 100 TB would ship every unique term to every executor.
+      count(*) equals countDistinct(doc_id) because a postings table is
+      unique per (term, doc_id) by construction (a groupBy(term, doc_id)
+      output), and skips the distinct aggregate's Expand and second
+      exchange.
+    The two table sources carry every candidate with a preference (0 =
+    the term, 1 = its plural/singular retry); with fallback a min-pref
+    window per (query_id, qpos) keeps the best candidate the index holds.
+    Without fallback every candidate is pref 0 and the window is
+    skipped (one less exchange)."""
+    spark = postings.sparkSession
+    stats_df = None
+    if total_docs is None or avg_dl is None:
+        stats_df = doc_stats.agg(F.count("*").alias("_n"),
+                                 F.sum("dl").alias("_s"))
+        n_col = F.col("_n").cast("double")
+        avg_col = F.col("_s").cast("double") / n_col
+    elif total_docs == 0:
+        return None
+    else:
+        n_col = F.lit(float(total_docs))
+        avg_col = F.lit(float(avg_dl))
+    qterms = [(qid, query_terms(q, stopwords)) for qid, q in enumerate(queries)]
+
+    if df_map is not None and df_table is None:
+        rows = [(qid, i, t, d) for qid, terms in qterms
+                for i, t, d in resolve_terms(terms, df_map, fallback)]
+        if not rows:
+            return None
+        sel = local_frame(spark, rows,
+                          "query_id int, qpos int, term string, df long")
+        return (_pushdown_candidate_terms(postings, [r[2] for r in rows]),
+                sel, n_col, avg_col, stats_df)
+
+    cands = [(qid, i, t, 0) for qid, terms in qterms
+             for i, t in enumerate(terms)]
+    if not cands:
+        return None
+    if fallback:
+        cands += [(qid, i, a, 1) for qid, i, t, _ in cands
+                  if (a := alt_term(t)) is not None]
+    cdf = local_frame(spark, cands,
+                      "query_id int, qpos int, term string, pref int")
+    # both the cold df aggregate and the scoring join scan postings: push
+    # the full candidate set (primary and retry forms) into the scan
+    postings = _pushdown_candidate_terms(postings, [c[2] for c in cands])
+    if df_table is not None:
+        df_tbl = df_table.join(F.broadcast(cdf), "term")
+    else:
+        df_tbl = (postings.join(F.broadcast(cdf), "term")
+                  .groupBy("query_id", "qpos", "pref", "term")
+                  .agg(F.count("*").alias("df")))
+    if fallback:
+        wq = Window.partitionBy("query_id", "qpos")
+        df_tbl = (df_tbl.withColumn("_minpref", F.min("pref").over(wq))
+                  .where(F.col("pref") == F.col("_minpref")))
+    sel = df_tbl.select("query_id", "qpos", "term", "df")
+    return postings, sel, n_col, avg_col, stats_df
+
+
+def _scores(keys: list[str], doc_stats: DataFrame, postings: DataFrame,
+            sel: DataFrame, n_col, avg_col,
+            stats_df: DataFrame | None) -> DataFrame:
+    """The one scoring tail over _candidates' output: (*keys, score) for
+    every positive score, summed across query terms (R2: query terms x
+    index, then the doc_stats join). n_col/avg_col are literals on a
+    warm index, references into the broadcast stats_df otherwise."""
+    idf = F.log((n_col - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
+    scored = postings.join(F.broadcast(sel), "term").join(doc_stats, "doc_id")
+    if stats_df is not None:
+        scored = scored.crossJoin(F.broadcast(stats_df))
+    return (scored
+            .withColumn("score_part", bm25_score_col(
+                F.col("tf").cast("double"), F.col("dl").cast("double"),
+                avg_col, idf))
+            .groupBy(*keys)
+            .agg(F.sum("score_part").alias("score"))
+            .where(F.col("score") > 0))
+
+
 def rank_bm25(postings: DataFrame, doc_stats: DataFrame, query: str,
               total_docs: int | None = None, top_k: int = 10,
               stopwords=DEFAULT_STOPWORDS, fallback: bool = False,
@@ -149,162 +278,20 @@ def rank_bm25(postings: DataFrame, doc_stats: DataFrame, query: str,
     (score desc, doc_id asc) - deterministic tie-break (the C qsort is
     unstable; ties are broken by doc_id in both our engine and the oracle).
 
-    total_docs defaults to countDistinct(doc_id) of doc_stats; avg_dl is
-    computed as in ranking.c:39-42 (sum dl / total_docs). Both are
-    index-time corpus stats (the C computes them from the already-loaded
-    in-memory index); pass them in on a warm index so a query costs no
-    extra aggregation jobs.
-
-    df_table: optional precomputed (term, df) table (operators.index.
-    term_df, ideally cached). With it, the per-query document-frequency
-    aggregation over candidate postings disappears: candidate dfs are
-    looked up from the (vocabulary-sized, tiny vs postings) table, the
-    pref/idf selection runs on the <= 2|terms| collected rows, and the
-    whole query becomes one scoring plan - the warm-dashboard path
-    (EngineState/api.py). Results are identical; without it the df
-    aggregation runs inline (the cold / gate-checked path).
-
-    df_map: optional driver-side {term: df} dict (term_df collected once at
-    warm-index build). Candidate resolution - df lookup, fallback
-    preference (primary beats plural/singular retry, ranking.c's early
-    break), idf inputs - all happen in Python on <= 2|terms| entries, so
-    the per-query plan is postings x broadcast(<=|terms| literal rows) ->
-    stats join -> score -> top-k: on a warm index under
-    interactive_query_conf, 3 jobs (the candidate-table broadcast, the
-    doc_stats broadcast, the scoring job). No vocab-table scan, no pref
-    window, and the literal rows are an Arrow LocalTableScan. Valid while
-    the vocabulary fits driver memory (EngineState guards with a
-    vocab-size cap); df_table remains the unbounded-vocab path and both
-    produce identical results (parity-tested)."""
-    spark = postings.sparkSession
-    stats_df = None
-    if total_docs is None or avg_dl is None:
-        # cold path: corpus stats ride INSIDE the scoring plan as a 1-row
-        # broadcast (crossJoin) instead of a separate collect() job - the
-        # former extra driver sync was a fixed ~0.2 s on every cold query.
-        # Arithmetic is bit-identical: N and avg_dl were exact doubles
-        # derived from the same long count/sum, and double(s)/double(n)
-        # rounds identically to Python's s/n. An empty corpus yields an
-        # empty join result - the same empty (doc_id, score) frame the
-        # old early return built.
-        stats_df = doc_stats.agg(F.count("*").alias("_n"),
-                                 F.sum("dl").alias("_s"))
-        n_col = F.col("_n").cast("double")
-        avg_col = F.col("_s").cast("double") / n_col
-    else:
-        if total_docs == 0:
-            return local_frame(spark, [], "doc_id long, score double")
-        n_col = F.lit(float(total_docs))
-        avg_col = F.lit(float(avg_dl))
-
-    terms = query_terms(query, stopwords)
-    if not terms:
-        return local_frame(spark, [], "doc_id long, score double")
-
-    if df_map is not None and df_table is None:
-        # Driver-side candidate resolution: df_map covers exactly the
-        # indexed vocabulary, so "term in df_map" == "term in index" and
-        # the fallback's primary-beats-retry rule is a dict lookup. Terms
-        # absent from the index contribute nothing in every path (they
-        # never join); skipping them here is identical.
-        rows = []
-        for i, t in enumerate(terms):
-            d = df_map.get(t)
-            if d is None and fallback:
-                a = alt_term(t)
-                if a is not None and a in df_map:
-                    t, d = a, df_map[a]
-            if d:
-                rows.append((i, t, d))
-        if not rows:
-            return local_frame(spark, [], "doc_id long, score double")
-        sel = local_frame(spark, rows, "qpos int, term string, df long")
-        postings = _pushdown_candidate_terms(postings,
-                                             [r[1] for r in rows])
-        return _score_candidates(postings, doc_stats, sel, n_col, avg_col,
-                                 top_k, stats_df)
-
-    # Candidate table: (query position, candidate term, preference).
-    # pref 0 = the term itself; pref 1 = the OpenMP plural/singular retry.
-    cands = [(i, t, 0) for i, t in enumerate(terms)]
-    if fallback:
-        for i, t in enumerate(terms):
-            a = alt_term(t)
-            if a is not None:
-                cands.append((i, a, 1))
-    cdf = local_frame(spark, cands, "qpos int, term string, pref int")
-    # both the cold df aggregation and the scoring join scan postings:
-    # push the full candidate set (primary + retry forms) into the scan
-    postings = _pushdown_candidate_terms(postings, [c[1] for c in cands])
-
-    if df_table is not None:
-        # Warm path: candidate dfs come from the cached (term, df) table -
-        # a broadcast lookup over the vocabulary-sized table INSIDE the
-        # scoring plan (no separate df job), replacing the df aggregation
-        # that would otherwise scan the full postings a second time per
-        # query. At 10^9-posting scale this is the difference between a
-        # vocab scan and a postings scan on every dashboard keystroke.
-        df_tbl = (df_table.join(F.broadcast(cdf), "term")
-                  .select("qpos", "pref", "term", "df"))
-    else:
-        # Cold path: df over candidate-term postings only - the broadcast
-        # join prunes the scan, the aggregate output is <= |cands| rows.
-        # Grouping carries qpos so the same index term selected by two
-        # query occurrences scores twice (ranking.c keeps duplicate query
-        # terms). df = count(*), not countDistinct(doc_id): a postings
-        # table is unique per (term, doc_id) by construction (it is a
-        # groupBy(term, doc_id) output), so the values are identical and
-        # the distinct-aggregate Expand + second exchange are skipped.
-        df_tbl = (postings.join(F.broadcast(cdf), "term")
-                  .groupBy("qpos", "pref", "term")
-                  .agg(F.count("*").alias("df")))
-    if fallback:
-        # Per query position keep the best-preference candidate that
-        # exists in the index (primary beats retry, as in the C's
-        # early break).
-        wq = Window.partitionBy("qpos")
-        sel = (df_tbl.withColumn("_minpref", F.min("pref").over(wq))
-               .where(F.col("pref") == F.col("_minpref"))
-               .select("qpos", "term", "df"))
-    else:
-        # all candidates are pref 0: the min-pref window is a no-op -
-        # skip its exchange (one less stage on every warm query)
-        sel = df_tbl.select("qpos", "term", "df")
-
-    return _score_candidates(postings, doc_stats, sel, n_col, avg_col,
-                             top_k, stats_df)
-
-
-def _score_candidates(postings: DataFrame, doc_stats: DataFrame,
-                      sel: DataFrame, n_col, avg_col,
-                      top_k: int, stats_df: DataFrame | None = None) -> DataFrame:
-    """Shared scoring tail: sel = (qpos, term, df) resolved candidates.
-    n_col/avg_col are double Columns (literals on a warm index; references
-    into the 1-row broadcast `stats_df` on the cold path - see rank_bm25's
-    stats_df note)."""
-    idf = F.log((n_col - F.col("df") + 0.5)
-                / (F.col("df") + 0.5) + 1.0)
-    scored = (
-        postings
-        .join(F.broadcast(sel), "term")            # R2: query terms x index
-        .join(doc_stats, "doc_id")
-    )
-    if stats_df is not None:
-        scored = scored.crossJoin(F.broadcast(stats_df))
-    scored = (
-        scored
-        .withColumn("idf", idf)
-        .withColumn("score_part", bm25_score_col(
-            F.col("tf").cast("double"), F.col("dl").cast("double"),
-            avg_col, F.col("idf")))
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.sum("score_part").alias("score"))
-        .where(F.col("score") > 0)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(top_k)
-    )
+    total_docs defaults to count(doc_stats) and avg_dl to sum dl /
+    total_docs (ranking.c:39-42); pass both on a warm index. df_table and
+    df_map are the warm df sources (see _candidates); all three sources
+    give identical results."""
+    c = _candidates(postings, doc_stats, [query], total_docs, avg_dl,
+                    stopwords, fallback, df_table, df_map)
+    if c is None:
+        return local_frame(postings.sparkSession, [],
+                           "doc_id long, score double")
+    # grouped by doc_id alone: query_id is then pruned from the plan, and
+    # the warm df_map plan keeps one aggregate and a TakeOrderedAndProject
+    return (_scores(["doc_id"], doc_stats, *c)
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(top_k))
 
 
 def rank_bm25_batch(postings: DataFrame, doc_stats: DataFrame,
@@ -317,122 +304,22 @@ def rank_bm25_batch(postings: DataFrame, doc_stats: DataFrame,
     """The evaluation harness shape (Serial Version/src/evaluate.c:12-18:
     5 fixed queries, top-5): N queries ranked in ONE plan. Returns
     (query_id, doc_id, score, rk) with rk 1..top_k per query, ordered
-    (score desc, doc_id asc) within each query.
+    (score desc, doc_id asc) within each query - each query's rows are
+    exactly rank_bm25 of that query alone (the dashboard serves both).
 
-    Plan: one candidate table carrying query_id broadcasts into the postings
-    scan once; per-query df rides the same aggregate; per-query top-k is a
-    window over query_id. A thousand queries cost one postings pass, not a
-    thousand - the batch-scoring shape of the reference's GPU variant
-    (Super Hybrid Version/src/cuda_kernels.cu:211-321) on the JVM.
-
-    fallback=True applies the same OpenMP plural/singular retry as
-    rank_bm25 per (query, position) - a batched query must rank exactly
-    like the same query sent alone (the dashboard serves both forms)."""
-    spark = postings.sparkSession
-    empty = local_frame(
-        spark, [], "query_id int, doc_id long, score double, rk int")
-    stats_df = None
-    if total_docs is None or avg_dl is None:
-        # cold path: in-plan 1-row stats broadcast instead of a separate
-        # collect() job (see rank_bm25's stats_df note; bit-identical)
-        stats_df = doc_stats.agg(F.count("*").alias("_n"),
-                                 F.sum("dl").alias("_s"))
-        n_col = F.col("_n").cast("double")
-        avg_col = F.col("_s").cast("double") / n_col
-    else:
-        if total_docs == 0:
-            return empty
-        n_col = F.lit(float(total_docs))
-        avg_col = F.lit(float(avg_dl))
-
-    cands = []
-    for qid, query in enumerate(queries):
-        for i, t in enumerate(query_terms(query, stopwords)):
-            cands.append((qid, i, t))
-    if not cands:
-        return empty
-
-    if df_map is not None and df_table is None:
-        # driver-side df resolution (see rank_bm25.df_map): no df
-        # aggregate - postings x broadcast(literal candidates), 3 jobs.
-        # Fallback is a dict lookup per position, primary beats retry.
-        rows = []
-        for qid, i, t in cands:
-            d = df_map.get(t)
-            if d is None and fallback:
-                a = alt_term(t)
-                if a is not None and a in df_map:
-                    t, d = a, df_map[a]
-            if d:
-                rows.append((qid, i, t, d))
-        if not rows:
-            return empty
-        df_tbl = local_frame(
-            spark, rows, "query_id int, qpos int, term string, df long")
-        postings = _pushdown_candidate_terms(postings,
-                                             [r[2] for r in rows])
-        return _score_candidates_batch(postings, doc_stats, df_tbl,
-                                       n_col, avg_col, top_k, stats_df)
-    # candidate table with preference: pref 0 = the term itself, pref 1 =
-    # the plural/singular retry (mirrors rank_bm25)
-    prefd = [(qid, i, t, 0) for qid, i, t in cands]
-    if fallback:
-        for qid, i, t in cands:
-            a = alt_term(t)
-            if a is not None:
-                prefd.append((qid, i, a, 1))
-    cdf = local_frame(
-        spark, prefd, "query_id int, qpos int, term string, pref int")
-    postings = _pushdown_candidate_terms(postings, [c[2] for c in prefd])
-
-    if df_table is not None:
-        # warm-index batch path: same trade as rank_bm25's df_table - a
-        # vocab-table lookup instead of a second postings scan for df
-        df_tbl = (df_table.join(F.broadcast(cdf), "term")
-                  .select("query_id", "qpos", "term", "df", "pref"))
-    else:
-        # count(*) == countDistinct(doc_id) on a postings table (unique per
-        # (term, doc_id)); see rank_bm25's cold-path note
-        df_tbl = (postings.join(F.broadcast(cdf), "term")
-                  .groupBy("query_id", "qpos", "term", "pref")
-                  .agg(F.count("*").alias("df")))
-    if fallback:
-        # per (query, position) keep the best-preference candidate present
-        # in the index (primary beats retry - the C's early break)
-        wq = Window.partitionBy("query_id", "qpos")
-        df_tbl = (df_tbl.withColumn("_minpref", F.min("pref").over(wq))
-                  .where(F.col("pref") == F.col("_minpref")))
-    df_tbl = df_tbl.select("query_id", "qpos", "term", "df")
-    return _score_candidates_batch(postings, doc_stats, df_tbl, n_col,
-                                   avg_col, top_k, stats_df)
-
-
-def _score_candidates_batch(postings: DataFrame, doc_stats: DataFrame,
-                            df_tbl: DataFrame, n_col, avg_col, top_k: int,
-                            stats_df: DataFrame | None = None) -> DataFrame:
-    """Shared batch scoring tail: df_tbl = (query_id, qpos, term, df).
-    n_col/avg_col/stats_df as in _score_candidates."""
-    idf = F.log((n_col - F.col("df") + 0.5)
-                / (F.col("df") + 0.5) + 1.0)
-    scored = (
-        postings
-        .join(F.broadcast(df_tbl.select("query_id", "qpos", "term", "df")),
-              "term")
-        .join(doc_stats, "doc_id")
-    )
-    if stats_df is not None:
-        scored = scored.crossJoin(F.broadcast(stats_df))
-    scored = (
-        scored
-        .withColumn("score_part", bm25_score_col(
-            F.col("tf").cast("double"), F.col("dl").cast("double"),
-            avg_col, idf))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("score_part").alias("score"))
-        .where(F.col("score") > 0)
-    )
+    One candidate table carrying query_id broadcasts into the postings
+    scan once, and the per-query top-k is a window over query_id: a
+    thousand queries cost one postings pass, not a thousand - the
+    batch-scoring shape of the reference's GPU variant
+    (Super Hybrid Version/src/cuda_kernels.cu:211-321) on the JVM."""
+    c = _candidates(postings, doc_stats, queries, total_docs, avg_dl,
+                    stopwords, fallback, df_table, df_map)
+    if c is None:
+        return local_frame(postings.sparkSession, [],
+                           "query_id int, doc_id long, score double, rk int")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                F.asc("doc_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
+    return (_scores(["query_id", "doc_id"], doc_stats, *c)
+            .withColumn("rk", F.row_number().over(w))
             .where(F.col("rk") <= top_k)
-            .select("query_id", "doc_id", F.col("score"), "rk"))
+            .select("query_id", "doc_id", "score", "rk"))

@@ -67,6 +67,14 @@ def build_session(app: str = "hppse-spark", master: str | None = None,
         # working set ~4x over; a warm op now compiles 0-8. Static: only
         # the conf the JVM starts with counts (spark-submit must pass it).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # keep the whole-stage codegen stage id out of the generated class
+        # name, the one place it reaches the code text the cache is keyed
+        # on. AQE creates a plan's independent query stages concurrently,
+        # so their ids follow a race: rank_bm25_batch without corpus stats
+        # (the stats aggregate and the doc_stats scan are two leaf stages)
+        # swapped ids 1 and 2 in 5 of 180 repeats, and each swap recompiled
+        # 4 otherwise identical classes. Without the id: 0 of 80.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -86,6 +86,19 @@ def read_bucketed_pages(spark: SparkSession, path: str) -> DataFrame:
             "bucket", metadata={"n_buckets": int(meta["n_buckets"])}))
 
 
+def read_pages_table(spark: SparkSession, path: str) -> DataFrame:
+    """A pages table by path, as the crawl reads it: (url, warc_ts, html,
+    lang), plus the `bucket` column read_bucketed_pages gives when the
+    table carries write_bucketed_pages' sidecar, so its fetch scans prune
+    buckets. Any other parquet table reads plain (unbucketed)."""
+    from pathlib import Path
+
+    cols = ["url", "warc_ts", "html", "lang"]
+    if (Path(path) / BUCKETING_META).is_file():
+        return read_bucketed_pages(spark, path).select(*cols, "bucket")
+    return spark.read.parquet(path).select(*cols)
+
+
 def bucket_count(pages: DataFrame) -> int | None:
     """B of a frame from read_bucketed_pages; None for any other frame,
     which then counts as unbucketed (no bucket pruning, still correct)."""

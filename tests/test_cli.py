@@ -183,6 +183,46 @@ def test_cli_pages_warc(spark, tmp_path, capsys):
     assert "Query processed in" in out
 
 
+def test_cli_bucketed_pages_table_prunes(spark, tmp_path, capsys,
+                                         monkeypatch):
+    """--pages-table over a write_bucketed_pages table crawls with bucket
+    pruning: some round's fetch scan keeps fewer than all 8 bucket files
+    (a plain read of the same files drops the bucket count and scans
+    them all)."""
+    import pandas as pd
+
+    from high_performance_parallel_search_engine_spark.operators import (
+        crawl as C,
+    )
+    from high_performance_parallel_search_engine_spark.sources.synth import (
+        corpus_rows,
+    )
+    from high_performance_parallel_search_engine_spark.sources.tables import (
+        write_bucketed_pages,
+    )
+
+    rows = list(corpus_rows(n_hosts=2, pages_per_host=20, n_medium=0,
+                            with_oracle_text=False))
+    path = str(tmp_path / "pages")
+    write_bucketed_pages(spark.createDataFrame(
+        pd.DataFrame(rows)[["url", "warc_ts", "html", "lang"]]), path,
+        n_buckets=8)
+    k_files = []
+    narrow = C._prune_and_pushdown
+
+    def recording(*a):
+        out = narrow(*a)
+        k_files.append(out[2])
+        return out
+
+    monkeypatch.setattr(C, "_prune_and_pushdown", recording)
+    rc = main(["-c", "https://host0.example.com/p/0", "-d", "3", "-p", "15",
+               "--pages-table", path, "--workdir", str(tmp_path / "w")])
+    out = capsys.readouterr().out
+    assert rc == 0 and "Successfully crawled" in out
+    assert any(k is not None and k < 8 for k in k_files), k_files
+
+
 def test_cli_publish_index_then_serve_only(spark, tmp_path, capsys):
     """--publish-index emits a self-contained serving store at crawl time;
     a later --index-store run answers the same query WITHOUT the crawl or

@@ -10,7 +10,9 @@ them. build_session sizes the cache above that:
 - a second identical 2-round exact crawl (robots, a `*` budget,
   compact_every=1) compiles 0 classes, read from its rounds'
   `codegen_compiles` in metrics.json;
-- a repeated warm df_map rank_bm25 query plus rank_bm25_batch compiles 0.
+- a repeated warm df_map rank_bm25 query plus rank_bm25_batch compiles 0;
+- a pipeline that runs again under another whole-stage codegen stage id
+  reuses its class (the id is kept out of the generated code).
 """
 
 import json
@@ -50,6 +52,20 @@ def pages_df(spark):
 
 def test_build_session_sets_codegen_cache_size(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+def test_renumbered_stage_reuses_its_class(spark):
+    # the union's second child is the same pipeline as stage 1 of the
+    # first query, numbered stage 2: with the id in the class name its
+    # code text differs and it compiles again (2 here, one class per
+    # class loader)
+    def pipe():
+        return spark.range(50).selectExpr("id * 3 AS x").where("x % 7 = 1")
+
+    want = pipe().collect()
+    c0 = codegen_compiles(spark)
+    assert pipe().union(pipe()).collect() == want + want
+    assert codegen_compiles(spark) - c0 == 0
 
 
 def test_repeated_exact_crawl_compiles_nothing(spark, pages_df, tmp_path):

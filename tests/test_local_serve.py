@@ -88,13 +88,6 @@ def test_local_rank_matches_rank_bm25(warm, fallback):
             assert gs == pytest.approx(ws, rel=1e-9), q
 
 
-def test_local_rank_batch_matches_singles(warm):
-    batch = warm["local"].rank_batch(QUERIES, top_k=5, fallback=True)
-    singles = [warm["local"].rank(q, top_k=5, fallback=True)
-               for q in QUERIES]
-    assert batch == singles
-
-
 def test_local_rank_respects_top_k_and_positive_filter(warm):
     full = warm["local"].rank("spark join", top_k=10_000)
     assert all(s > 0 for _, s in full)

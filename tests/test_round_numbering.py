@@ -14,7 +14,9 @@ inside the exact arbitration pass.
 - scale arbitration in trace mode numbers its FIFO frontier densely too:
   with a links cap that never binds (so the revival quirk cannot occur)
   it reproduces the serial oracle; a priority policy, which only the
-  exact pass applies, refuses an explicit arbitration='scale'.
+  exact pass applies, refuses an explicit arbitration='scale';
+- throughput mode (trace=False), which always arbitrates with 'scale',
+  refuses a priority policy and arbitration='exact'.
 """
 
 import pandas as pd
@@ -102,6 +104,19 @@ def test_priority_refuses_scale_arbitration(spark, pages_df, tmp_path):
     config = CrawlConfig(arbitration="scale", max_depth=3, max_pages=60,
                          priority=True)
     with pytest.raises(ValueError, match="exact arbitration"):
+        run_crawl(spark, pages_df, [page_url(0, 0)], str(tmp_path / "c"),
+                  config)
+
+
+@pytest.mark.parametrize("kw", [{"priority": True},
+                                {"priority": "openmp"},
+                                {"arbitration": "exact"}])
+def test_throughput_mode_refuses_priority_and_exact(spark, pages_df,
+                                                    tmp_path, kw):
+    # trace=False always arbitrates with 'scale', which applies neither
+    config = CrawlConfig(max_depth=3, max_pages=1 << 40,
+                         failure_stop=1 << 40, trace=False, **kw)
+    with pytest.raises(ValueError, match="trace=True"):
         run_crawl(spark, pages_df, [page_url(0, 0)], str(tmp_path / "c"),
                   config)
 

@@ -36,12 +36,14 @@ def main() -> int:
     from high_performance_parallel_search_engine_spark.session import (
         build_session,
     )
+    from high_performance_parallel_search_engine_spark.sources.tables import (
+        read_pages_table,
+    )
 
     master = f"local[{args.threads}]" if args.threads else None
     spark = build_session("hppse-api", master=master,
                           shuffle_partitions=args.threads)
-    pages = (spark.read.parquet(args.pages_table)
-             .select("url", "warc_ts", "html", "lang")
+    pages = (read_pages_table(spark, args.pages_table)
              if args.pages_table else None)
     srv = make_server(spark, args.workdir, pages, port=args.port,
                       index_store=args.index_store)
